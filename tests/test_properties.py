@@ -461,30 +461,6 @@ class TestQualityOrderStatInvariants:
         assert row["est_inter"] <= max(row["est_a"], row["est_b"]) * (1 + se)
 
 
-class TestBigramPersistFlagEquivalence:
-    """BIGRAM_PERSIST_DB is a pure performance lever (SCALING.md pins
-    its crossover); both paths must produce identical scores on an
-    inflated corpus, where a divergence (e.g. a persist-scope bug
-    changing the explode) would actually show up."""
-
-    @pytest.mark.slow
-    def test_flag_paths_identical_on_inflated_corpus(self, spark):
-        from tests.conftest import SF_SMOKE
-        from uda_spark.cache import release_persisted
-        from uda_spark.queries.text import bigram_logprob_scores
-        from uda_spark.sources.tables import load_table
-
-        base = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
-        reps = spark.range(40).select(F.col("id").alias("rep"))
-        docs = base.crossJoin(reps).select(
-            (F.col("doc_id") * 40 + F.col("rep")).alias("doc_id"), "text"
-        )
-        a = sorted(map(tuple, bigram_logprob_scores(docs, persist_db=False).collect()))
-        b = sorted(map(tuple, bigram_logprob_scores(docs, persist_db=True).collect()))
-        release_persisted()
-        assert a == b and len(a) > 0
-
-
 @SPARK_SETTINGS
 @given(
     edges=st.lists(

@@ -70,45 +70,21 @@ def hash60(expr: str, engine: str) -> str:
     )
 
 
-def minhash_sig(shingles_expr: str, n_hashes: int, engine: str) -> str:
-    """Array of ``n_hashes`` MinHash values (8-hex-char strings).
+def minhash_sig_duck(shingles_expr: str, n_hashes: int) -> str:
+    """DuckDB oracle: array of ``n_hashes`` MinHash values (8-hex-char
+    strings) over a shingle list.
 
     The "permutation" family is chunked salted md5: hash h uses salt
     ``h div 4`` and hex chunk ``h mod 4`` of md5(salt || '|' || shingle),
     so ``n_hashes`` hash functions cost only ``n_hashes / 4`` md5 calls
-    per shingle (md5 dominates the minhash runtime).  The min of hex
-    strings is a bytewise min, identical across engines
-    (CompareFunc.cc:70-73 analog); 32 bits per hash is ample for min-hash.
-    ``n_hashes`` must be a multiple of 4.
-
-    The Spark formulation materializes the per-salt md5 array with an
-    inner ``transform`` and folds the four chunk-mins in ONE
-    ``aggregate`` pass with a finish lambda — putting the chunk loop
-    outside the md5 (the naive nesting) re-evaluates each md5 4×, which
-    measured 4.1× slower at sf0.1.
-
-    NOTE: the production operators (operators/dedup.py) no longer use the
-    Spark branch — HOF lambdas execute interpreted (CodegenFallback), and
-    the explode + hash-aggregate relational formulation measured 2.7×
-    faster.  The Spark branch remains as the single-expression reference
-    implementation; the duck branch is the live oracle.
+    per shingle.  The min of hex strings is a bytewise min, identical
+    across engines (CompareFunc.cc:70-73 analog); 32 bits per hash is
+    ample for min-hash.  ``n_hashes`` must be a multiple of 4.  The Spark
+    side computes the same family in the MinHash Arrow kernel
+    (operators/dedup.py).
     """
     if n_hashes % 4 != 0:
         raise ValueError("n_hashes must be a multiple of 4")
-    if engine == "spark":
-        # 'g' sorts after every hex char, so it is the fold identity.
-        return (
-            f"flatten(transform(sequence(0, {n_hashes // 4 - 1}), salt -> "
-            f"aggregate("
-            f"transform({shingles_expr}, s -> md5(concat(cast(salt AS STRING), '|', s))), "
-            f"named_struct('c0', 'g', 'c1', 'g', 'c2', 'g', 'c3', 'g'), "
-            f"(acc, m) -> named_struct("
-            f"'c0', least(acc.c0, substring(m, 1, 8)), "
-            f"'c1', least(acc.c1, substring(m, 9, 8)), "
-            f"'c2', least(acc.c2, substring(m, 17, 8)), "
-            f"'c3', least(acc.c3, substring(m, 25, 8))), "
-            f"acc -> array(acc.c0, acc.c1, acc.c2, acc.c3))))"
-        )
     return (
         f"flatten(list_transform(range(0, {n_hashes // 4}), salt -> "
         f"list_transform(range(0, 4), c -> "
@@ -120,10 +96,11 @@ def minhash_sig(shingles_expr: str, n_hashes: int, engine: str) -> str:
 SIMHASH_BITS = 60
 
 
-def simhash60(toks: str, engine: str) -> str:
-    """60-bit SimHash from token md5 nibbles (two md5s per token: bits
-    1-32 from md5(t), 33-60 from md5('x' || t)).
+def simhash60_duck_sql(source: str, id_col: str, text_col: str) -> str:
+    """DuckDB oracle fragment: 60-bit SimHash (``id_col``, sig) per row of
+    ``source`` (a table name or a parenthesized subquery).
 
+    Two md5s per token: bits 1-32 from md5(t), 33-60 from md5('x' || t).
     Bit i of token t votes +1 if its hex char >= '8' (high bit of the
     nibble), else -1; signature bit i is 1 iff the vote sum >= 0.
     Integer-only, order-independent — safe under any partitioning.
@@ -131,34 +108,9 @@ def simhash60(toks: str, engine: str) -> str:
     32-bit signatures proved too coarse on natural-ish text: frequent
     tokens dominate the votes and unrelated documents collide, which
     both degrades near-dup precision and blows up the LSH band join.
-
-    NOTE: operators/dedup.py:simhash_signatures now computes the same
-    signature relationally (explode + codegen'd conv/shift + hash
-    aggregate) — 2.7× faster than this interpreted-HOF expression; this
-    branch remains as the single-expression reference implementation.
+    The Spark side is the SimHash Arrow kernel
+    (operators/dedup.py:simhash_signatures).
     """
-    if engine == "spark":
-        # md5 twice per token (transform first), not once per (token, bit).
-        # (An integer-shift variant via conv(hex, 16, 10) benchmarked
-        # *slower* on cold runs — larger codegen — and was reverted.)
-        votes = (
-            f"aggregate(transform({toks}, t -> concat(md5(t), md5(concat('x', t)))), "
-            f"transform(sequence(1, {SIMHASH_BITS}), x -> 0L), "
-            f"(acc, m) -> zip_with(acc, transform(sequence(1, {SIMHASH_BITS}), "
-            f"i -> IF(substr(m, i, 1) >= '8', 1L, -1L)), (a, b) -> a + b))"
-        )
-        return (
-            f"aggregate(zip_with({votes}, sequence(1, {SIMHASH_BITS}), "
-            f"(v, i) -> IF(v >= 0, shiftleft(1L, {SIMHASH_BITS} - i), 0L)), 0L, (a, b) -> a + b)"
-        )
-    # DuckDB relational formulation is easier via unnest; callers embed this
-    # per-token bit expression in a GROUP BY i query instead.
-    raise NotImplementedError("use simhash60_duck_sql for the oracle side")
-
-
-def simhash60_duck_sql(source: str, id_col: str, text_col: str) -> str:
-    """DuckDB oracle fragment: (``id_col``, sig) per row of ``source``
-    (a table name or a parenthesized subquery)."""
     toks = tokens(text_col, "duck")
     return f"""
 WITH tok AS (

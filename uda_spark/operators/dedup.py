@@ -3,21 +3,34 @@
 Scale design (100 TB corpus):
   * exact dedup — hash-groupBy on a digest of the content, never on the
     content itself: the shuffle moves 32-byte keys + doc ids, not bodies.
-  * MinHash/LSH near-dup — per-doc signatures are computed map-side with
-    higher-order functions (no Python, no shuffle); only (band, band-hash,
+  * MinHash/LSH near-dup — per-doc signatures are computed map-side by
+    one Arrow kernel per batch (no shuffle); only (band, band-hash,
     doc_id) triples shuffle for the band join, and candidate verification
     re-joins the (small) candidate set back to the shingle arrays.
-  * SimHash — one 64/32-bit integer per doc; near-dup = small Hamming
-    distance, bucketed by signature prefix for the scale path.
+  * SimHash — one 60-bit integer per doc from the same kind of kernel;
+    near-dup = small Hamming distance, bucketed by signature prefix for
+    the scale path.
 
-Everything is deterministic and engine-portable (functions/portable.py),
-so each operator has a DuckDB oracle in uda_spark/queries/dedup.py.
+Every per-document tokenize/shingle/signature step runs in an Arrow
+kernel (:func:`text_kernel`) over one Python tokenizer
+(:func:`_doc_grams`), the parity-tested twin of ``portable.tokens`` and
+``portable.shingles``.  Everything is deterministic and engine-portable
+(functions/portable.py), so each operator has a DuckDB oracle in
+uda_spark/queries/dedup.py.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from uda_spark.operators.sort import snapshot as _snapshot
 from uda_spark.operators.sort import snapshot_lazy as _snapshot_lazy
@@ -45,122 +58,84 @@ def with_shingles(df: DataFrame, text_col: str, k: int = 3) -> DataFrame:
     return df.withColumn("shingles", F.expr(portable.shingles(toks, k, "spark")))
 
 
-# Arrow tokenize/shingle/signature kernels (guide §4.2) — the default.
-# False falls back to the relational (HOF + explode + aggregate)
-# formulation; the A/B harness and the parity tests flip this to prove
-# both paths produce identical values.
-USE_ARROW_TEXT_KERNELS = True
+def _doc_grams(k: int):
+    """Tokenize one document into its k-token grams, in order and with
+    repeats — the Python twin of ``portable.tokens`` +
+    ``portable.shingles`` (``k=1`` yields the tokens themselves).  Every
+    Arrow text kernel tokenizes through this one factory.
 
-# When the map-only Arrow kernel feeds a persisted signature relation
-# whose sset arrays are then joined twice (candidate verification), one
-# explicit doc repartition before the persist replaces two downstream
-# sset exchanges (the relational path gets that layout for free from
-# its final aggregate).  Value-identical either way; flag exists for
-# in-session A/B.
-REPARTITION_KERNEL_SIGNATURES = True
-
-
-def _arrow_text_kernel_ok(df: DataFrame, text_col: str, id_col: str) -> bool:
-    """The Arrow tokenize kernels hard-code (long id, string text) Arrow
-    output schemas; any other input types take the type-generic relational
-    path so results (values AND schema) are identical either way."""
-    from pyspark.sql.types import LongType, StringType
-
-    try:
-        return isinstance(df.schema[id_col].dataType, LongType) and isinstance(
-            df.schema[text_col].dataType, StringType
-        )
-    except (KeyError, TypeError):
-        return False
-
-
-def _doc_shingler(k: int):
-    """Tokenize+shingle one document — the Python twin of
-    ``portable.tokens`` + ``portable.shingles``.
-
-    Parity contract (tests/test_operators.py::test_arrow_shingle_parity):
-    ``str.lower()`` must equal Spark's ``lower()`` and DuckDB's
-    ``lower()`` over the corpus alphabet, and ``str.split(' ')`` equals
-    Spark's ``split(_, ' ')`` (both keep empty strings, including
-    leading/trailing).  Nested function on purpose: cloudpickle
+    Parity contract (tests/test_operators.py::TestArrowTextKernels::
+    test_tokenizer_parity): ``str.lower()`` equals Spark's ``lower()``
+    and ``str.split(' ')`` equals Spark's ``split(_, ' ')`` (both keep
+    empty strings, including leading/trailing); md5 over UTF-8 bytes
+    equals Spark's ``md5``.  Nested function on purpose: cloudpickle
     serializes it BY VALUE so Python workers never need ``uda_spark``
     importable (zero-install contract, same as the GEMM kernels in
     operators/similarity.py).
     """
 
-    def shingle_set(text: str):
+    def grams(text: str) -> list[str]:
         toks = text.lower().split(" ")
         n = len(toks)
         if n >= k:
-            return {" ".join(toks[i : i + k]) for i in range(n - k + 1)}
-        return {" ".join(toks)}
+            return [" ".join(toks[i : i + k]) for i in range(n - k + 1)]
+        return [" ".join(toks)]
 
-    return shingle_set
+    return grams
 
 
-def shingle_rows_arrow(
-    df: DataFrame, text_col: str, id_col: str, k: int = 3
+def text_kernel(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    gen,
+    fields: list[tuple[str, DataType]],
 ) -> DataFrame:
-    """(doc, s): one row per DISTINCT per-doc shingle — the Arrow-kernel
-    replacement for ``with_shingles`` + ``explode(array_distinct(...))``.
+    """Run a per-document Arrow kernel: ``gen`` maps batches of
+    (doc, _text) to batches of (doc, *fields).
 
-    The shingle HOF (``transform(sequence(...), i -> array_join(slice(...``
-    executes interpreted (CodegenFallback) per document; guide §4.2 moves
-    that per-row work into one ``mapInArrow`` pass.  NULL texts raise —
-    callers filter them first (the signature NULL contract lives there).
-    Distinct-per-doc order: sorted (vs the explode path's array order),
-    invisible downstream — every consumer treats (doc, s) as a set.
+    The id column passes through at its own type: a kernel emits the
+    input id array (or a ``take`` of it) as its first column, and the
+    output schema takes that column's type from ``df.schema[id_col]``.
+    The text column must be a string — anything else raises TypeError
+    here rather than inside a Python worker.
     """
-    shingle_set = _doc_shingler(k)
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            out_ids: list[int] = []
-            out_s: list[str] = []
-            for i, txt in zip(ids, texts):
-                if txt is None:
-                    raise ValueError(
-                        "shingle kernel received NULL text — filter upstream"
-                    )
-                ss = sorted(shingle_set(txt))
-                out_ids.extend([i] * len(ss))
-                out_s.extend(ss)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_ids, pa.int64()), pa.array(out_s, pa.string())],
-                names=["doc", "s"],
-            )
-
+    text_type = df.schema[text_col].dataType
+    if not isinstance(text_type, StringType):
+        raise TypeError(
+            f"text kernel needs a string text column: {text_col!r} is "
+            f"{text_type.simpleString()}"
+        )
+    schema = StructType(
+        [StructField("doc", df.schema[id_col].dataType)]
+        + [StructField(name, dtype) for name, dtype in fields]
+    )
     return df.select(
         F.col(id_col).alias("doc"), F.col(text_col).alias("_text")
-    ).mapInArrow(gen, "doc long, s string")
+    ).mapInArrow(gen, schema)
 
 
 def gram_hash_rows_arrow(
     df: DataFrame, text_col: str, id_col: str, k: int, counts: bool = False
 ) -> DataFrame:
     """(doc, gh[, c]): 60-bit portable gram hashes per document, computed
-    in one map-only Arrow pass — the kernel replacement for
-    ``explode(shingles) -> hash60 projection -> per-doc distinct/count``.
+    in one map-only Arrow pass (no explode, no per-doc exchange).
 
     A document's grams live entirely in its own row, so BOTH the per-doc
     distinct (``counts=False``; the decontaminate shape) and the per-doc
     occurrence count (``counts=True``; the dup-coverage shape) need no
-    exchange at all.  Value parity with the relational formulation:
+    exchange at all.  Value parity with the oracle's
+    ``unnest(shingles) -> hash60`` relation:
 
-    - ``int(md5(g).hexdigest()[:15], 16)`` == Spark's
-      ``conv(substring(md5(g),1,15),16,10)`` (same big-endian fold of
-      the first 15 hex chars — see portable.hash60).
-    - tokenize/shingle is the parity-tested ``_doc_shingler`` contract
-      (``str.lower()``/``split(' ')`` == JVM ``lower()``/``split``).
-    - NULL text mirrors the explode path exactly: shingles(NULL) is
-      ``[NULL]``, md5(NULL) is NULL — one (doc, NULL gh[, c=1]) row.
-    - collisions of two distinct grams within one doc merge into one gh
-      in both paths (the relational path groups/distincts on gh too).
+    - ``int(md5(g).hexdigest()[:15], 16)`` == ``portable.hash60(g)``
+      (same big-endian fold of the first 15 hex chars).
+    - tokenize/shingle is the parity-tested :func:`_doc_grams` contract.
+    - NULL text mirrors an explode exactly: shingles(NULL) is ``[NULL]``,
+      md5(NULL) is NULL — one (doc, NULL gh[, c=1]) row.
+    - collisions of two distinct grams within one doc merge into one gh,
+      as grouping on gh does.
     """
+    doc_grams = _doc_grams(k)
 
     def gen(batches):
         from collections import Counter
@@ -169,52 +144,36 @@ def gram_hash_rows_arrow(
         import pyarrow as pa
 
         for batch in batches:
-            ids = batch.column(0).to_pylist()
             texts = batch.column(1).to_pylist()
             out_i: list[int] = []
             out_g: list = []
             out_c: list[int] = []
-            for i, txt in zip(ids, texts):
+            for i, txt in enumerate(texts):
                 if txt is None:
                     out_i.append(i)
                     out_g.append(None)
                     out_c.append(1)
                     continue
-                toks = txt.lower().split(" ")
-                n = len(toks)
-                if n >= k:
-                    grams = [" ".join(toks[j : j + k]) for j in range(n - k + 1)]
-                else:
-                    grams = [" ".join(toks)]
-                if counts:
-                    cc = Counter(
-                        int(md5(g.encode("utf-8")).hexdigest()[:15], 16)
-                        for g in grams
-                    )
-                    for gh in sorted(cc):
-                        out_i.append(i)
-                        out_g.append(gh)
-                        out_c.append(cc[gh])
-                else:
-                    ghs = sorted(
-                        {
-                            int(md5(g.encode("utf-8")).hexdigest()[:15], 16)
-                            for g in grams
-                        }
-                    )
-                    out_i.extend([i] * len(ghs))
-                    out_g.extend(ghs)
-            arrays = [pa.array(out_i, pa.int64()), pa.array(out_g, pa.int64())]
+                cc = Counter(
+                    int(md5(g.encode("utf-8")).hexdigest()[:15], 16)
+                    for g in doc_grams(txt)
+                )
+                ghs = sorted(cc)
+                out_i.extend([i] * len(ghs))
+                out_g.extend(ghs)
+                out_c.extend(cc[gh] for gh in ghs)
+            arrays = [
+                batch.column(0).take(pa.array(out_i, pa.int64())),
+                pa.array(out_g, pa.int64()),
+            ]
             names = ["doc", "gh"]
             if counts:
                 arrays.append(pa.array(out_c, pa.int64()))
                 names.append("c")
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    schema = "doc long, gh long" + (", c long" if counts else "")
-    return df.select(
-        F.col(id_col).alias("doc"), F.col(text_col).alias("_text")
-    ).mapInArrow(gen, schema)
+    fields = [("gh", LongType())] + ([("c", LongType())] if counts else [])
+    return text_kernel(df, text_col, id_col, gen, fields)
 
 
 def _minhash_grouped_arrow(
@@ -225,13 +184,14 @@ def _minhash_grouped_arrow(
     projection rows, no hash-aggregate exchange (every doc's shingles
     live in its own row, so the per-doc MIN needs no shuffle at all).
 
-    Value-identical to the relational ``_minhash_grouped``: same salted
-    md5 family (md5(f"{salt}|{shingle}") over UTF-8 bytes, hex chunks of
-    8), same bytewise min (ASCII hex, so Python ``min`` == UTF8String
-    binary min), ``sset`` sorted instead of ``collect_set`` order (every
-    consumer is order-insensitive: sizes and ``array_intersect`` only).
+    Same salted md5 family as the ``shingle_rows`` aggregate in
+    :func:`_minhash_grouped` and the oracle's ``minhash_sig_duck``
+    (md5(f"{salt}|{shingle}") over UTF-8 bytes, hex chunks of 8), same
+    bytewise min (ASCII hex, so Python ``min`` == UTF8String binary
+    min); ``sset`` is sorted (every consumer is order-insensitive: sizes
+    and ``array_intersect`` only).
     """
-    shingle_set = _doc_shingler(k)
+    doc_grams = _doc_grams(k)
     n_salts = n_hashes // 4
 
     def gen(batches):
@@ -240,7 +200,6 @@ def _minhash_grouped_arrow(
         import pyarrow as pa
 
         for batch in batches:
-            ids = batch.column(0).to_pylist()
             texts = batch.column(1).to_pylist()
             hcols: list[list[str]] = [[] for _ in range(4 * n_salts)]
             ssets: list[list[str]] = []
@@ -249,7 +208,7 @@ def _minhash_grouped_arrow(
                     raise ValueError(
                         "minhash kernel received NULL text — filter upstream"
                     )
-                sl = sorted(shingle_set(txt))
+                sl = sorted(set(doc_grams(txt)))
                 ssets.append(sl)
                 raw = [s.encode("utf-8") for s in sl]
                 h = 0
@@ -259,7 +218,7 @@ def _minhash_grouped_arrow(
                     for c in range(0, 32, 8):
                         hcols[h].append(min(d[c : c + 8] for d in digs))
                         h += 1
-            arrays = [pa.array(ids, pa.int64())]
+            arrays = [batch.column(0)]
             names = ["doc"]
             for i, col in enumerate(hcols):
                 arrays.append(pa.array(col, pa.string()))
@@ -268,14 +227,9 @@ def _minhash_grouped_arrow(
             names.append("sset")
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    schema = (
-        "doc long, "
-        + ", ".join(f"h{i} string" for i in range(n_hashes))
-        + ", sset array<string>"
-    )
-    return df.select(
-        F.col(id_col).alias("doc"), F.col(text_col).alias("_text")
-    ).mapInArrow(gen, schema)
+    fields = [(f"h{i}", StringType()) for i in range(n_hashes)]
+    fields.append(("sset", ArrayType(StringType())))
+    return text_kernel(df, text_col, id_col, gen, fields)
 
 
 def _minhash_grouped(
@@ -287,41 +241,26 @@ def _minhash_grouped(
     shingle_rows: DataFrame | None = None,
 ) -> DataFrame:
     """(doc, h0..h{n-1}, sset): per-doc MinHash values as COLUMNS plus the
-    distinct shingle set — the whole-stage-codegen formulation.
+    distinct shingle set, computed by the Arrow kernel
+    :func:`_minhash_grouped_arrow`.
 
-    Shingles explode to rows; each row computes ``n_hashes/4`` md5s as
-    plain (codegen'd) expressions; a single hash aggregate takes
-    ``n_hashes`` string MINs.  This replaces the higher-order-function
-    formulation (aggregate/transform lambdas), which Spark executes in
-    interpreted mode (CodegenFallback) — measured 2.7x slower at sf0.1.
-    MinHash over distinct shingles equals MinHash over all shingles (min
-    ignores duplicates), so the explode dedups first and ``collect_set``
-    doubles as the verification shingle set.
+    ``shingle_rows`` (columns: doc, s — one row per distinct per-doc
+    shingle, built with the same tokenizer/k) lets a caller that also
+    feeds another shingle consumer (e.g. the exact ssjoin in
+    dedup_lsh_recall_eval) pay the corpus shingle pass ONCE; the same
+    hash family then runs as an md5 projection plus one hash aggregate,
+    and persist responsibility stays with that caller.
 
     NULL contract: documents whose text is NULL have no MinHash — they
-    produce NO output row (filtered explicitly here, not dropped as an
-    explode side-effect) and can never appear as near-dup candidates.
+    produce NO output row and can never appear as near-dup candidates.
     Empty and short texts DO sign: the tokenizer keeps empty strings and
     sub-k-token docs yield one whole-doc shingle (portable.shingles), so
     e.g. all empty documents are mutual near-duplicates — the curation-
     friendly reading.
     """
-    # Repartition BEFORE shingle construction: the input is a handful of
-    # scan splits locally, and the shingle HOF (interpreted lambdas) is
-    # the most expensive per-row step — it must run on all cores.
-    # ``shingle_rows`` (columns: doc, s — one row per distinct per-doc
-    # shingle, built with the same tokenizer/k) lets a caller that also
-    # feeds another shingle consumer (e.g. the exact ssjoin in
-    # dedup_lsh_recall_eval) pay the corpus shingle pass ONCE; persist
-    # responsibility stays with that caller.
-    if shingle_rows is not None:
-        ex = shingle_rows.select("doc", "s")
-    elif USE_ARROW_TEXT_KERNELS and _arrow_text_kernel_ok(df, text_col, id_col):
-        # Map-only Arrow kernel (guide §4.2): per-doc shingle set, salted
-        # md5 family and 4·n_salts chunk-MINs all inside one mapInArrow
-        # pass — the shingle HOF, the explode, the md5 projection AND the
-        # hash-aggregate exchange disappear.  Value-identical (see
-        # _minhash_grouped_arrow docstring + parity tests).
+    if shingle_rows is None:
+        # spread the per-doc kernel over all cores: the local corpus scan
+        # is a handful of splits
         return _minhash_grouped_arrow(
             PART.ensure_min_partitions(df.where(F.col(text_col).isNotNull())),
             text_col,
@@ -329,17 +268,7 @@ def _minhash_grouped(
             n_hashes,
             k,
         )
-    else:
-        sh = with_shingles(
-            PART.ensure_min_partitions(df.where(F.col(text_col).isNotNull())),
-            text_col,
-            k,
-        )
-        ex = sh.select(
-            F.col(id_col).alias("doc"),
-            F.explode(F.array_distinct("shingles")).alias("s"),
-        )
-    with_md5 = ex.select(
+    with_md5 = shingle_rows.select(
         "doc",
         "s",
         *[
@@ -437,20 +366,15 @@ def minhash_near_dup_pairs(
     # (md5-heavy) shingle/signature subtree is recomputed three times.
     # Long-lived callers release via uda_spark.cache.release_persisted().
     g = _minhash_grouped(df, text_col, id_col, n_hashes, k, shingle_rows)
-    if (
-        shingle_rows is None
-        and REPARTITION_KERNEL_SIGNATURES
-        and USE_ARROW_TEXT_KERNELS
-        and _arrow_text_kernel_ok(df, text_col, id_col)
-    ):
-        # The Arrow kernel path is map-only, so the persisted relation
-        # carries the scan partitioning; both verify joins below would
-        # then each exchange the sset projection (the heavy shingle
-        # arrays) by doc.  One explicit doc repartition BEFORE the
-        # persist moves the arrays once and is reused by both joins
-        # (the relational path gets this layout for free from its final
-        # hash aggregate).  Interleaved 3-way A/B at sf0.1/32c, med of
-        # 6: kernel 1.46 / kernel+repart 1.31 / relational 1.33.
+    if shingle_rows is None:
+        # The Arrow kernel is map-only, so the persisted relation would
+        # carry the scan partitioning and both verify joins below would
+        # each exchange the sset projection (the heavy shingle arrays)
+        # by doc.  One explicit doc repartition BEFORE the persist moves
+        # the arrays once and is reused by both joins (the shingle_rows
+        # aggregate already ends partitioned by doc).  Interleaved 3-way
+        # A/B at sf0.1/32c, med of 6: kernel 1.46 / kernel+repart 1.31 /
+        # relational 1.33.
         g = g.repartition(F.col("doc"))
     sh = cache.tracked_persist(g)
     banded = _banded(sh, n_hashes, bands)
@@ -520,18 +444,13 @@ def incremental_dedup(
     )
 
     def _grouped_for_join(side: DataFrame) -> DataFrame:
-        g = _minhash_grouped(side, text_col, id_col, n_hashes, k)
-        if (
-            REPARTITION_KERNEL_SIGNATURES
-            and USE_ARROW_TEXT_KERNELS
-            and _arrow_text_kernel_ok(side, text_col, id_col)
-        ):
-            # same layout reasoning as minhash_near_dup_pairs: the
-            # map-only kernel output repartitions by doc once so the
-            # verify joins (on the renamed doc) reuse the persisted
-            # partitioning instead of exchanging the sset arrays.
-            g = g.repartition(F.col("doc"))
-        return g
+        # same layout reasoning as minhash_near_dup_pairs: the map-only
+        # kernel output repartitions by doc once so the verify joins (on
+        # the renamed doc) reuse the persisted partitioning instead of
+        # exchanging the sset arrays.
+        return _minhash_grouped(side, text_col, id_col, n_hashes, k).repartition(
+            F.col("doc")
+        )
 
     ng = cache.tracked_persist(_grouped_for_join(new_df))
     bg = cache.tracked_persist(_grouped_for_join(base_df))
@@ -579,72 +498,25 @@ def incremental_dedup(
 
 
 def simhash_signatures(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, sig) 60-bit SimHash per document.
+    """(id, sig) 60-bit SimHash per document, computed map-only in one
+    Arrow pass (a doc's tokens live in its own row, so the vote sums
+    need no shuffle).
 
-    Relational formulation for whole-stage codegen: tokens explode to
-    rows; each row packs its 60 vote bits into four 15-nibble integers
-    (conv of md5 hex — all codegen'd); one hash aggregate takes 60 bit
-    SUMs plus the token count; the final projection packs the majority
-    votes back into the signature.  Bit-identical to the higher-order
-    ``portable.simhash60`` expression (vote i = high bit of hex char i of
-    md5(t) || md5('x' || t)) but 2.7x faster at sf0.1 — HOF lambdas run
-    interpreted (CodegenFallback), 120 per token, vs zero here.
+    Vote i of token t is the high bit of hex char i of
+    md5(t) || md5('x' || t) (``c >= '8'`` over the hexdigest); signature
+    bit i is set iff 2·ones_i − n_tokens >= 0, packed at 2^(60−i) — the
+    definition the oracle's ``portable.simhash60_duck_sql`` spells in SQL.
+    Exact integer arithmetic throughout; duplicate tokens vote once per
+    OCCURRENCE (Counter-weighted).  Per-batch digest memoization is a
+    pure cache — votes depend only on the token bytes.
 
     NULL contract: documents whose text is NULL have no SimHash — they
-    produce NO output row (filtered explicitly here, not dropped as an
-    explode side-effect) and can never appear as near-dup candidates.
+    produce NO output row and can never appear as near-dup candidates.
     Empty text DOES sign (it tokenizes to one empty token — the
     tokenizer keeps empty strings), matching the MinHash contract.
     """
-    if USE_ARROW_TEXT_KERNELS and _arrow_text_kernel_ok(df, text_col, id_col):
-        return _simhash_signatures_arrow(
-            PART.ensure_min_partitions(df.where(F.col(text_col).isNotNull())),
-            text_col,
-            id_col,
-        )
-    toks = portable.tokens(text_col, "spark")
-    tok = PART.ensure_min_partitions(df.where(F.col(text_col).isNotNull())).select(
-        F.col(id_col), F.explode(F.expr(toks)).alias("t")
-    )
-    m = "concat(md5(t), md5(concat('x', t)))"
-    bits = tok.select(
-        F.col(id_col),
-        *[
-            F.expr(
-                f"CAST(conv(substring({m}, {15 * g + 1}, 15), 16, 10) AS BIGINT)"
-            ).alias(f"b{g}")
-            for g in range(4)
-        ],
-    )
-    ones = []
-    for i in range(1, portable.SIMHASH_BITS + 1):
-        g, o = (i - 1) // 15, (i - 1) % 15
-        ones.append(
-            F.sum(F.expr(f"shiftright(b{g}, {4 * (14 - o) + 3}) & 1")).alias(f"o{i}")
-        )
-    grouped = bits.groupBy(id_col).agg(F.count("*").alias("n"), *ones)
-    sig = " + ".join(
-        f"IF(2 * o{i} - n >= 0, {1 << (portable.SIMHASH_BITS - i)}L, 0L)"
-        for i in range(1, portable.SIMHASH_BITS + 1)
-    )
-    return grouped.select(F.col(id_col), F.expr(sig).alias("sig"))
-
-
-def _simhash_signatures_arrow(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Map-only SimHash: (id, sig) computed per document inside one
-    ``mapInArrow`` pass — the token explode, the two md5 projections and
-    the 60-bit-SUM hash aggregate all collapse into the kernel (a doc's
-    tokens live in its own row, so the vote sums need no shuffle).
-
-    Value-identical to the relational formulation: vote i of token t is
-    the high bit of hex char i of md5(t) || md5('x' || t) (here
-    ``c >= '8'`` over the hexdigest — same definition), signature bit i
-    is set iff 2·ones_i − n_tokens >= 0, packed at 2^(60−i).  Exact
-    integer arithmetic throughout; duplicate tokens vote once per
-    OCCURRENCE (Counter-weighted), matching the explode semantics.
-    Per-batch digest memoization is a pure cache — votes depend only on
-    the token bytes.
-    """
+    tokenize = _doc_grams(1)
+    bits = portable.SIMHASH_BITS
 
     def gen(batches):
         from collections import Counter
@@ -653,7 +525,6 @@ def _simhash_signatures_arrow(df: DataFrame, text_col: str, id_col: str) -> Data
         import numpy as np
         import pyarrow as pa
 
-        bits = portable_bits = 60
         cache: dict[str, "np.ndarray"] = {}
 
         def votes(tok: str):
@@ -662,15 +533,11 @@ def _simhash_signatures_arrow(df: DataFrame, text_col: str, id_col: str) -> Data
                 hx = md5(tok.encode("utf-8")).hexdigest() + md5(
                     ("x" + tok).encode("utf-8")
                 ).hexdigest()
-                v = np.array(
-                    [1 if c >= "8" else 0 for c in hx[:portable_bits]],
-                    dtype=np.int64,
-                )
+                v = np.array([1 if c >= "8" else 0 for c in hx[:bits]], dtype=np.int64)
                 cache[tok] = v
             return v
 
         for batch in batches:
-            ids = batch.column(0).to_pylist()
             texts = batch.column(1).to_pylist()
             sigs: list[int] = []
             for txt in texts:
@@ -678,7 +545,7 @@ def _simhash_signatures_arrow(df: DataFrame, text_col: str, id_col: str) -> Data
                     raise ValueError(
                         "simhash kernel received NULL text — filter upstream"
                     )
-                toks = txt.lower().split(" ")
+                toks = tokenize(txt)
                 n = len(toks)
                 ones = np.zeros(bits, dtype=np.int64)
                 for tok, cnt in Counter(toks).items():
@@ -689,15 +556,16 @@ def _simhash_signatures_arrow(df: DataFrame, text_col: str, id_col: str) -> Data
                         sig += 1 << (bits - 1 - i)
                 sigs.append(sig)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.int64()), pa.array(sigs, pa.int64())],
-                names=["doc", "sig"],
+                [batch.column(0), pa.array(sigs, pa.int64())], names=["doc", "sig"]
             )
 
-    return (
-        df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_text"))
-        .mapInArrow(gen, "doc long, sig long")
-        .withColumnRenamed("doc", id_col)
-    )
+    return text_kernel(
+        PART.ensure_min_partitions(df.where(F.col(text_col).isNotNull())),
+        text_col,
+        id_col,
+        gen,
+        [("sig", LongType())],
+    ).withColumnRenamed("doc", id_col)
 
 
 def connected_components(
@@ -1157,7 +1025,7 @@ def prefix_filter_similarity_pairs(
             F.col("doc").alias("doc_id"), F.col("s").alias("tok")
         )
     else:
-        # Measured r14: swapping this build for shingle_rows_arrow was a
+        # Measured r14: swapping this build for an Arrow shingle kernel was a
         # WASH-to-slight-loss (interleaved min-of-5 at sf0.1: relational
         # 4.32s vs kernel 4.59s full-query; bare tk 0.50 vs 0.71) — at
         # k=3 the explode+HOF is one cheap pass here and the kernel pays

@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from uda_spark.functions import portable
+from uda_spark.operators.dedup import _doc_grams
 from uda_spark.operators.sort import global_ntile
 from uda_spark.queries.common import t
 from uda_spark.registry import register
@@ -63,8 +64,6 @@ def text_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash LSH (dedup_minhash_near_pairs); this exact variant is its
     quality oracle.
     """
-    toks = portable.tokens("text", "spark")
-    grams = portable.shingles(toks, 2, "spark")
     hash_rank = portable.hash60("CAST(doc_id AS STRING)", "spark")
     docs = t(spark, sf_dir, "documents")
     slim = docs.select("doc_id", "lang", "source")
@@ -85,96 +84,72 @@ def text_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = docs.join(F.broadcast(keep), on="doc_id").select(
         "doc_id", "lang", "source", "text"
     )
-    from uda_spark.operators.dedup import USE_ARROW_TEXT_KERNELS, _doc_shingler
+    # Per-block pairwise intersections as ONE incidence GEMM per
+    # (lang, source) group (r14, guide §4.2): tokenize+bigram each doc
+    # in Python (the parity-tested operators/dedup._doc_grams
+    # tokenizer), build the docs × distinct-grams 0/1 matrix, and read
+    # every n_inter off A @ A.T — float64 BLAS instead of a block
+    # self-join with per-pair array_intersect.  Counts are small
+    # integers, so the f64 GEMM is exact, and jaccard is the oracle's
+    # single IEEE division — bit-identical output.  Block width is
+    # capped at NGRAM_BLOCK_CAP docs upstream, and the GEMM is
+    # row-chunked so no task materializes more than ~CAP·8MB of dot
+    # cells.
+    import pyarrow as pa
 
-    if USE_ARROW_TEXT_KERNELS:
-        # Per-block pairwise intersections as ONE incidence GEMM per
-        # (lang, source) group (r14, guide §4.2): tokenize+bigram each
-        # doc in Python (parity-tested twin of the HOF — see
-        # operators/dedup._doc_shingler), build the docs × distinct-grams
-        # 0/1 matrix, and read every n_inter off A @ A.T.  Replaces the
-        # block self-join (gram-array shuffle + per-pair array_intersect
-        # hash sets) with float64 BLAS; counts are small integers, so the
-        # f64 GEMM is exact, and jaccard is the same single IEEE division
-        # the SQL computed — bit-identical output.  Block width is capped
-        # at NGRAM_BLOCK_CAP docs upstream, and the GEMM is row-chunked
-        # so no task materializes more than ~CAP·8MB of dot cells.
+    bigrams = _doc_grams(2)
+    thr = 1.0 / 20  # the same double CAST(1 AS DOUBLE)/20 evaluates to
+
+    from typing import Tuple
+
+    # NOTE: full annotations required — pyspark 4.1.2's grouped
+    # applyInArrow eval-type inference swallows its own failure into
+    # an UnboundLocalError when they are missing (r13 finding).
+    def block_pairs(key: Tuple[pa.Scalar, ...], tbl: pa.Table) -> pa.Table:
+        import numpy as np
         import pyarrow as pa
 
-        shingler = _doc_shingler(2)
-        thr = 1.0 / 20  # the same double CAST(1 AS DOUBLE)/20 evaluates to
-
-        from typing import Tuple
-
-        # NOTE: full annotations required — pyspark 4.1.2's grouped
-        # applyInArrow eval-type inference swallows its own failure into
-        # an UnboundLocalError when they are missing (r13 finding).
-        def block_pairs(key: Tuple[pa.Scalar, ...], tbl: pa.Table) -> pa.Table:
-            import numpy as np
-            import pyarrow as pa
-
-            ids = tbl.column("doc_id").to_pylist()
-            texts = tbl.column("text").to_pylist()
-            # NULL text -> NULL grams -> NULL jaccard -> filtered: the doc
-            # contributes no pairs either way, so skip it up front.
-            pairs_in = [(i, shingler(t)) for i, t in zip(ids, texts) if t is not None]
-            vocab: dict[str, int] = {}
-            for _, gs in pairs_in:
-                for g in gs:
-                    vocab.setdefault(g, len(vocab))
-            n = len(pairs_in)
-            A = np.zeros((n, max(1, len(vocab))), dtype=np.float64)
-            for i, (_, gs) in enumerate(pairs_in):
-                for g in gs:
-                    A[i, vocab[g]] = 1.0
-            sizes = A.sum(axis=1)
-            idv = np.array([i for i, _ in pairs_in], dtype=np.int64)
-            out_a: list = []
-            out_b: list = []
-            out_j: list = []
-            chunk = max(1, (8 << 20) // max(1, n * 8))
-            for lo in range(0, n, chunk):
-                hi = min(n, lo + chunk)
-                inter = A[lo:hi] @ A.T  # exact: 0/1 entries, counts < 2^53
-                union = sizes[lo:hi, None] + sizes[None, :] - inter
-                jac = inter / union  # the SQL's one IEEE division
-                mask = (idv[lo:hi, None] < idv[None, :]) & (jac >= thr)
-                ii, jj = np.nonzero(mask)
-                out_a.append(idv[lo + ii])
-                out_b.append(idv[jj])
-                out_j.append(jac[ii, jj])
-            cat = (lambda xs: np.concatenate(xs) if xs else np.array([]))
-            return pa.table(
-                {
-                    "doc_a": pa.array(cat(out_a), pa.int64()),
-                    "doc_b": pa.array(cat(out_b), pa.int64()),
-                    "jaccard": pa.array(cat(out_j), pa.float64()),
-                }
-            )
-
-        return kept.groupBy("lang", "source").applyInArrow(
-            block_pairs, "doc_a long, doc_b long, jaccard double"
+        ids = tbl.column("doc_id").to_pylist()
+        texts = tbl.column("text").to_pylist()
+        # NULL text -> NULL grams -> NULL jaccard -> filtered: the doc
+        # contributes no pairs either way, so skip it up front.
+        pairs_in = [(i, set(bigrams(t))) for i, t in zip(ids, texts) if t is not None]
+        vocab: dict[str, int] = {}
+        for _, gs in pairs_in:
+            for g in gs:
+                vocab.setdefault(g, len(vocab))
+        n = len(pairs_in)
+        A = np.zeros((n, max(1, len(vocab))), dtype=np.float64)
+        for i, (_, gs) in enumerate(pairs_in):
+            for g in gs:
+                A[i, vocab[g]] = 1.0
+        sizes = A.sum(axis=1)
+        idv = np.array([i for i, _ in pairs_in], dtype=np.int64)
+        out_a: list = []
+        out_b: list = []
+        out_j: list = []
+        chunk = max(1, (8 << 20) // max(1, n * 8))
+        for lo in range(0, n, chunk):
+            hi = min(n, lo + chunk)
+            inter = A[lo:hi] @ A.T  # exact: 0/1 entries, counts < 2^53
+            union = sizes[lo:hi, None] + sizes[None, :] - inter
+            jac = inter / union  # the SQL's one IEEE division
+            mask = (idv[lo:hi, None] < idv[None, :]) & (jac >= thr)
+            ii, jj = np.nonzero(mask)
+            out_a.append(idv[lo + ii])
+            out_b.append(idv[jj])
+            out_j.append(jac[ii, jj])
+        cat = (lambda xs: np.concatenate(xs) if xs else np.array([]))
+        return pa.table(
+            {
+                "doc_a": pa.array(cat(out_a), pa.int64()),
+                "doc_b": pa.array(cat(out_b), pa.int64()),
+                "jaccard": pa.array(cat(out_j), pa.float64()),
+            }
         )
-    tk = kept.select(
-        "doc_id", "lang", "source", F.array_distinct(F.expr(grams)).alias("grams")
-    )
-    a, b = tk.alias("a"), tk.alias("b")
-    pairs = (
-        a.join(b, on=["lang", "source"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.expr("size(array_intersect(a.grams, b.grams))").alias("n_inter"),
-            F.size("a.grams").alias("na"),
-            F.size("b.grams").alias("nb"),
-        )
-    )
-    jac = F.expr("CAST(n_inter AS DOUBLE) / (na + nb - n_inter)")
-    return (
-        pairs.withColumn("jaccard", jac)
-        .where(F.col("jaccard") >= F.expr(NGRAM_JACCARD_T))
-        .select("doc_a", "doc_b", "jaccard")
+
+    return kept.groupBy("lang", "source").applyInArrow(
+        block_pairs, "doc_a long, doc_b long, jaccard double"
     )
 
 

@@ -116,7 +116,7 @@ def dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH tk AS (SELECT doc_id, {portable.tokens('text', 'duck')} AS toks FROM documents),
 sh AS (SELECT doc_id, {portable.shingles('toks', 3, 'duck')} AS shingles FROM tk),
-sig AS (SELECT doc_id, {portable.minhash_sig('shingles', N_HASHES, 'duck')} AS sig FROM sh)
+sig AS (SELECT doc_id, {portable.minhash_sig_duck('shingles', N_HASHES)} AS sig FROM sh)
 SELECT doc_id, CAST(r.h AS INT) AS h, sig[r.h + 1] AS sig_hash
 FROM sig, range(0, {N_HASHES}) r(h)
 """,
@@ -135,7 +135,7 @@ WITH corpus AS ({_DUCK_CORPUS_NEAR}),
 tk AS (SELECT doc_id, {portable.tokens('text', 'duck')} AS toks FROM corpus),
 sh AS (SELECT doc_id, {portable.shingles('toks', 3, 'duck')} AS shingles FROM tk),
 sig AS (SELECT doc_id,
-               {portable.minhash_sig('shingles', N_HASHES, 'duck')} AS sig,
+               {portable.minhash_sig_duck('shingles', N_HASHES)} AS sig,
                list_distinct(shingles) AS sset
         FROM sh),
 banded AS (
@@ -566,11 +566,11 @@ exact_hits AS (
 ),
 ntk AS (SELECT doc_id, {portable.tokens('text', 'duck')} AS toks FROM new_docs),
 nsh AS (SELECT doc_id, {portable.shingles('toks', 3, 'duck')} AS shingles FROM ntk),
-nsig AS (SELECT doc_id, {portable.minhash_sig('shingles', N_HASHES, 'duck')} AS sig,
+nsig AS (SELECT doc_id, {portable.minhash_sig_duck('shingles', N_HASHES)} AS sig,
                 list_distinct(shingles) AS sset FROM nsh),
 btk AS (SELECT doc_id, {portable.tokens('text', 'duck')} AS toks FROM documents),
 bsh AS (SELECT doc_id, {portable.shingles('toks', 3, 'duck')} AS shingles FROM btk),
-bsig AS (SELECT doc_id, {portable.minhash_sig('shingles', N_HASHES, 'duck')} AS sig,
+bsig AS (SELECT doc_id, {portable.minhash_sig_duck('shingles', N_HASHES)} AS sig,
                 list_distinct(shingles) AS sset FROM bsh),
 nband AS (
   SELECT doc_id, b,
@@ -721,7 +721,7 @@ WITH corpus AS ({_DUCK_CORPUS_NEAR}),
 tk AS (SELECT doc_id, {portable.tokens('text', 'duck')} AS toks FROM corpus),
 sh AS (SELECT doc_id, {portable.shingles('toks', 3, 'duck')} AS shingles FROM tk),
 sig AS (SELECT doc_id,
-               {portable.minhash_sig('shingles', N_HASHES, 'duck')} AS sig,
+               {portable.minhash_sig_duck('shingles', N_HASHES)} AS sig,
                list_distinct(shingles) AS sset
         FROM sh),
 banded AS (
@@ -849,7 +849,7 @@ WITH corpus AS ({_DUCK_CORPUS_NEAR}),
 tk AS (SELECT doc_id, {portable.tokens('text', 'duck')} AS toks FROM corpus),
 sh AS (SELECT doc_id, {portable.shingles('toks', 3, 'duck')} AS shingles FROM tk),
 sig AS (SELECT doc_id,
-               {portable.minhash_sig('shingles', N_HASHES, 'duck')} AS sig,
+               {portable.minhash_sig_duck('shingles', N_HASHES)} AS sig,
                list_distinct(shingles) AS sset
         FROM sh),
 banded AS (
@@ -1304,20 +1304,20 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE corpus shingle pass feeds both pair generators (the exact
     # ssjoin and the MinHash signatures consume the identical distinct
     # (doc, shingle) relation — recomputing it was the single biggest
-    # cost of this query): tokenize/shingle once (Arrow kernel, guide
-    # §4.2), persist, share.
+    # cost of this query): tokenize/shingle once with the relational
+    # explode of the shingle HOF, persist, share.
     from uda_spark.plans import partitioning as PART
 
     nn = PART.ensure_min_partitions(corpus.where(F.col("text").isNotNull()))
     # Relational build on purpose: the shared (doc, s) relation is
-    # map-side in BOTH formulations (no exchange to remove), so the
-    # Arrow shingle kernel only relocates the k=3 tokenize+shingle from
-    # the JVM HOF to Python and ships every shingle string across the
-    # boundary — interleaved A/B at sf0.1/32c, med of 6: kernel 7.43s
-    # vs relational 6.93s full-query.  Same lesson as the prefix-filter
-    # negative result (operators/dedup.py ~1124): a kernel pays only
-    # when it absorbs per-row compute (md5 families) or removes an
-    # exchange, and this build does neither.
+    # map-side either way (no exchange to remove), so an Arrow shingle
+    # kernel would only relocate the k=3 tokenize+shingle from the JVM
+    # HOF to Python and ship every shingle string across the boundary —
+    # interleaved A/B at sf0.1/32c, med of 6: kernel 7.43s vs
+    # relational 6.93s full-query.  Same lesson as the prefix-filter
+    # negative result (operators/dedup.py:prefix_filter_similarity_pairs):
+    # a kernel pays only when it absorbs per-row compute (md5 families)
+    # or removes an exchange, and this build does neither.
     shingle_rows = tracked_persist(
         D.with_shingles(nn, "text", 3).select(
             F.col("doc_id").alias("doc"),

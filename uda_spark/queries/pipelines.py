@@ -87,7 +87,7 @@ kept AS (
 ),
 sh AS (SELECT doc_id, {portable.shingles('toks', _PIPE_K, 'duck')} AS shingles FROM kept),
 sig AS (SELECT doc_id,
-               {portable.minhash_sig('shingles', _PIPE_N_HASHES, 'duck')} AS sig,
+               {portable.minhash_sig_duck('shingles', _PIPE_N_HASHES)} AS sig,
                list_distinct(shingles) AS sset
         FROM sh),
 banded AS (

@@ -1,8 +1,10 @@
 """Text-analysis queries over the documents table (north-star ops):
 token statistics, language ID, quality scoring, fingerprinting.
 
-Spark side is pure higher-order functions over the token array — no
-Python, no shuffle before the final (tiny) aggregation; at 100 TB these
+Spark side is higher-order functions over the token array, or — for
+per-document gram work (repetition stats, decontamination, duplicated
+n-gram coverage) — the Arrow text kernels of operators/dedup.py; either
+way no shuffle before the final (tiny) aggregation, and at 100 TB these
 are map-only passes.  Every derived value is engine-portable
 (functions/portable.py + functions/text.py).
 """
@@ -11,9 +13,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from uda_spark.cache import tracked_persist
 from uda_spark.functions import portable, text as TXT
+from uda_spark.operators.dedup import _doc_grams, gram_hash_rows_arrow, text_kernel
+from uda_spark.plans import partitioning as PART
 from uda_spark.queries.common import t
 from uda_spark.registry import register
 
@@ -135,14 +140,10 @@ TFIDF_TOP_K = 3
 # The tf relation feeds BOTH the df aggregation and the final join.  Spark
 # does not reuse the exchange between them (the df branch prunes the count
 # column, so the subplans differ — verified in the executed adaptive plan:
-# 2 parquet scans, 0 ReusedExchange), so by default the corpus is exploded
-# and aggregated twice.  Measured at sf0.1 (min-of-3, warm JVM): recompute
+# 2 parquet scans, 0 ReusedExchange), so the corpus is exploded and
+# aggregated twice.  Measured at sf0.1 (min-of-3, warm JVM): recompute
 # 0.67–0.95s vs persisted 1.07–1.25s — materializing the (doc_id, term,
-# tf) cache costs more than the second pass at bench scale, so the default
-# stays False.  At 100 TB the ratio inverts (the double corpus
-# scan+explode dominates; the tf cache is token-count-sized and spills to
-# disk), so a cluster deployment should flip this to True.
-TFIDF_PERSIST_TF = False
+# tf) cache costs more than the second pass at bench scale.
 
 
 @register(
@@ -180,9 +181,8 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: DF is derived from the TF relation (each (doc, term) row
     counts once toward the term's document frequency), so no separate
-    distinct-count pass exists; whether the shared tf prefix executes
-    once (persisted) or twice (recomputed) is the measured
-    ``TFIDF_PERSIST_TF`` tradeoff documented above.  The DF relation is
+    distinct-count pass exists; the shared tf prefix is recomputed per
+    consumer (the measured tradeoff documented above).  The DF relation is
     vocabulary-sized and broadcast back onto TF; top-k per doc is a
     bounded window.  Every tfidf input is an exact integer, so ln() and
     the product are bit-identical across engines; ties break on the term
@@ -194,8 +194,6 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(F.expr(portable.tokens("text", "spark"))).alias("term")
     )
     tf = terms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    if TFIDF_PERSIST_TF:
-        tf = tracked_persist(tf)
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
     # df is vocabulary-sized (unbounded at corpus scale) — no broadcast
     # hint; AQE still picks a broadcast join at runtime whenever the
@@ -394,7 +392,6 @@ def text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BIGRAMS_SPARK = portable.shingles(portable.tokens("text", "spark"), 2, "spark")
 _BIGRAMS_DUCK = portable.shingles(portable.tokens("text", "duck"), 2, "duck")
 
 
@@ -426,80 +423,50 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     single most frequent bigram) and ``dup_bigram_frac`` (share of
     bigram occurrences that are repeats).
 
-    Scale shape: explode bigrams → (doc, bigram) count → per-doc
-    aggregate — two exchanges, both keyed by doc_id-prefixed keys, no
-    content in the second shuffle (counts only).  A crawl pipeline runs
-    this beside token/quality stats and filters on the fractions;
+    Scale shape: map-only.  A document's bigram multiset lives entirely
+    in its own row, so one Arrow kernel pass (a Counter per doc) yields
+    top_cnt/n_bigrams/n_distinct with no exchange at all.  A crawl
+    pipeline runs this beside token/quality stats and filters on the fractions;
     thresholds (e.g. top_bigram_frac > 0.18 per Gopher) stay user-side.
     Every input to the fractions is an exact integer, so the single
     IEEE division + round(6) is bit-identical across engines.
     """
-    docs = t(spark, sf_dir, "documents")
-    from uda_spark.operators.dedup import USE_ARROW_TEXT_KERNELS, _arrow_text_kernel_ok
+    bigrams = _doc_grams(2)
 
-    if USE_ARROW_TEXT_KERNELS and _arrow_text_kernel_ok(docs, "text", "doc_id"):
-        # Map-only Arrow kernel (r14, guide §4.2): a document's bigram
-        # multiset lives entirely in its own row, so top_cnt/n_bigrams/
-        # n_distinct need NO exchange at all — the explode, the
-        # (doc, bg) count aggregate and the per-doc rollup (two
-        # exchanges) collapse into one Counter pass per doc.  The two
-        # fractions stay the same single IEEE divisions + round(6) the
-        # relational projection computed — bit-identical output.
-        from uda_spark.plans import partitioning as PART
+    def gen(batches):
+        from collections import Counter
 
-        def gen(batches):
-            from collections import Counter
+        import pyarrow as pa
 
-            import pyarrow as pa
+        for b in batches:
+            top, nbg, ndis = [], [], []
+            for txt in b.column(1).to_pylist():
+                grams = bigrams(txt)
+                c = Counter(grams)
+                top.append(max(c.values()))
+                nbg.append(len(grams))
+                ndis.append(len(c))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    b.column(0),
+                    pa.array(top, pa.int64()),
+                    pa.array(nbg, pa.int64()),
+                    pa.array(ndis, pa.int64()),
+                ],
+                names=["doc", "top_cnt", "n_bigrams", "n_distinct"],
+            )
 
-            for b in batches:
-                ids = b.column(0).to_pylist()
-                texts = b.column(1).to_pylist()
-                top, nbg, ndis = [], [], []
-                for txt in texts:
-                    toks = txt.lower().split(" ")
-                    n = len(toks)
-                    if n >= 2:
-                        grams = [
-                            toks[i] + " " + toks[i + 1] for i in range(n - 1)
-                        ]
-                    else:
-                        grams = [" ".join(toks)]
-                    c = Counter(grams)
-                    top.append(max(c.values()))
-                    nbg.append(len(grams))
-                    ndis.append(len(c))
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(ids, pa.int64()),
-                        pa.array(top, pa.int64()),
-                        pa.array(nbg, pa.int64()),
-                        pa.array(ndis, pa.int64()),
-                    ],
-                    names=["doc_id", "top_cnt", "n_bigrams", "n_distinct"],
-                )
-
-        # tokenizer is the parity-tested twin of portable.tokens (same
-        # contract as operators/dedup._doc_shingler); NULL texts drop,
-        # exactly as the explode path drops them
-        agg = PART.ensure_min_partitions(
-            docs.where(F.col("text").isNotNull())
-        ).select("doc_id", "text").mapInArrow(
-            gen, "doc_id long, top_cnt long, n_bigrams long, n_distinct long"
-        )
-    else:
-        cnt = (
-            docs.select("doc_id", F.explode(F.expr(_BIGRAMS_SPARK)).alias("bg"))
-            .groupBy("doc_id", "bg")
-            .agg(F.count("*").alias("c"))
-        )
-        agg = cnt.groupBy("doc_id").agg(
-            F.max("c").cast("long").alias("top_cnt"),
-            F.sum("c").cast("long").alias("n_bigrams"),
-            F.count("*").cast("long").alias("n_distinct"),
-        )
-    return agg.select(
+    # NULL texts have no bigrams, hence no row
+    docs = t(spark, sf_dir, "documents").where(F.col("text").isNotNull())
+    agg = text_kernel(
+        PART.ensure_min_partitions(docs),
+        "text",
         "doc_id",
+        gen,
+        [(name, LongType()) for name in ("top_cnt", "n_bigrams", "n_distinct")],
+    )
+    return agg.select(
+        F.col("doc").alias("doc_id"),
         "top_cnt",
         "n_bigrams",
         F.round(F.col("top_cnt") / F.col("n_bigrams").cast("double"), 6).alias(
@@ -514,7 +481,6 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 DECON_K = 5  # word n-gram size for the contamination check
 DECON_EVAL_MOD = 19  # doc_id % 19 == 0 stands in for the benchmark set
 
-_DECON_GRAMS_SPARK = portable.shingles(portable.tokens("text", "spark"), DECON_K, "spark")
 _DECON_GRAMS_DUCK = portable.shingles(portable.tokens("text", "duck"), DECON_K, "duck")
 
 
@@ -550,54 +516,28 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     out of the training corpus.
 
     Scale shape: the eval side is tiny relative to the corpus, so its
-    distinct n-gram hashes BROADCAST; the corpus side is one explode +
-    distinct + broadcast hash join + per-doc count — the corpus never
-    shuffles its text, only 60-bit gram hashes keyed by doc.  At 100 TB
+    distinct n-gram hashes BROADCAST; the corpus side is one map-only
+    gram-hash kernel + broadcast hash join + per-doc count — the corpus
+    never shuffles its text, only 60-bit gram hashes keyed by doc.  At 100 TB
     with a real benchmark suite (a few MB of n-grams) the broadcast side
     is still tiny; collision risk of hash60 is ~2^-60 per pair, and a
     hit means "inspect", not "silently drop".
     """
     docs = t(spark, sf_dir, "documents")
     is_eval = F.col("doc_id") % DECON_EVAL_MOD == 0
-    from uda_spark.operators.dedup import (
-        USE_ARROW_TEXT_KERNELS,
-        _arrow_text_kernel_ok,
-        gram_hash_rows_arrow,
-    )
-
-    if USE_ARROW_TEXT_KERNELS and _arrow_text_kernel_ok(docs, "text", "doc_id"):
-        # Map-only Arrow kernel (r14, guide §4.2): each document's gram
-        # set lives in its own row, so the per-doc DISTINCT that the
-        # corpus side needed a full (doc_id, gh) exchange for happens
-        # inside the kernel — the explode, the hash60 projection and the
-        # distinct exchange all collapse into one mapInArrow pass per
-        # side (the eval filter pushes below the kernel, so the two
-        # passes together still scan each doc once).  Same 60-bit md5
-        # fold, same (doc, gh) relation — bit-identical join/count.
-        from uda_spark.plans import partitioning as PART
-
-        eval_grams = (
-            gram_hash_rows_arrow(
-                PART.ensure_min_partitions(docs.where(is_eval)),
-                "text",
-                "doc_id",
-                DECON_K,
-            )
-            .select("gh")
-            .distinct()
+    # Each document's gram set lives in its own row, so the per-doc
+    # DISTINCT happens inside the kernel; the eval filter pushes below
+    # it, so the two passes together still scan each doc once.
+    eval_grams = (
+        gram_hash_rows_arrow(
+            PART.ensure_min_partitions(docs.where(is_eval)), "text", "doc_id", DECON_K
         )
-        corpus = gram_hash_rows_arrow(
-            PART.ensure_min_partitions(docs.where(~is_eval)),
-            "text",
-            "doc_id",
-            DECON_K,
-        ).withColumnRenamed("doc", "doc_id")
-    else:
-        grams = docs.select(
-            "doc_id", F.explode(F.expr(_DECON_GRAMS_SPARK)).alias("g")
-        ).select("doc_id", F.expr(portable.hash60("g", "spark")).alias("gh"))
-        eval_grams = grams.where(is_eval).select("gh").distinct()
-        corpus = grams.where(~is_eval).distinct()
+        .select("gh")
+        .distinct()
+    )
+    corpus = gram_hash_rows_arrow(
+        PART.ensure_min_partitions(docs.where(~is_eval)), "text", "doc_id", DECON_K
+    ).withColumnRenamed("doc", "doc_id")
     hits = (
         corpus.join(F.broadcast(eval_grams), on="gh")
         .groupBy("doc_id")
@@ -1036,15 +976,10 @@ PMI_TOP = 20
 # The (doc_id, gram) explode feeds the bigram counts AND the scoring
 # join, and Spark recomputes the subtree per consumer (3 corpus scans —
 # same no-ReusedExchange behavior as TF-IDF, measured in PLANS.md).
-# Crossover pinned by scripts/ab_bigram.py on inflated corpora
-# (round 6, local[32]/128G, min-of-2): persist wins while the exploded
-# relation fits storage memory (x1 5k docs 0.65, x20 100k docs 0.63)
-# and LOSES once it spills (x100 500k docs 1.07, x200 1M docs 1.14) —
-# the lever is "does the exploded relation fit the cluster's aggregate
-# cache", not corpus size per se.  Default False: the registered query
-# must be correct at any scale, and recompute degrades gracefully while
-# an overflowing persist pays spill round-trips on top of the explode.
-BIGRAM_PERSIST_DB = False
+# Persisting it won only while the exploded relation fit storage memory
+# and lost once it spilled (SCALING.md, "Bigram-LM persist crossover"),
+# so the registered query recomputes: correct at any scale, degrading
+# gracefully instead of paying spill round-trips on top of the explode.
 
 
 @register(
@@ -1100,24 +1035,11 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     job, src/Merger/CompareFunc.cc:95-113) maps to one quantization per
     derived value shared by engine and oracle.
     """
-    return bigram_logprob_scores(t(spark, sf_dir, "documents"))
-
-
-def bigram_logprob_scores(
-    docs: DataFrame, persist_db: bool | None = None
-) -> DataFrame:
-    """The bigram-LM scoring pipeline over any (doc_id, text) relation —
-    factored out so the persist-vs-recompute A/B can run it on inflated
-    synthetic corpora (scripts/ab_bigram.py, SCALING.md)."""
-    if persist_db is None:
-        persist_db = BIGRAM_PERSIST_DB
-    docs = docs.withColumn("toks", F.expr(_SP_TOKS))
+    docs = t(spark, sf_dir, "documents").withColumn("toks", F.expr(_SP_TOKS))
     db = docs.select(
         "doc_id",
         F.explode(F.expr(portable.shingles("toks", 2, "spark"))).alias("gram"),
     ).where(F.size(F.split("gram", " ")) == 2)
-    if persist_db:
-        db = tracked_persist(db)
     bi = db.groupBy("gram").agg(F.count("*").alias("n_ab"))
     ctx = (
         bi.withColumn("w1", F.expr("split(gram, ' ')[0]"))
@@ -1789,9 +1711,7 @@ def pipeline_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DUPGRAM_K = 5
 
-_DUPGRAM_SP = portable.shingles("toks", DUPGRAM_K, "spark")
 _DUPGRAM_DU = portable.shingles("toks", DUPGRAM_K, "duck")
-_DUPGRAM_H_SP = portable.hash60("g", "spark")
 _DUPGRAM_H_DU = portable.hash60("g", "duck")
 
 
@@ -1833,40 +1753,19 @@ def text_dup_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     readout still value-hash matches); all counts and the final ppm are
     exact integers.
 
-    Scale shape: one explode of the corpus into gram hashes (no gram
-    strings ever shuffle — 8-byte hashes keyed by doc), one partial-agg
-    exchange on (gh, doc), one on gh, then a single bounded row.  The
-    same two-exchange shape as the inverted index, ending in O(1)
-    output.
+    Scale shape: one map-only kernel pass turns each document into its
+    (gram hash, count) rows (no gram strings ever shuffle — 8-byte
+    hashes), one exchange on gh, then a single bounded row.
     """
-    docs = t(spark, sf_dir, "documents")
-    from uda_spark.operators.dedup import (
-        USE_ARROW_TEXT_KERNELS,
-        _arrow_text_kernel_ok,
-        gram_hash_rows_arrow,
+    # the (gh, doc) count is per-document, so it happens inside the
+    # kernel; only the (gh -> total_occ, n_docs) rollup shuffles
+    per = gram_hash_rows_arrow(
+        PART.ensure_min_partitions(t(spark, sf_dir, "documents")),
+        "text",
+        "doc_id",
+        DUPGRAM_K,
+        counts=True,
     )
-
-    if USE_ARROW_TEXT_KERNELS and _arrow_text_kernel_ok(docs, "text", "doc_id"):
-        # Map-only Arrow kernel (r14, guide §4.2): the (gh, doc) count
-        # is per-document (each doc's grams live in its own row), so the
-        # explode, the hash60 projection and the first count exchange
-        # collapse into one Counter pass per doc; only the tiny
-        # (gh -> total_occ, n_docs) rollup still shuffles.
-        from uda_spark.plans import partitioning as PART
-
-        per = gram_hash_rows_arrow(
-            PART.ensure_min_partitions(docs),
-            "text",
-            "doc_id",
-            DUPGRAM_K,
-            counts=True,
-        ).withColumnRenamed("doc", "doc_id")
-    else:
-        toks = docs.withColumn("toks", F.expr(_SP_TOKS))
-        occ = toks.select(
-            "doc_id", F.explode(F.expr(_DUPGRAM_SP)).alias("g")
-        ).select("doc_id", F.expr(_DUPGRAM_H_SP).alias("gh"))
-        per = occ.groupBy("gh", "doc_id").agg(F.count("*").alias("c"))
     g = per.groupBy("gh").agg(
         F.sum("c").alias("total_occ"), F.count("*").alias("n_docs")
     )

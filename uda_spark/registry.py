@@ -54,163 +54,10 @@ _QUERY_MODULES = (
     # appended after the round-5 rotation freeze — new modules only ever
     # append here, which cannot move the pinned first-50 sample window
     "uda_spark.queries.quality",
-    # appended round 6 — covered by the rotation-3 window (see below)
+    # appended round 6
     "uda_spark.queries.retrieval_pipeline",
-    # appended round 7 — new names go in _R07_NEW so the driver samples
-    # them this round (slots 48+)
+    # appended round 7
     "uda_spark.queries.evaluation",
-)
-
-# ---------------------------------------------------------------------------
-# Rotation 3 (round 7) — coverage completion, pre-declared by VERDICT r05 and
-# corrected per VERDICT r06 "What's wrong #3" (the round-6 pre-declaration
-# was written before the last 5 round-6 queries were registered and so
-# omitted them).
-#
-# This frozen tuple is EXACTLY the 47 registered queries with no external
-# CORRECTNESS row in the union of CORRECTNESS_r01..r06 KEY SETS, in
-# registration order — a pure function of which queries the driver ever
-# sampled, never of pass/fail outcomes (all driver rows to date are green,
-# so there is no result signal to react to).  It is a coverage schedule,
-# nothing else.  After round 7 every pre-round-7 query has >=1 driver row.
-#
-# Slots 48-50 (and beyond) go to queries registered DURING round 7 (listed
-# in ``_R07_NEW`` as they land) so new work earns a driver row in the same
-# round it ships instead of waiting a rotation; after those, plain
-# registration order.  From round 8 on the frozen tuple is dropped and the
-# window is simply "new-since-last-round first, then registration order",
-# which keeps coverage complete permanently.
-_R07_WINDOW = (
-    "geo_grid_neighbor_pairs",
-    "join_dpp_partitioned_orders",
-    "dedup_cluster_size_histogram",
-    "dedup_prefix_filter_pairs",
-    "sim_filtered_knn",
-    "sim_pq_incremental_serve",
-    "text_blocklist_filter",
-    "text_source_drift_tvd",
-    "events_attribution_touchpoints",
-    "pipeline_stratified_sample",
-    "streaming_cms_user_sketch",
-    "multimodal_scene_changes",
-    "pipeline_train_val_test_split",
-    "pipeline_domain_balance",
-    "pipeline_epoch_shuffle",
-    "pipeline_weighted_sample",
-    "multimodal_phash_near_dup",
-    "pipeline_shard_manifest",
-    "pipeline_temperature_mixture",
-    "pipeline_curriculum_phases",
-    "multimodal_audio_loudness",
-    "profile_orders",
-    "events_hourly_anomalies",
-    "events_cohort_retention",
-    "basket_copurchase_pairs",
-    "table_diff_orders",
-    "orders_rfm_segments",
-    "lineitem_abc_analysis",
-    "events_markov_transitions",
-    "orders_open_backlog",
-    "lineitem_ship_lag_histogram",
-    "orders_argmax_latest",
-    "events_value_winsorize",
-    "events_key_skew_profile",
-    "dq_constraint_report",
-    "events_lateness_profile",
-    "sketch_kmv_intersection",
-    "events_hourly_anomalies_mad",
-    "orders_cohort_ltv",
-    "part_supplier_hhi",
-    "orders_seasonality_index",
-    "features_target_encoding_oof",
-    "ml_linear_fit_price_qty",
-    "ml_correlation_matrix",
-    "events_ab_welch_test",
-    "pipeline_retrieval_e2e",
-    "pipeline_corpus_refresh_e2e",
-)
-
-# Queries first registered in round 7, in registration order (kept for the
-# historical record / tests; no longer drives the export ordering).
-_R07_NEW: tuple[str, ...] = (
-    "dedup_lsh_recall_eval",
-    "ml_auc_rank_sum",
-    "ml_calibration_bins",
-    "ml_confusion_report",
-    "pipeline_dataset_card",
-    "graph_degree_histogram",
-    "ml_pr_threshold_sweep",
-    "sketch_histogram_quantiles",
-    "events_cusum_changepoint",
-    "pipeline_model_eval_e2e",
-)
-
-# ---------------------------------------------------------------------------
-# Round 8 — the frozen rotation tuples are retired per the round-7 contract.
-# The export window is now simply: never-driver-sampled queries first, then
-# queries first registered this round, then registration order.
-#
-# `_R08_UNSAMPLED` is EXACTLY the registered queries with no external
-# CORRECTNESS row in the union of CORRECTNESS_r01..r07 key sets (the last 7
-# round-7 registrations, which landed after sample slot 50), in registration
-# order — a pure coverage schedule, never a function of pass/fail outcomes.
-_R08_UNSAMPLED: tuple[str, ...] = (
-    "ml_confusion_report",
-    "pipeline_dataset_card",
-    "graph_degree_histogram",
-    "ml_pr_threshold_sweep",
-    "sketch_histogram_quantiles",
-    "events_cusum_changepoint",
-    "pipeline_model_eval_e2e",
-)
-
-# Queries first registered in round 8, in registration order — appended
-# (never reordered) as they land, filling sample slots 8+ so new work earns
-# a driver row in the same round it ships.
-_R08_NEW: tuple[str, ...] = (
-    "sketch_histogram_persisted_merge",
-    "ml_auc_by_segment",
-    "ml_chi_square_independence",
-    "ml_ndcg_at_k",
-    "sim_binary_hamming_knn",
-    "pipeline_compaction_plan",
-    "streaming_histogram_quantiles",
-    "dq_k_anonymity",
-    "events_holt_forecast",
-    "events_survival_km",
-    "sim_late_interaction_maxsim",
-    "ml_ols_two_features",
-    "ml_lift_deciles",
-    "pipeline_token_budget_pack",
-    "dq_referential_integrity",
-    "dq_schema_profile",
-    "ml_ks_statistic",
-    "dq_benford_firstdigit",
-    "text_bm25_topk",
-    "events_acf_daily",
-    "ml_bootstrap_ci_mean",
-    "events_pareto_front",
-    "dq_freshness_lag",
-    "ml_conformal_interval",
-    "ml_cohens_kappa",
-    "text_gini_tokens",
-    "events_trend_mk",
-    "streaming_freshness_lag",
-    "ml_psi_score_drift",
-    "pipeline_lorenz_deciles",
-    "events_burstiness_fano",
-    "sim_recall_at_k_curve",
-    "pipeline_mixture_entropy",
-    "events_runs_test",
-    "ml_brier_score",
-    "text_dup_ngram_coverage",
-    "ml_mcc_ece",
-    "sim_topk_diversity",
-    "text_ttr_by_source",
-    "dedup_rate_by_source",
-    "text_js_divergence_sources",
-    "ml_log_loss",
-    "orders_pareto_8020",
 )
 
 # ---------------------------------------------------------------------------
