@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Two-pass cumulative operators under memory pressure and key skew:
 evidence that the range-partitioned machinery behind every
-order-statistic readout (`global_cumulative_sum` / `_extreme` /
+order-statistic readout (`global_cumulative_sums` / `_extreme` /
 `grouped_global_cumulative_sum`, uda_spark/operators/sort.py) holds
 when (a) the data does NOT fit the sorter's memory and (b) the order
 keys and group sizes are heavily skewed — the exact conditions where a
@@ -75,7 +75,7 @@ def main() -> None:
     )
     from uda_spark.operators.sort import (
         global_cumulative_extreme,
-        global_cumulative_sum,
+        global_cumulative_sums,
         grouped_global_cumulative_sum,
     )
 
@@ -87,14 +87,14 @@ def main() -> None:
         "memory_fraction": 0.2,
     }
 
-    # --- probe 1: global_cumulative_sum, skewed key density, closed form
+    # --- probe 1: global_cumulative_sums, skewed key density, closed form
     t0 = time.perf_counter()
     base = spark.range(args.rows).select(
         F.col("id"),
         (F.col("id") * F.col("id")).alias("k"),  # densifying key space
         (F.col("id") % 7 + 1).alias("v"),
     )
-    cum = global_cumulative_sum(base, ["k"], "v", "run", num_partitions=n_parts)
+    cum = global_cumulative_sums(base, ["k"], ["v"], ["run"], num_partitions=n_parts)
     mismatch_sum = (
         cum.withColumn(
             "expect",

@@ -6,7 +6,7 @@ COMPLETE WITH PARITY instead of merely configuring the mode:
 
 * ``test_reliable_checkpoint_survives_task_retry`` — a poisoned
   partition fails its first attempt INSIDE pass 2 of
-  ``global_cumulative_sum`` (the window job that consumes the
+  ``global_cumulative_sums`` (the window job that consumes the
   checkpoint).  With task retries enabled the stage retry re-reads the
   reliable checkpoint files and the result matches a pure-python
   recompute.  Task retries require a ``local[N, maxFailures]`` master,
@@ -104,7 +104,7 @@ def test_reliable_checkpoint_survives_task_retry(retry_spark, tmp_path):
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
     try:
         marker = str(tmp_path / "poison_fired")
-        cum = S.global_cumulative_sum(df, ["k"], "v", "cum", num_partitions=8)
+        cum = S.global_cumulative_sums(df, ["k"], ["v"], ["cum"], num_partitions=8)
         poisoned = cum.mapInPandas(
             _poison_first_attempt_p0(marker), schema=cum.schema
         )

@@ -1,6 +1,6 @@
 """Plan linter — institutionalizes the round-7/8 lesson (the AUC
 single-partition window) as CI: walk every registered query's physical
-plan at smoke scale and fail on the three 100 TB scale-killer shapes
+plan at smoke scale and fail on the four 100 TB scale-killer shapes
 before a judge round can find them.
 
 Rules (per query):
@@ -22,7 +22,18 @@ Rules (per query):
    every BNLJ query declares its reason in ``BNLJ_BOUNDED``; a new BNLJ
    without an entry fails.
 
-3. **No unpushed scan filters.**  A scan whose ``DataFilters`` is
+3. **Top-k merges keep their map-side partial.**  A top-k merge is one
+   ``row_number() <= k`` window per group, which Catalyst plans as
+   ``WindowGroupLimit`` Partial (k rows per group inside each map task)
+   → shuffle exchange → ``WindowGroupLimit`` Final.  The Partial is
+   what keeps a hot group's full score list out of any single task,
+   and Spark plans it only while k ≤
+   ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000):
+   past that the window silently funnels each group through one task.
+   Every query in ``TOPK_MERGES`` must show at least that many Partials
+   directly below a shuffle exchange.
+
+4. **No unpushed scan filters.**  A scan whose ``DataFilters`` is
    non-empty but ``PushedFilters`` is empty means a filter reached the
    scan node but could not push into parquet (typically a cast or
    expression wrapped around the column) — the scan reads everything
@@ -176,6 +187,34 @@ BNLJ_BOUNDED: dict[str, str] = {
 }
 
 
+# Queries whose plan holds single-window top-k merges (rule 3), and
+# how many: the brute-force, binary, int8, LSH, PQ, IVF, IVF-PQ,
+# filtered and MaxSim kNN merges, the exact/ANN pairs of the recall
+# evaluations, and text_ngram_jaccard_pairs' NGRAM_BLOCK_CAP cap.
+TOPK_MERGES: dict[str, int] = {
+    "ml_average_precision_at_k": 1,
+    "ml_mrr_at_k": 1,
+    "ml_ndcg_at_k": 1,
+    "multimodal_feature_knn": 1,
+    "pipeline_corpus_refresh_e2e": 1,
+    "sim_ann_recall_eval": 2,
+    "sim_binary_hamming_knn": 1,
+    "sim_filtered_knn": 1,
+    "sim_ivf_knn": 1,
+    "sim_ivfpq_knn": 1,
+    "sim_knn_bruteforce": 1,
+    "sim_knn_margin_audit": 1,
+    "sim_late_interaction_maxsim": 1,
+    "sim_lsh_knn": 1,
+    "sim_pq_incremental_serve": 1,
+    "sim_pq_knn": 1,
+    "sim_quantized_knn": 1,
+    "sim_recall_at_k_curve": 2,
+    "sim_recall_vs_nprobe": 2,
+    "sim_topk_diversity": 2,
+    "text_ngram_jaccard_pairs": 1,
+}
+
 def _sp_violations(simple_plan: str) -> list[str]:
     lines = [l for l in simple_plan.splitlines() if l.strip()]
     out = []
@@ -199,6 +238,53 @@ def _unpushed_scans(formatted_plan: str) -> list[str]:
         if data and not pushed:
             out.append(data[:120])
     return out
+
+
+# Start of a plan node's name after the tree glyphs, past any
+# whole-stage-codegen ``*(3)`` marker.
+_NODE = re.compile(r"(?:[+:]- )(?:\*\(\d+\) )?")
+
+
+def _map_side_topk_partials(simple_plan: str) -> int:
+    """Count ``WindowGroupLimit ... Partial`` nodes whose nearest
+    Exchange/WindowGroupLimit ancestor is a hash-partitioning shuffle
+    exchange — i.e. the partial top-k runs in the map tasks that feed
+    the shuffle.  Tree depth is the column of a node's ``+-``/``:-``
+    glyph."""
+    nodes = []
+    for line in simple_plan.splitlines():
+        m = _NODE.search(line)
+        if m:
+            nodes.append((m.start(), line[m.end():]))
+    n = 0
+    for i, (col, text) in enumerate(nodes):
+        if not (text.startswith("WindowGroupLimit") and text.rstrip().endswith("Partial")):
+            continue
+        depth = col
+        for pcol, ptext in reversed(nodes[:i]):
+            if pcol >= depth:
+                continue
+            depth = pcol
+            if ptext.startswith("Exchange hashpartitioning"):
+                n += 1
+                break
+            if ptext.startswith("WindowGroupLimit"):
+                break
+    return n
+
+
+def _topk_violation(name: str, simple_plan: str, merges: int) -> str | None:
+    found = _map_side_topk_partials(simple_plan)
+    if found >= merges:
+        return None
+    return (
+        f"{name}: {merges} top-k merge(s) expected a WindowGroupLimit "
+        f"Partial below a shuffle exchange, found {found}.  Catalyst plans "
+        f"the map-side partial only while k <= 1000 rows "
+        f"(spark.sql.optimizer.windowGroupLimitThreshold); past it every "
+        f"group's full row list funnels through one task.  Keep k (top_k, "
+        f"NGRAM_BLOCK_CAP) at or below 1000."
+    )
 
 
 @pytest.mark.parametrize("name", ALL_NAMES)
@@ -227,9 +313,32 @@ def test_plan_lint(name, spark):
             f"design, add the query to BNLJ_BOUNDED with the reason."
         )
 
+    if name in TOPK_MERGES:
+        msg = _topk_violation(name, simple, TOPK_MERGES[name])
+        assert msg is None, msg
+
     unpushed = _unpushed_scans(formatted)
     assert not unpushed, (
         f"{name}: scan filters that did not push to parquet (DataFilters "
         f"non-empty, PushedFilters empty — usually an expression wrapped "
         f"around the column): {unpushed}"
     )
+
+
+def test_topk_rule_rejects_k_past_threshold(spark):
+    """The top-k rule is not vacuous: the same one-window top-k passes at
+    k = 1000 and fails at k = 1001, where Catalyst stops planning the
+    map-side WindowGroupLimit Partial."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    rows = spark.range(5000).select((F.col("id") % 7).alias("g"), "id")
+    w = Window.partitionBy("g").orderBy(F.col("id").desc())
+
+    def topk_plan(k: int) -> str:
+        out = rows.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+        return plan_str(out, mode="simple")
+
+    assert _topk_violation("synthetic", topk_plan(1000), 1) is None
+    msg = _topk_violation("synthetic", topk_plan(1001), 1)
+    assert msg is not None and "1000" in msg

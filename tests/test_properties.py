@@ -967,7 +967,7 @@ def test_auc_rank_sum_scale_stress(spark):
 
     from pyspark.sql import functions as SF
 
-    from uda_spark.operators.sort import global_cumulative_sum
+    from uda_spark.operators.sort import global_cumulative_sums
     from uda_spark.plans.explain import plan_str
     from uda_spark.queries.evaluation import rank_sum_stats
 
@@ -983,7 +983,7 @@ def test_auc_rank_sum_scale_stress(spark):
     )
     # Plan contract: the cumulative relation itself never funnels the
     # 2M groups through one task.
-    cum = global_cumulative_sum(grp, ["score"], "c", "cum_before")
+    cum = global_cumulative_sums(grp, ["score"], ["c"], ["cum_before"])
     assert "SinglePartition" not in plan_str(cum, mode="simple")
 
     t0 = time.perf_counter()
@@ -1596,29 +1596,25 @@ class TestRound8LateTierInvariants:
                 assert r["max_str"] == str(max(nonnull))
 
 
-def test_global_cumulative_sums_matches_single_column_helper(spark):
-    from uda_spark.operators.sort import global_cumulative_sum, global_cumulative_sums
+def test_global_cumulative_sums_matches_python_prefix_sum(spark):
+    from uda_spark.operators.sort import global_cumulative_sums
 
     rows = [(k, (k * 7919) % 101, (k * 104729) % 53) for k in range(500)]
     df = spark.createDataFrame(rows, ["k", "a", "b"])
-    multi = {
-        r["k"]: (r["cum_a"], r["cum_b"])
-        for r in global_cumulative_sums(
-            df, ["k"], ["a", "b"], ["cum_a", "cum_b"], num_partitions=7
-        ).collect()
-    }
-    single_a = {
-        r["k"]: r["cum_a"]
-        for r in global_cumulative_sum(df, ["k"], "a", "cum_a", num_partitions=3).collect()
-    }
-    single_b = {
-        r["k"]: r["cum_b"]
-        for r in global_cumulative_sum(df, ["k"], "b", "cum_b", num_partitions=11).collect()
-    }
-    assert len(multi) == 500
-    for k, (ca, cb) in multi.items():
-        assert ca == single_a[k]
-        assert cb == single_b[k]
+    expected = {}
+    acc_a = acc_b = 0
+    for k, a, b in rows:  # already in k order
+        expected[k] = (acc_a, acc_b)
+        acc_a += a
+        acc_b += b
+    for n in (3, 7, 11):
+        got = {
+            r["k"]: (r["cum_a"], r["cum_b"])
+            for r in global_cumulative_sums(
+                df, ["k"], ["a", "b"], ["cum_a", "cum_b"], num_partitions=n
+            ).collect()
+        }
+        assert got == expected, f"num_partitions={n}"
 
 
 class TestKsAndBenfordInvariants:

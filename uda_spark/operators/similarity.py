@@ -60,16 +60,17 @@ def knn_bruteforce(
     vec_col: str,
     top_k: int = 5,
 ) -> DataFrame:
-    """Exact cosine top-k: broadcast queries × corpus scan, then
-    partial-then-final top-k (the hierarchical-merge shape of the
-    reference's LPQ/RPQ merger, src/Merger/MergeManager.cc:240-288).
+    """Exact cosine top-k: broadcast queries × corpus scan, then one
+    ``row_number() <= k`` window per query — the hierarchical-merge shape
+    of the reference's LPQ/RPQ merger, src/Merger/MergeManager.cc:240-288.
 
-    Stage 1 keeps top-k per (query, input-partition) — the window keys
-    spread over |queries| × |partitions|, so no single task ever sees more
-    than one partition's scores for a query.  Stage 2 merges the
-    |partitions| × k survivors per query — tiny — into the exact global
-    top-k.  Without stage 1, every corpus score for a query funnels
-    through one task: correct at sf0.1, dead at 100 TB.
+    Catalyst plans that window as ``WindowGroupLimit`` Partial (top-k per
+    query inside each map task, before the shuffle) → exchange on
+    query_id → ``WindowGroupLimit`` Final, so only |partitions| × k
+    survivors per query cross the shuffle and no task merges a query's
+    full score list.  The Partial is planned only while k ≤
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000);
+    tests/test_plan_lint.py fails a top-k query whose plan lacks it.
 
     Output: (query_id, neighbor_id, score) — score rounded to 6 dp, ties
     broken by neighbor id for full determinism (the partial/final split
@@ -87,19 +88,12 @@ def knn_bruteforce(
             F.col("q_id").alias("query_id"),
             F.col("c_id").alias("neighbor_id"),
             F.round(F.expr(score), 6).alias("score"),
-            F.spark_partition_id().alias("_part"),
         )
     )
     order = (F.col("score").desc(), F.col("neighbor_id"))
-    pw = Window.partitionBy("query_id", "_part").orderBy(*order)
-    partial = (
-        scored.withColumn("_prank", F.row_number().over(pw))
-        .where(F.col("_prank") <= top_k)
-        .drop("_part", "_prank")
-    )
     w = Window.partitionBy("query_id").orderBy(*order)
     return (
-        partial.withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= top_k)
         .select("query_id", "neighbor_id", "score", "rank")
     )
@@ -138,9 +132,10 @@ def binary_hamming_knn(
 ) -> DataFrame:
     """Hamming top-k over sign-bit signatures: broadcast query signatures
     × one corpus-signature scan; distance = popcount of the XOR'd halves
-    (two ``bit_count`` calls, both codegen'd); same partial-then-final
-    top-k discipline as :func:`knn_bruteforce`, so no task ever holds a
-    full corpus' scores for one query.  At 100 TB the signature relation
+    (two ``bit_count`` calls, both codegen'd); same single top-k window
+    as :func:`knn_bruteforce`, whose ``WindowGroupLimit`` Partial (k ≤
+    1000) keeps any task from holding a full corpus' scores for one
+    query.  At 100 TB the signature relation
     is the only thing scanned — 8 bytes/vector — which is why binary
     pre-ranking is the standard first pass before int8/PQ rerank.
     Ties (hamming is 0..64, ties are common) break by neighbor id.
@@ -160,19 +155,12 @@ def binary_hamming_knn(
             (
                 F.expr("bit_count(c_lo ^ q_lo)") + F.expr("bit_count(c_hi ^ q_hi)")
             ).alias("hamming"),
-            F.spark_partition_id().alias("_part"),
         )
     )
     order = (F.col("hamming").asc(), F.col("neighbor_id"))
-    pw = Window.partitionBy("query_id", "_part").orderBy(*order)
-    partial = (
-        scored.withColumn("_prank", F.row_number().over(pw))
-        .where(F.col("_prank") <= top_k)
-        .drop("_part", "_prank")
-    )
     w = Window.partitionBy("query_id").orderBy(*order)
     return (
-        partial.withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= top_k)
         .select("query_id", "neighbor_id", "hamming", "rank")
     )
@@ -216,8 +204,9 @@ def quantized_knn(
     """Approximate cosine top-k over quantized codes: the memory-bounded
     tier between brute force (exact, float-width) and LSH (sublinear
     candidates).  Same plan shape as :func:`knn_bruteforce` — broadcast
-    quantized queries, scan the (4× smaller) quantized corpus once,
-    partial-then-final top-k — with scores computed on int8 codes.
+    quantized queries, scan the (4× smaller) quantized corpus once, one
+    top-k window whose ``WindowGroupLimit`` Partial runs map-side for
+    k ≤ 1000 — with scores computed on int8 codes.
     Deterministic: quantization and scoring are exact integer arithmetic,
     so the ranking (including its quantization error) is value-hash
     checkable."""
@@ -240,19 +229,12 @@ def quantized_knn(
             F.col("q_id").alias("query_id"),
             F.col("c_id").alias("neighbor_id"),
             F.round(F.expr(score), 6).alias("score"),
-            F.spark_partition_id().alias("_part"),
         )
     )
     order = (F.col("score").desc(), F.col("neighbor_id"))
-    pw = Window.partitionBy("query_id", "_part").orderBy(*order)
-    partial = (
-        scored.withColumn("_prank", F.row_number().over(pw))
-        .where(F.col("_prank") <= top_k)
-        .drop("_part", "_prank")
-    )
     w = Window.partitionBy("query_id").orderBy(*order)
     return (
-        partial.withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= top_k)
         .select("query_id", "neighbor_id", "score", "rank")
     )
@@ -426,7 +408,7 @@ def _lsh_scored_candidates(
     n_tables: int,
 ) -> DataFrame:
     """Shared SRP-LSH candidate generation + exact scoring: (query_id,
-    neighbor_id, score, _part) for every candidate sharing a bucket with
+    neighbor_id, score) for every candidate sharing a bucket with
     the query in at least one table — consumed by :func:`lsh_knn`
     (top-k) and :func:`radius_search` (threshold)."""
     # Probe the dimensionality ONCE (tiny driver job) and share it with
@@ -513,7 +495,6 @@ def _lsh_scored_candidates(
             F.col("q_id").alias("query_id"),
             F.col("c_id").alias("neighbor_id"),
             F.round(F.expr(score), 6).alias("score"),
-            F.spark_partition_id().alias("_part"),
         )
     )
 
@@ -559,24 +540,20 @@ def lsh_knn(
 
     One exchange on (table, bucket); candidates dedup before scoring so
     each pair is scored once.  At 100 TB the candidate set per query is
-    ~L * corpus/2^k — the tunable fraction of a full scan.  Top-k is
-    partial-then-final like :func:`knn_bruteforce`: candidates for a hot
-    query can still be corpus-sized in the worst case, so stage 1 bounds
-    any single task's merge width at k per (query, partition).
+    ~L * corpus/2^k — the tunable fraction of a full scan.  Top-k is one
+    window like :func:`knn_bruteforce`: candidates for a hot query can
+    still be corpus-sized in the worst case, so Catalyst's
+    ``WindowGroupLimit`` Partial (planned for k ≤ 1000) bounds each map
+    task's output at k per query before the exchange, and the Final
+    after it merges the survivors.
     """
     scored = _lsh_scored_candidates(
         corpus, queries, id_col, vec_col, n_planes, n_tables
     )
     order = (F.col("score").desc(), F.col("neighbor_id"))
-    pw = Window.partitionBy("query_id", "_part").orderBy(*order)
-    partial = (
-        scored.withColumn("_prank", F.row_number().over(pw))
-        .where(F.col("_prank") <= top_k)
-        .drop("_part", "_prank")
-    )
     w = Window.partitionBy("query_id").orderBy(*order)
     return (
-        partial.withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= top_k)
         .select("query_id", "neighbor_id", "score", "rank")
     )
@@ -1905,8 +1882,10 @@ def pq_search(
     to every centroid, and a candidate's approximate distance is m table
     lookups summed in subspace order — no float vector math per
     candidate.  The coded corpus never shuffles: LUTs broadcast, scoring
-    is map-side, top-k is partial-then-final (the reference's LPQ/RPQ
-    hierarchical-merge shape, src/Merger/MergeManager.cc:240-288).
+    is map-side, and the top-k window is planned as ``WindowGroupLimit``
+    Partial per map task → exchange → Final for k ≤ 1000 (the
+    reference's LPQ/RPQ hierarchical-merge shape,
+    src/Merger/MergeManager.cc:240-288).
     """
     import numpy as np
     import pyarrow as pa
@@ -1918,7 +1897,7 @@ def pq_search(
     # sum folds the m table lookups in ascending subspace order with a
     # float64 accumulator on both sides (numpy's sum over m=8 elements
     # is sequential), so every `approx` double — and therefore the
-    # partial/final top-k ranking — is bit-identical to the retired
+    # top-k ranking — is bit-identical to the retired
     # interpreted `aggregate(sequence(...))` per-candidate lambda.
     lut = pq_query_luts(queries, codebook, id_col, vec_col, m, dim)
     lrows = _bounded_collect(lut, "pq_search query LUTs")
@@ -1964,19 +1943,12 @@ def pq_search(
             F.col("q_id").alias("query_id"),
             F.col("c_id").alias("neighbor_id"),
             "approx",
-            F.spark_partition_id().alias("_part"),
         )
     )
     order = (F.col("approx").asc(), F.col("neighbor_id").asc())
-    pw = Window.partitionBy("query_id", "_part").orderBy(*order)
-    partial = (
-        scored.withColumn("_prank", F.row_number().over(pw))
-        .where(F.col("_prank") <= top_k)
-        .drop("_part", "_prank")
-    )
     w = Window.partitionBy("query_id").orderBy(*order)
     return (
-        partial.withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= top_k)
         .select(
             "query_id",

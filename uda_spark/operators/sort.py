@@ -165,60 +165,6 @@ def global_rank(
     )
 
 
-def global_cumulative_sum(
-    df: DataFrame,
-    order_keys: Sequence[str],
-    value_col: str,
-    alias: str,
-    num_partitions: int | None = None,
-    result_cast: str | None = "long",
-) -> DataFrame:
-    """Exclusive running SUM(``value_col``) over the global ``order_keys``
-    order (sum of all rows STRICTLY before each row) without a
-    single-partition window.  ``result_cast=None`` keeps the sum's
-    natural type (e.g. exact DECIMAL running totals); the default long
-    cast suits counting applications.
-
-    Same two-pass shape as :func:`global_rank`: range-partition on the
-    keys, window within each physical partition, then add per-partition
-    subtotals collected as O(num_partitions) driver metadata and
-    broadcast back as a literal map.  A naive ``Window.orderBy(keys)``
-    forces every row through ONE task; this keeps the window partitioned
-    and scales with cluster width.  Requires unique key tuples per row
-    (group first — the callers feed distinct-key grouped relations).
-    """
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    key_cols = [F.col(k) for k in order_keys]
-    parted = df.repartitionByRange(n, *key_cols).sortWithinPartitions(*key_cols)
-    # snapshot() for the same reason as global_rank: the subtotal job
-    # and the window job must observe identical physical partition ids.
-    snap = parted.withColumn("_pid", F.spark_partition_id()).transform(snapshot_lazy)
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy(*key_cols)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    within = F.coalesce(F.sum(value_col).over(w), F.lit(0))
-
-    totals = sorted(
-        snap.groupBy("_pid").agg(F.sum(value_col).alias("_t")).collect(),
-        key=lambda r: r["_pid"],
-    )
-    offsets: dict[int, int] = {}
-    acc = 0
-    for row in totals:
-        offsets[row["_pid"]] = acc
-        acc += row["_t"] or 0
-    offset_map = F.create_map(
-        *[F.lit(v) for pid_off in offsets.items() for v in pid_off]
-    )
-    total = within + offset_map[F.col("_pid")]
-    if result_cast is not None:
-        total = total.cast(result_cast)
-    return snap.withColumn(alias, total).drop("_pid")
-
-
 def global_cumulative_extreme(
     df: DataFrame,
     order_keys: Sequence[str],
@@ -232,7 +178,7 @@ def global_cumulative_extreme(
     NULL for the global first row) without a single-partition window —
     the skyline/Pareto building block.
 
-    Same two-pass shape as :func:`global_cumulative_sum`: range-partition
+    Same two-pass shape as :func:`global_cumulative_sums`: range-partition
     on the keys, exclusive window per physical partition, then combine
     with the prefix-extreme of the per-partition extremes, collected as
     O(num_partitions) driver metadata and broadcast back as a literal
@@ -417,14 +363,24 @@ def global_cumulative_sums(
     num_partitions: int | None = None,
     result_cast: str | None = "long",
 ) -> DataFrame:
-    """Multi-column variant of :func:`global_cumulative_sum`: one range
-    exchange, one checkpoint, one O(num_partitions) subtotal collect —
-    and an exclusive running sum for EVERY column in ``value_cols``.
-    The single-column helper run N times pays N exchanges of the same
-    relation; cumulative CDF-style readouts (e.g. the two-sample KS
-    statistic needs both class counts cumulated over one score order)
-    fuse into a single pass here.  Same contract: unique key tuples per
-    row, offsets broadcast as literal maps.
+    """Exclusive running SUM of each of ``value_cols`` (sum of all rows
+    STRICTLY before each row), aliased by ``aliases``, over the global
+    ``order_keys`` order without a single-partition window.
+    ``result_cast=None`` keeps each sum's natural type (e.g. exact
+    DECIMAL running totals); the default long cast suits counting
+    applications.
+
+    Same two-pass shape as :func:`global_rank`: range-partition on the
+    keys, window within each physical partition, then add
+    per-partition subtotals collected as O(num_partitions) driver
+    metadata and broadcast back as a literal map.  A naive
+    ``Window.orderBy(keys)`` forces every row through ONE task; this
+    keeps the window partitioned and scales with cluster width.  All
+    columns share the one range exchange, checkpoint and subtotal
+    collect, so CDF-style readouts (e.g. the two-sample KS statistic
+    needs both class counts cumulated over one score order) cost a
+    single pass.  Requires unique key tuples per row (group first — the
+    callers feed distinct-key grouped relations).
     """
     assert len(value_cols) == len(aliases)
     spark = df.sparkSession

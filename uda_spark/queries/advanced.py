@@ -53,31 +53,27 @@ def text_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     NGRAM_BLOCK_CAP docs, chosen by a deterministic hash rank (the same
     engine-portable stratified-sample pattern as sample_stratified_hash) —
     block² is then bounded by CAP² regardless of corpus size.  The cap
-    itself is computed scale-safely: rank over SLIM (id, block) rows
-    only, partial-cap per input partition before the final per-block
-    rank (a corpus-scale block never funnels through one task — the
-    global top-CAP by a total order is a subset of every partition's
-    top-CAP), then broadcast the winning ids back so gram arrays are
-    built ONLY for survivors.  Both engines apply the identical cap, so
-    the oracle stays exact; at the test SFs every block is under the cap
-    and results are unchanged.  The unblocked, uncapped scale path is
-    MinHash LSH (dedup_minhash_near_pairs); this exact variant is its
-    quality oracle.
+    itself is computed scale-safely: one per-block ``row_number() <= CAP``
+    window over SLIM (id, block) rows only, which Catalyst plans as
+    ``WindowGroupLimit`` Partial per map task → exchange → Final (a
+    corpus-scale block never funnels through one task — the global
+    top-CAP by a total order is a subset of every partition's top-CAP;
+    the Partial is planned only while CAP ≤ 1000, the default
+    ``spark.sql.optimizer.windowGroupLimitThreshold``), then broadcast
+    the winning ids back so gram arrays are built ONLY for survivors.
+    Both engines apply the identical cap, so the oracle stays exact; at
+    the test SFs every block is under the cap and results are unchanged.
+    The unblocked, uncapped scale path is MinHash LSH
+    (dedup_minhash_near_pairs); this exact variant is its quality
+    oracle.
     """
     hash_rank = portable.hash60("CAST(doc_id AS STRING)", "spark")
     docs = t(spark, sf_dir, "documents")
     slim = docs.select("doc_id", "lang", "source")
     cap_order = (F.expr(hash_rank), F.col("doc_id"))
-    pw = Window.partitionBy("lang", "source", "_part").orderBy(*cap_order)
-    partial = (
-        slim.withColumn("_part", F.spark_partition_id())
-        .withColumn("_prn", F.row_number().over(pw))
-        .where(F.col("_prn") <= NGRAM_BLOCK_CAP)
-        .drop("_part", "_prn")
-    )
     w_cap = Window.partitionBy("lang", "source").orderBy(*cap_order)
     keep = (
-        partial.withColumn("_rn", F.row_number().over(w_cap))
+        slim.withColumn("_rn", F.row_number().over(w_cap))
         .where(F.col("_rn") <= NGRAM_BLOCK_CAP)
         .select("doc_id")
     )
@@ -815,22 +811,17 @@ def sim_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("q.q_id").alias("query_id"),
             F.col("c.vec_id").alias("neighbor_id"),
             F.round(F.expr(portable.cosine_from_ints(dot, qn, cn)), 6).alias("score"),
-            F.spark_partition_id().alias("_part"),
         )
     )
-    # partial-then-final top-k: a probed cluster is corpus/k-sized, so a
-    # single per-query window would funnel it through one task (same
-    # hierarchical-merge shape as operators/similarity.knn_bruteforce)
+    # a probed cluster is corpus/k-sized, so the top-k must not funnel it
+    # through one task: Catalyst plans this window as WindowGroupLimit
+    # Partial per map task → exchange → Final (k = 5 ≤ 1000, the
+    # threshold; same hierarchical-merge shape as
+    # operators/similarity.knn_bruteforce)
     order = (F.col("score").desc(), F.col("neighbor_id"))
-    pw = Window.partitionBy("query_id", "_part").orderBy(*order)
-    partial = (
-        scored.withColumn("_prank", F.row_number().over(pw))
-        .where(F.col("_prank") <= 5)
-        .drop("_part", "_prank")
-    )
     w = Window.partitionBy("query_id").orderBy(*order)
     return (
-        partial.withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= 5)
         .select("query_id", "neighbor_id", "score", F.col("rank").cast("int").alias("rank"))
     )

@@ -24,7 +24,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from uda_spark.operators.sort import (
-    global_cumulative_sum,
     global_cumulative_sums,
     global_rank,
     grouped_global_cumulative_sum,
@@ -59,7 +58,7 @@ def rank_sum_stats(grp: DataFrame) -> DataFrame:
     (doubled U), ``auc_ppm``.
 
     Scale shape: ``cum_before`` uses the two-pass range-partitioned
-    cumulative sum (:func:`uda_spark.operators.sort.global_cumulative_sum`)
+    cumulative sum (:func:`uda_spark.operators.sort.global_cumulative_sums`)
     — per-partition windows plus O(num_partitions) broadcast offsets —
     so NO single-partition window exists even when the score is
     user-cardinality (round-7's formulation bounded the window input by
@@ -71,7 +70,7 @@ def rank_sum_stats(grp: DataFrame) -> DataFrame:
     exact up to ~6e9 balanced users (u2 <= n^2/2 < 2^63), stated here as
     the contract bound.
     """
-    ranked = global_cumulative_sum(grp, ["score"], "c", "cum_before")
+    ranked = global_cumulative_sums(grp, ["score"], ["c"], ["cum_before"])
     s = ranked.agg(
         F.sum("p").cast("long").alias("n_pos"),
         F.sum(F.col("c") - F.col("p")).cast("long").alias("n_neg"),
@@ -2559,7 +2558,7 @@ def ml_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one groupBy to (value, group) counts, one bounded
     re-aggregation to distinct values, the range-partitioned two-pass
-    cumulative count (:func:`global_cumulative_sum` — no
+    cumulative count (:func:`global_cumulative_sums` — no
     single-partition window even with order-cardinality distinct
     values), a value-keyed shuffle join of the two, and a per-group
     reduction over |groups| rows.  Totals are 1-row aggregates.
@@ -2579,7 +2578,7 @@ def ml_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("long").alias("cnt"))
     )
     vt = vg.groupBy("v").agg(F.sum("cnt").cast("long").alias("c"))
-    rk = global_cumulative_sum(vt, ["v"], "c", "cum_before")
+    rk = global_cumulative_sums(vt, ["v"], ["c"], ["cum_before"])
     gs = (
         vg.join(rk, on="v")
         .groupBy("g")
@@ -2902,11 +2901,11 @@ def ml_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     grp = spark.sql(
         _WSR_PAIRS.format(ev="_wsr_events") + "SELECT * FROM grp"
     )
-    rk = global_cumulative_sum(
+    rk = global_cumulative_sums(
         grp.selectExpr("absd", "CAST(c AS BIGINT) AS c", "CAST(p AS BIGINT) AS p"),
         ["absd"],
-        "c",
-        "cum_before",
+        ["c"],
+        ["cum_before"],
     )
     s = rk.agg(
         F.sum("c").cast("long").alias("n_pairs"),

@@ -474,28 +474,28 @@ def lineitem_abc_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     converts to double, once, deterministically — a float cumsum or a
     float grand total flips boundary rows between classes across
     engines/partitionings.  The running total itself is the two-pass
-    range-partitioned ``global_cumulative_sum`` (round 8, with
+    range-partitioned ``global_cumulative_sums`` (round 8, with
     ``result_cast=None`` keeping exact DECIMAL) — no single-partition
     window even at full-catalog part cardinality.
     """
     li = t(spark, sf_dir, "lineitem")
     from uda_spark.cache import tracked_persist
-    from uda_spark.operators.sort import global_cumulative_sum
+    from uda_spark.operators.sort import global_cumulative_sums
     from uda_spark.queries.common import revenue_expr
 
     # rev (the full lineitem aggregate) feeds THREE executions without a
-    # persist: the grand total, global_cumulative_sum's range-boundary
+    # persist: the grand total, global_cumulative_sums' range-boundary
     # sampling pass, and its actual exchange (guide §5: reuse >
     # recompute).  Released by release_persisted().
     rev = tracked_persist(
         li.groupBy("l_partkey").agg(F.sum(revenue_expr()).alias("rev_d"))
     )
     tot = rev.agg(F.sum("rev_d").cast("double").alias("t"))
-    cum_excl = global_cumulative_sum(
+    cum_excl = global_cumulative_sums(
         rev.withColumn("_neg_rev", -F.col("rev_d")),
         ["_neg_rev", "l_partkey"],
-        "rev_d",
-        "cum_before",
+        ["rev_d"],
+        ["cum_before"],
         result_cast=None,
     )
     c = (
@@ -2935,7 +2935,7 @@ def orders_pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over customer cardinality), then ONE bounded aggregation
     with the 1-row total broadcast.
     """
-    from uda_spark.operators.sort import global_cumulative_sum
+    from uda_spark.operators.sort import global_cumulative_sums
 
     rev = (
         t(spark, sf_dir, "orders")
@@ -2947,8 +2947,8 @@ def orders_pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("neg", -F.col("cents"))
     )
-    cum = global_cumulative_sum(
-        rev, ["neg", "o_custkey"], "cents", "cum_before", result_cast=None
+    cum = global_cumulative_sums(
+        rev, ["neg", "o_custkey"], ["cents"], ["cum_before"], result_cast=None
     ).withColumn("c", F.col("cum_before") + F.col("cents"))
     tot = rev.agg(
         F.count("*").cast("long").alias("n"),

@@ -473,19 +473,12 @@ def ivfpq_search(
             F.col("q_id").alias("query_id"),
             F.col("c_id").alias("neighbor_id"),
             F.expr(adc).alias("approx"),
-            F.spark_partition_id().alias("_part"),
         )
     )
     order = (F.col("approx").asc(), F.col("neighbor_id").asc())
-    pw = Window.partitionBy("query_id", "_part").orderBy(*order)
-    partial = (
-        scored.withColumn("_prank", F.row_number().over(pw))
-        .where(F.col("_prank") <= TOP_K)
-        .drop("_part", "_prank")
-    )
     w = Window.partitionBy("query_id").orderBy(*order)
     return (
-        partial.withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= TOP_K)
         .select(
             "query_id",
@@ -1098,19 +1091,12 @@ def sim_filtered_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
                 6,
             ).alias("score"),
-            F.spark_partition_id().alias("_part"),
         )
     )
     order = (F.col("score").desc(), F.col("neighbor_id").asc())
-    pw = Window.partitionBy("query_id", "_part").orderBy(*order)
-    partial = (
-        scored.withColumn("_prank", F.row_number().over(pw))
-        .where(F.col("_prank") <= TOP_K)
-        .drop("_part", "_prank")
-    )
     w = Window.partitionBy("query_id").orderBy(*order)
     return (
-        partial.withColumn("rank", F.row_number().over(w).cast("int"))
+        scored.withColumn("rank", F.row_number().over(w).cast("int"))
         .where(F.col("rank") <= TOP_K)
     )
 
@@ -1268,8 +1254,9 @@ def sim_late_interaction_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: sub-vector splitting is map-only (nested array HOFs,
     no explode — the corpus row count never multiplies); the search is
-    broadcast queries x one corpus scan with the same partial-then-final
-    top-k as `sim_knn_bruteforce`.  A production multi-vector index adds
+    broadcast queries x one corpus scan with the same single top-k window
+    as `sim_knn_bruteforce` (``WindowGroupLimit`` Partial per map task →
+    exchange → Final, planned for k ≤ 1000).  A production multi-vector index adds
     the IVF/PQ tiers this module already provides per sub-vector.
     """
     emb = t(spark, sf_dir, "embeddings")
@@ -1299,19 +1286,12 @@ def sim_late_interaction_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
             F.expr(maxsim).alias("maxsim_fp"),
-            F.spark_partition_id().alias("_part"),
         )
     )
     order = (F.col("maxsim_fp").desc(), F.col("neighbor_id"))
-    pw = Window.partitionBy("query_id", "_part").orderBy(*order)
-    partial = (
-        scored.withColumn("_prank", F.row_number().over(pw))
-        .where(F.col("_prank") <= MAXSIM_TOP_K)
-        .drop("_part", "_prank")
-    )
     w = Window.partitionBy("query_id").orderBy(*order)
     return (
-        partial.withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= MAXSIM_TOP_K)
         .select(
             "query_id",
@@ -1832,11 +1812,13 @@ def sim_recall_vs_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE broadcast-queries corpus scan produces the scored
     relation; the probe assignment is a (queries × k)-row bounded
-    relation; each nprobe's top-{TOP_K} uses the partial-then-final
-    two-stage window (partition-local top-k first — no single task ever
-    sees a query's full score stream); the scanned-share arithmetic is
-    O(k) metadata.  Cites the reference's LPQ/RPQ hierarchical merge
-    (src/Merger/MergeManager.cc:240-288) for the two-stage shape.
+    relation; the truth top-{TOP_K} and each nprobe's ANN top-{TOP_K} are
+    one ``row_number()`` window each, which Catalyst plans as
+    ``WindowGroupLimit`` Partial per map task → exchange → Final (k ≤
+    1000, the default threshold) — no single task ever sees a query's
+    full score stream; the scanned-share arithmetic is O(k) metadata.
+    Cites the reference's LPQ/RPQ hierarchical merge
+    (src/Merger/MergeManager.cc:240-288) for the two-level shape.
     """
     emb = t(spark, sf_dir, "embeddings")
     iv = emb.select(
@@ -1894,15 +1876,11 @@ def sim_recall_vs_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_id").alias("neighbor_id"),
             "nlabel",
             F.round(F.expr(score), 6).alias("score"),
-            F.spark_partition_id().alias("_part"),
         )
     )
     order = (F.col("score").desc(), F.col("neighbor_id"))
-    tw = Window.partitionBy("query_id", "_part").orderBy(*order)
     truth = (
-        scored.withColumn("_pr", F.row_number().over(tw))
-        .where(F.col("_pr") <= TOP_K)
-        .withColumn(
+        scored.withColumn(
             "rnk",
             F.row_number().over(Window.partitionBy("query_id").orderBy(*order)),
         )
@@ -1921,11 +1899,8 @@ def sim_recall_vs_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(nps))
         .where(F.col("pr") <= F.col("np"))
     )
-    aw = Window.partitionBy("np", "query_id", "_part").orderBy(*order)
     ann = (
-        cand.withColumn("_pr2", F.row_number().over(aw))
-        .where(F.col("_pr2") <= TOP_K)
-        .withColumn(
+        cand.withColumn(
             "rnk",
             F.row_number().over(Window.partitionBy("np", "query_id").orderBy(*order)),
         )
