@@ -3,13 +3,17 @@ and downstream composition with the similarity operators."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
 from uda_spark.multimodal import (
+    ahash_images,
     attach_blob_column,
+    decode_audio_frames,
     decode_images,
     extract_features,
+    resize_images,
     sample_frames,
 )
 from uda_spark.sources.tables import load_table
@@ -20,6 +24,17 @@ def _blobs(spark, n=50):
     # which would make the map-only plan assertions below vacuously fail
     docs = load_table(spark, SF_SMOKE, "documents").where(F.col("doc_id") < n)
     return attach_blob_column(docs, "text", "doc_id")
+
+
+# every blob operator: (its name in error messages, a call over _blobs)
+BLOB_OPS = {
+    "decode": ("decode_images", lambda df: decode_images(df, "doc_id")),
+    "resize": ("resize_images", lambda df: resize_images(df, 8, 8, "doc_id")),
+    "features": ("extract_features", lambda df: extract_features(df, "doc_id")),
+    "ahash": ("ahash_images", lambda df: ahash_images(df, "doc_id")),
+    "frames": ("sample_frames", lambda df: sample_frames(df, 4, "doc_id")),
+    "audio": ("decode_audio_frames", lambda df: decode_audio_frames(df, "doc_id")),
+}
 
 
 def test_blob_schema(spark):
@@ -37,11 +52,38 @@ def test_decode_deterministic_and_complete(spark):
     assert len(a) == blobs.count()
 
 
-def test_decode_is_map_only(spark):
-    from uda_spark.plans.explain import count_exchanges
+@pytest.mark.parametrize("op", list(BLOB_OPS))
+def test_decode_is_map_only(spark, op):
+    """Every blob operator is one map-only Arrow kernel: no shuffle, a
+    MapInArrow node, and no pandas twin."""
+    from uda_spark.plans.explain import count_exchanges, plan_str
 
-    decoded = decode_images(_blobs(spark), "doc_id")
-    assert count_exchanges(decoded) == 0
+    out = BLOB_OPS[op][1](_blobs(spark))
+    assert count_exchanges(out) == 0
+    plan = plan_str(out, mode="simple")
+    assert "MapInArrow" in plan and "MapInPandas" not in plan
+
+
+@pytest.mark.parametrize("op", list(BLOB_OPS))
+def test_null_blob_raises_named_error(spark, op):
+    """A NULL ``data`` row (an out-of-line blob not fetched) fails with a
+    ValueError naming the operator, not an error from inside the codec."""
+    name, run = BLOB_OPS[op]
+    nulled = _blobs(spark, n=4).withColumn("data", F.lit(None).cast("binary"))
+    with pytest.raises(
+        Exception,
+        match=rf"ValueError: {name} received a NULL blob .*filter NULL blobs upstream",
+    ):
+        run(nulled).collect()
+
+
+def test_int_ids_widen_to_long(spark):
+    """Every operator's output ``id`` is long, also for an int id column."""
+    blobs = _blobs(spark, n=4).withColumn("doc_id", F.col("doc_id").cast("int"))
+    for _, run in BLOB_OPS.values():
+        out = run(blobs)
+        assert dict(out.dtypes)["id"] == "bigint"
+        assert sorted({r["id"] for r in out.collect()}) == [0, 1, 2, 3]
 
 
 def test_features_feed_similarity(spark):
@@ -60,98 +102,6 @@ def test_frame_sampling_fanout(spark):
     frames = sample_frames(_blobs(spark, n=10), n_frames=4, id_col="doc_id")
     counts = frames.groupBy("id").count().collect()
     assert len(counts) == 10 and all(r["count"] == 4 for r in counts)
-
-
-class TestRealCodecSeam:
-    """The use_real_codec=True branch is fully wired to PIL; this build
-    environment ships no pillow (and installs are not permitted), so these
-    run wherever pillow exists and skip here — the seam itself (the
-    ImportError guard) is exercised unconditionally."""
-
-    def test_real_codec_raises_without_pillow(self, spark):
-        from uda_spark.multimodal.blob import _have_pil
-
-        if _have_pil():
-            import pytest
-
-            pytest.skip("pillow present — covered by the roundtrip tests below")
-        import pytest
-        from py4j.protocol import Py4JJavaError
-        from pyspark.errors import PySparkException
-
-        with pytest.raises((Py4JJavaError, PySparkException, ImportError)):
-            decode_images(_blobs(spark, n=2), "doc_id", use_real_codec=True).collect()
-
-    def test_real_decode_dimensions_match_png(self, spark):
-        import pytest
-
-        from uda_spark.multimodal.blob import _have_pil
-
-        if not _have_pil():
-            pytest.skip("pillow not installed in this environment")
-        import io
-
-        from PIL import Image
-
-        buf = io.BytesIO()
-        Image.new("RGB", (17, 9), (250, 10, 10)).save(buf, format="PNG")
-        png = buf.getvalue()
-        df = spark.createDataFrame([(1, png)], "doc_id long, payload binary").select(
-            "doc_id",
-            F.col("payload").alias("data"),
-            F.expr(
-                "named_struct('mime', 'image/png', 'width', 17, 'height', 9, "
-                "'duration_ms', 0, 'n_bytes', CAST(length(payload) AS BIGINT))"
-            ).alias("meta"),
-        )
-        row = decode_images(df, "doc_id", use_real_codec=True).first()
-        assert (row["width"], row["height"]) == (17, 9)
-
-    def test_real_resize_targets_dimensions(self, spark):
-        import pytest
-
-        from uda_spark.multimodal.blob import _have_pil
-
-        if not _have_pil():
-            pytest.skip("pillow not installed in this environment")
-        import io
-
-        from PIL import Image
-
-        from uda_spark.multimodal import resize_images
-
-        buf = io.BytesIO()
-        Image.new("RGB", (31, 13), (0, 128, 255)).save(buf, format="PNG")
-        png = buf.getvalue()
-        df = spark.createDataFrame([(7, png)], "doc_id long, payload binary").select(
-            "doc_id",
-            F.col("payload").alias("data"),
-            F.expr(
-                "named_struct('mime', 'image/png', 'width', 31, 'height', 13, "
-                "'duration_ms', 0, 'n_bytes', CAST(length(payload) AS BIGINT))"
-            ).alias("meta"),
-        )
-        row = resize_images(df, 8, 8, "doc_id", use_real_codec=True).first()
-        assert (row["src_width"], row["src_height"]) == (31, 13)
-        assert (row["width"], row["height"]) == (8, 8)
-
-
-def test_ahash_arrow_matches_pandas(spark):
-    """The mapInArrow and mapInPandas aHash paths must be bit-identical
-    — same codec seam, different Python batch transport."""
-    from pyspark.sql import functions as F
-
-    from tests.conftest import SF_SMOKE
-    from uda_spark import multimodal as MM
-    from uda_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    blobs = MM.attach_blob_column(docs, "text", "doc_id")
-    a = sorted((r.id, r.ahash) for r in MM.ahash_images(blobs, "doc_id").collect())
-    b = sorted(
-        (r.id, r.ahash) for r in MM.ahash_images_arrow(blobs, "doc_id").collect()
-    )
-    assert a == b and len(a) > 0
 
 
 class TestAudioFrames:
@@ -174,16 +124,3 @@ class TestAudioFrames:
         for r in rows:
             assert r["n"] == AUDIO_N_SAMPLES // AUDIO_FRAME_LEN
             assert 0 <= r["lo"] <= r["hi"] <= 255 * AUDIO_FRAME_LEN
-
-    def test_real_codec_seam_raises(self, spark):
-        import pytest as _pt
-
-        from tests.conftest import SF_SMOKE
-        from uda_spark import multimodal as MM
-        from uda_spark.sources.tables import load_table
-
-        docs = load_table(spark, SF_SMOKE, "documents").limit(2)
-        blobs = MM.attach_blob_column(docs, "text", "doc_id", mime="audio/pcm")
-        out = MM.decode_audio_frames(blobs, id_col="doc_id", use_real_codec=True)
-        with _pt.raises(Exception, match="soundfile|PythonException"):
-            out.collect()

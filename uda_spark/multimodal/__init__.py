@@ -1,7 +1,6 @@
 from uda_spark.multimodal.blob import (
     BLOB_META_SCHEMA,
     ahash_images,
-    ahash_images_arrow,
     attach_blob_column,
     decode_audio_frames,
     decode_images,
@@ -13,7 +12,6 @@ from uda_spark.multimodal.blob import (
 __all__ = [
     "BLOB_META_SCHEMA",
     "ahash_images",
-    "ahash_images_arrow",
     "attach_blob_column",
     "decode_audio_frames",
     "decode_images",

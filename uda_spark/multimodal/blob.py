@@ -2,31 +2,32 @@
 
 Convention: a modality column is ``binary`` data alongside a
 ``struct<mime, width, height, duration_ms, n_bytes>`` metadata column.
-Heavy per-item work (decode, feature extraction, frame sampling) runs as
-Arrow-batched ``mapInPandas`` — the Spark-side plumbing (schema,
-partitioning, batch shape) is real and tested; the codec step defaults to
-a deterministic stub so results never depend on the environment.  The
-``use_real_codec=True`` branch is fully wired to PIL
-(``Image.open``/``Image.resize``); this build environment ships neither
-pillow nor ffmpeg and package installation is not permitted, so the
-real-codec test is skip-gated on ``_have_pil()`` and the branch is
-exercised wherever pillow exists (video frame extraction has no
-equivalent pure-Python fallback, so frame sampling keeps its byte-slicing
-stub with ffmpeg named at the seam).
+Heavy per-item work (decode, resize, feature extraction, aHash, frame
+sampling, audio framing) runs as ``mapInArrow`` kernels over pyarrow
+RecordBatches, the one buffer format this engine hands its Python
+workers.  The Spark-side plumbing (schema, partitioning, batch shape) is
+real and tested; the codec step is a deterministic md5-derived stub, so
+results never depend on the environment and the multimodal queries carry
+exact DuckDB oracles.  A real codec (PIL, ffmpeg, soundfile) would
+replace the stub call inside the kernel, at the same spot.
 
 Scale notes: blobs never act as shuffle keys; all operators here are
 map-only (zero shuffle), so throughput scales linearly with executors.
 Real deployments store large blobs out-of-line (object store) and keep a
 pointer + metadata in the table; ``attach_blob_column`` models the inline
-case, the pointer case is the same schema with ``data`` nulled.
+case.  The kernels need the bytes inline: a pointer table must fetch them
+into ``data`` first, and a NULL ``data`` row raises a ValueError that
+names the operator.  Every output ``id`` is ``long``; the kernels cast
+the input id column to int64, so narrower integer ids widen as the
+schemas declare.
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -53,15 +54,6 @@ BLOB_META_SCHEMA = StructType(
         StructField("n_bytes", LongType()),
     ]
 )
-
-def _have_pil() -> bool:  # pragma: no cover - library absent here
-    try:
-        from PIL import Image  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
 
 def attach_blob_column(
     df: DataFrame, payload_col: str, id_col: str, mime: str = "image/png"
@@ -121,67 +113,46 @@ def _hash60_py(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
 
 
-def decode_images(
-    df: DataFrame, id_col: str = "id", use_real_codec: bool = False
-) -> DataFrame:
+def decode_images(df: DataFrame, id_col: str = "id") -> DataFrame:
     """Decode blobs to pixel buffers and emit per-image stats
     (``pixels_fp`` = 60-bit fingerprint of the pixel buffer).
 
-    Arrow-batched mapInPandas: each batch is a pandas DataFrame of blobs;
-    Map-only — no shuffle.  The default path is the deterministic stub
-    codec regardless of what libraries happen to be installed, so query
-    results never depend on the environment; ``use_real_codec=True`` is
-    the explicit opt-in seam where a real decoder (PIL) plugs in, and
-    raises until one is wired.  Stub output is deterministic and
+    Map-only ``mapInArrow`` — no shuffle.  The codec is the
+    deterministic stub :func:`_fake_decode_hex`, so query results never
+    depend on what libraries happen to be installed.  Its output is
     md5-derived, so queries over it carry exact DuckDB oracles
     (queries/pipelines.py multimodal_decode_stats).
     """
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if use_real_codec:  # pragma: no cover - needs pillow (absent here)
-                if not _have_pil():
-                    raise ImportError("use_real_codec=True requires pillow")
-                import io
-
-                from PIL import Image
-
-                ws, hs, fps = [], [], []
-                for blob in pdf["data"]:
-                    with Image.open(io.BytesIO(blob)) as im:
-                        ws.append(im.width)
-                        hs.append(im.height)
-                        # same fingerprint domain as the stub: hash60 over
-                        # the hex of the decoded pixel buffer
-                        fps.append(_hash60_py(im.convert("RGB").tobytes().hex()))
-                yield pd.DataFrame(
-                    {
-                        "id": pdf["_id"],
-                        "width": pd.Series(ws, dtype="int32"),
-                        "height": pd.Series(hs, dtype="int32"),
-                        "pixels_fp": fps,
-                    }
+    def decode(batches):
+        for batch in batches:
+            data = batch.column("data")
+            if data.null_count:
+                raise ValueError(
+                    "decode_images received a NULL blob — filter NULL blobs upstream"
                 )
-                continue
-            widths = pdf["meta"].map(lambda m: m["width"]).astype("int32")
-            heights = pdf["meta"].map(lambda m: m["height"]).astype("int32")
+            meta = batch.column("meta")
+            widths, heights = meta.field("width"), meta.field("height")
             fps = [
                 _hash60_py(_fake_decode_hex(blob, w, h))
-                for blob, w, h in zip(pdf["data"], widths, heights)
+                for blob, w, h in zip(
+                    data.to_pylist(), widths.to_pylist(), heights.to_pylist()
+                )
             ]
-            yield pd.DataFrame(
-                {
-                    "id": pdf["_id"],
-                    "width": widths,
-                    "height": heights,
-                    "pixels_fp": fps,
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("_id").cast(pa.int64()),
+                    widths,
+                    heights,
+                    pa.array(fps, pa.int64()),
+                ],
+                names=["id", "width", "height", "pixels_fp"],
             )
 
     src = PART.ensure_min_partitions(
         df.select(F.col(id_col).alias("_id"), "data", "meta")
     )
-    return src.mapInPandas(decode, schema=DECODED_SCHEMA)
+    return src.mapInArrow(decode, schema=DECODED_SCHEMA)
 
 
 RESIZED_SCHEMA = StructType(
@@ -207,76 +178,52 @@ def _fake_resize_hex(orig_hex: str, tw: int, th: int) -> str:
 
 
 def resize_images(
-    df: DataFrame,
-    target_w: int,
-    target_h: int,
-    id_col: str = "id",
-    use_real_codec: bool = False,
+    df: DataFrame, target_w: int, target_h: int, id_col: str = "id"
 ) -> DataFrame:
     """Decode + resize blobs to (target_w, target_h) and fingerprint the
     resampled pixel buffer — the thumbnail/normalization step of an image
     training pipeline.
 
-    Arrow-batched mapInPandas, map-only (no shuffle): at 100 TB
-    throughput scales linearly with executors and blobs never act as
-    shuffle keys.  The default path is the deterministic stub regardless
-    of installed libraries (environment never changes results);
-    ``use_real_codec=True`` is the explicit seam where PIL's
-    ``Image.resize`` plugs in, and raises until wired.
+    Map-only ``mapInArrow`` (no shuffle): at 100 TB throughput scales
+    linearly with executors and blobs never act as shuffle keys.  Decode
+    and resampling are the deterministic stubs, so the environment never
+    changes results.
     """
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if use_real_codec:  # pragma: no cover - needs pillow (absent here)
-                if not _have_pil():
-                    raise ImportError("use_real_codec=True requires pillow")
-                import io
-
-                from PIL import Image
-
-                sws, shs, fps = [], [], []
-                for blob in pdf["data"]:
-                    with Image.open(io.BytesIO(blob)) as im:
-                        sws.append(im.width)
-                        shs.append(im.height)
-                        resized = im.convert("RGB").resize(
-                            (target_w, target_h), Image.LANCZOS
-                        )
-                        fps.append(_hash60_py(resized.tobytes().hex()))
-                yield pd.DataFrame(
-                    {
-                        "id": pdf["_id"],
-                        "src_width": pd.Series(sws, dtype="int32"),
-                        "src_height": pd.Series(shs, dtype="int32"),
-                        "width": [target_w] * len(pdf),
-                        "height": [target_h] * len(pdf),
-                        "pixels_fp": fps,
-                    }
+    def resize(batches):
+        for batch in batches:
+            data = batch.column("data")
+            if data.null_count:
+                raise ValueError(
+                    "resize_images received a NULL blob — filter NULL blobs upstream"
                 )
-                continue
-            widths = pdf["meta"].map(lambda m: m["width"]).astype("int32")
-            heights = pdf["meta"].map(lambda m: m["height"]).astype("int32")
+            meta = batch.column("meta")
+            widths, heights = meta.field("width"), meta.field("height")
             fps = [
                 _hash60_py(
                     _fake_resize_hex(_fake_decode_hex(blob, w, h), target_w, target_h)
                 )
-                for blob, w, h in zip(pdf["data"], widths, heights)
+                for blob, w, h in zip(
+                    data.to_pylist(), widths.to_pylist(), heights.to_pylist()
+                )
             ]
-            yield pd.DataFrame(
-                {
-                    "id": pdf["_id"],
-                    "src_width": widths,
-                    "src_height": heights,
-                    "width": [target_w] * len(pdf),
-                    "height": [target_h] * len(pdf),
-                    "pixels_fp": fps,
-                }
+            n = batch.num_rows
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("_id").cast(pa.int64()),
+                    widths,
+                    heights,
+                    pa.array([target_w] * n, pa.int32()),
+                    pa.array([target_h] * n, pa.int32()),
+                    pa.array(fps, pa.int64()),
+                ],
+                names=["id", "src_width", "src_height", "width", "height", "pixels_fp"],
             )
 
     src = PART.ensure_min_partitions(
         df.select(F.col(id_col).alias("_id"), "data", "meta")
     )
-    return src.mapInPandas(resize, schema=RESIZED_SCHEMA)
+    return src.mapInArrow(resize, schema=RESIZED_SCHEMA)
 
 
 FEATURES_SCHEMA = StructType(
@@ -300,56 +247,28 @@ def extract_features(df: DataFrame, id_col: str = "id", dim: int = 8) -> DataFra
     if dim > 16:
         raise ValueError("dim > 16 needs more than one md5 block")
 
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            embs = []
-            for blob in pdf["data"]:
-                h = hashlib.md5(blob.hex().encode()).digest()
-                embs.append([float(b) for b in h[:dim]])
-            yield pd.DataFrame(
-                {
-                    "id": pdf["_id"],
-                    "n_bytes": [len(b) for b in pdf["data"]],
-                    "embedding": embs,
-                }
-            )
-
-    src = PART.ensure_min_partitions(df.select(F.col(id_col).alias("_id"), "data"))
-    return src.mapInPandas(feats, schema=FEATURES_SCHEMA)
-
-
-def ahash_images_arrow(df: DataFrame, id_col: str = "id") -> DataFrame:
-    """Arrow-native twin of :func:`ahash_images` (``mapInArrow``): the
-    same 16-bit average hash computed straight from pyarrow
-    RecordBatches, skipping the Arrow→pandas→Arrow conversion that
-    ``mapInPandas`` pays per batch.  Output is bit-identical to the
-    pandas path (asserted in tests); use whichever profiling favors —
-    on wide binary columns the pandas materialization is pure overhead,
-    so this is the intended shape for blob-heavy stages at scale.
-    Measured at sf0.1 (5k blobs, min-of-3, warm): pandas 0.332s vs
-    arrow 0.299s — ~10% at this blob size; the gap widens with blob
-    width since the pandas copy is O(bytes).
-    """
-    import pyarrow as pa
-
-    def ah(batches):
+    def feats(batches):
         for batch in batches:
-            ids = batch.column("_id")
-            hashes = []
-            for blob in batch.column("data"):
-                hb = hashlib.md5(blob.as_py().hex().encode()).digest()[:16]
-                total = sum(hb)
-                v = 0
-                for i, b in enumerate(hb):
-                    if 16 * b >= total:
-                        v |= 1 << i
-                hashes.append(v)
+            data = batch.column("data")
+            if data.null_count:
+                raise ValueError(
+                    "extract_features received a NULL blob — filter NULL blobs upstream"
+                )
+            embs = [
+                [float(b) for b in hashlib.md5(blob.hex().encode()).digest()[:dim]]
+                for blob in data.to_pylist()
+            ]
             yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(hashes, type=pa.int32())], names=["id", "ahash"]
+                [
+                    batch.column("_id").cast(pa.int64()),
+                    pc.binary_length(data).cast(pa.int64()),
+                    pa.array(embs, pa.list_(pa.float32())),
+                ],
+                names=["id", "n_bytes", "embedding"],
             )
 
     src = PART.ensure_min_partitions(df.select(F.col(id_col).alias("_id"), "data"))
-    return src.mapInArrow(ah, schema=AHASH_SCHEMA)
+    return src.mapInArrow(feats, schema=FEATURES_SCHEMA)
 
 
 AHASH_SCHEMA = StructType(
@@ -368,15 +287,20 @@ def ahash_images(df: DataFrame, id_col: str = "id") -> DataFrame:
     Regions come from the stub decode domain (the 16 bytes of
     md5(hex(blob)) — one byte per region), so the hash is
     deterministic and a SQL oracle recomputes it exactly; a real
-    codec plugs into the same seam by averaging true pixel regions.
+    codec plugs into the same spot by averaging true pixel regions.
     The comparison ``16*b_i >= sum(b)`` keeps everything in exact
-    integers (no mean division).
+    integers (no mean division).  Map-only ``mapInArrow``.
     """
 
-    def ah(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def ah(batches):
+        for batch in batches:
+            data = batch.column("data")
+            if data.null_count:
+                raise ValueError(
+                    "ahash_images received a NULL blob — filter NULL blobs upstream"
+                )
             hashes = []
-            for blob in pdf["data"]:
+            for blob in data.to_pylist():
                 hb = hashlib.md5(blob.hex().encode()).digest()[:16]
                 total = sum(hb)
                 v = 0
@@ -384,12 +308,13 @@ def ahash_images(df: DataFrame, id_col: str = "id") -> DataFrame:
                     if 16 * b >= total:
                         v |= 1 << i
                 hashes.append(v)
-            yield pd.DataFrame(
-                {"id": pdf["_id"], "ahash": pd.Series(hashes, dtype="int32")}
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("_id").cast(pa.int64()), pa.array(hashes, pa.int32())],
+                names=["id", "ahash"],
             )
 
     src = PART.ensure_min_partitions(df.select(F.col(id_col).alias("_id"), "data"))
-    return src.mapInPandas(ah, schema=AHASH_SCHEMA)
+    return src.mapInArrow(ah, schema=AHASH_SCHEMA)
 
 
 FRAMES_SCHEMA = StructType(
@@ -403,22 +328,35 @@ FRAMES_SCHEMA = StructType(
 
 def sample_frames(df: DataFrame, n_frames: int, id_col: str = "id") -> DataFrame:
     """Split a "video" blob into n equally-spaced frame chunks (codec
-    stubbed as byte slicing; ffmpeg plugs into the same seam).  One input
-    row fans out to n output rows — still map-only."""
+    stubbed as byte slicing; ffmpeg would replace it at the same spot).
+    One input row fans out to n output rows — still a map-only
+    ``mapInArrow``."""
 
-    def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nos, chunks = [], [], []
-            for rid, blob in zip(pdf["_id"], pdf["data"]):
+    def frames(batches):
+        for batch in batches:
+            data = batch.column("data")
+            if data.null_count:
+                raise ValueError(
+                    "sample_frames received a NULL blob — filter NULL blobs upstream"
+                )
+            rows, nos, chunks = [], [], []
+            for r, blob in enumerate(data.to_pylist()):
                 step = max(len(blob) // n_frames, 1)
                 for i in range(n_frames):
-                    ids.append(rid)
+                    rows.append(r)
                     nos.append(i)
-                    chunks.append(bytes(blob[i * step : (i + 1) * step]))
-            yield pd.DataFrame({"id": ids, "frame_no": nos, "frame": chunks})
+                    chunks.append(blob[i * step : (i + 1) * step])
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("_id").cast(pa.int64()).take(pa.array(rows, pa.int64())),
+                    pa.array(nos, pa.int32()),
+                    pa.array(chunks, pa.binary()),
+                ],
+                names=["id", "frame_no", "frame"],
+            )
 
     src = PART.ensure_min_partitions(df.select(F.col(id_col).alias("_id"), "data"))
-    return src.mapInPandas(frames, schema=FRAMES_SCHEMA)
+    return src.mapInArrow(frames, schema=FRAMES_SCHEMA)
 
 
 AUDIO_FRAMES_SCHEMA = StructType(
@@ -443,47 +381,46 @@ def _fake_pcm_hex(blob: bytes) -> str:
     return (seed * (need // len(seed) + 1))[:need]
 
 
-def decode_audio_frames(
-    df: DataFrame, id_col: str = "id", use_real_codec: bool = False
-) -> DataFrame:
+def decode_audio_frames(df: DataFrame, id_col: str = "id") -> DataFrame:
     """Decode audio blobs and emit per-frame amplitude rows
     (id, frame, amp) — amp is the exact integer sum of the frame's
     sample bytes, the loudness primitive under RMS/silence analysis.
 
-    Arrow-batched mapInPandas, map-only (no shuffle) — the audio third
-    of the modality triple next to :func:`decode_images` (image) and
-    :func:`sample_frames` (video).  The default path is the
-    deterministic stub codec; ``use_real_codec=True`` is the seam where
-    a real decoder (soundfile/librosa, absent in this environment)
-    plugs in, and raises until one is wired.
+    Map-only ``mapInArrow`` (no shuffle) — the audio third of the
+    modality triple next to :func:`decode_images` (image) and
+    :func:`sample_frames` (video).  The codec is the deterministic stub
+    :func:`_fake_pcm_hex`.
     """
+    n_frames = AUDIO_N_SAMPLES // AUDIO_FRAME_LEN
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if use_real_codec:  # pragma: no cover - needs soundfile (absent)
-                raise ImportError(
-                    "use_real_codec=True requires soundfile or librosa; "
-                    "neither ships in this environment"
+    def decode(batches):
+        for batch in batches:
+            data = batch.column("data")
+            if data.null_count:
+                raise ValueError(
+                    "decode_audio_frames received a NULL blob — "
+                    "filter NULL blobs upstream"
                 )
-            ids, frames, amps = [], [], []
-            for i, blob in zip(pdf["_id"], pdf["data"]):
+            rows, frames, amps = [], [], []
+            for r, blob in enumerate(data.to_pylist()):
                 sh = _fake_pcm_hex(blob)
                 samples = [
                     int(sh[2 * j : 2 * j + 2], 16) for j in range(AUDIO_N_SAMPLES)
                 ]
-                for f in range(AUDIO_N_SAMPLES // AUDIO_FRAME_LEN):
-                    ids.append(i)
+                for f in range(n_frames):
+                    rows.append(r)
                     frames.append(f)
                     amps.append(
                         sum(samples[f * AUDIO_FRAME_LEN : (f + 1) * AUDIO_FRAME_LEN])
                     )
-            yield pd.DataFrame(
-                {
-                    "id": ids,
-                    "frame": pd.Series(frames, dtype="int32"),
-                    "amp": amps,
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("_id").cast(pa.int64()).take(pa.array(rows, pa.int64())),
+                    pa.array(frames, pa.int32()),
+                    pa.array(amps, pa.int64()),
+                ],
+                names=["id", "frame", "amp"],
             )
 
     src = PART.ensure_min_partitions(df.select(F.col(id_col).alias("_id"), "data"))
-    return src.mapInPandas(decode, schema=AUDIO_FRAMES_SCHEMA)
+    return src.mapInArrow(decode, schema=AUDIO_FRAMES_SCHEMA)

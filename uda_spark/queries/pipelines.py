@@ -9,13 +9,12 @@ must equal the batch computation, the *batch* oracle SQL checks the
 stream.
 
 Multimodal queries run the blob plumbing end-to-end (binary column +
-typed metadata struct → Arrow-batched mapInPandas decode / feature
-extraction → downstream relational or similarity ops).  The codec seam is
-deterministic-stub by design (no image libs in this environment, see
-uda_spark/multimodal/blob.py) and md5-derived on purpose: the DuckDB
-oracles below recompute the synthetic decode/feature outputs from the
-same md5 hex algebra, so even the Python mapInPandas path is value-hash
-checked end-to-end.
+typed metadata struct → ``mapInArrow`` decode / feature extraction →
+downstream relational or similarity ops).  The codec is a deterministic
+stub by design (see uda_spark/multimodal/blob.py) and md5-derived on
+purpose: the DuckDB oracles below recompute the synthetic decode/feature
+outputs from the same md5 hex algebra, so even the Python kernels are
+value-hash checked end-to-end.
 """
 
 from __future__ import annotations
@@ -357,38 +356,19 @@ FROM frames
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video-style frame sampling: each blob fans out to 4 equally-spaced
-    frame chunks via mapInPandas (one row in → n rows out, still
-    map-only; ffmpeg plugs into the same seam).  The stub slices bytes,
-    so the oracle recomputes each frame's hash60 fingerprint from the
-    same hex algebra — fan-out plumbing is value-hash checked."""
-    from uda_spark.multimodal.blob import _hash60_py
-
+    frame chunks via mapInArrow (one row in → n rows out, still
+    map-only; ffmpeg would replace the byte-slicing stub).  Each frame's
+    fingerprint is ``portable.hash60`` over its lower-case hex in SQL,
+    and the oracle recomputes it from the same hex algebra — fan-out
+    plumbing is value-hash checked."""
     docs = t(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
     blobs = MM.attach_blob_column(docs, "text", "doc_id")
     frames = MM.sample_frames(blobs, n_frames=4, id_col="doc_id")
-    from pyspark.sql.types import LongType, IntegerType, StructField, StructType
-    import pandas as pd
-
-    def fp(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["id"],
-                    "frame_no": pdf["frame_no"],
-                    "frame_fp": [
-                        _hash60_py(bytes(fr).hex()) for fr in pdf["frame"]
-                    ],
-                }
-            )
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("frame_no", IntegerType()),
-            StructField("frame_fp", LongType()),
-        ]
+    return frames.select(
+        F.col("id").alias("doc_id"),
+        "frame_no",
+        F.expr(portable.hash60("lower(hex(frame))", "spark")).alias("frame_fp"),
     )
-    return frames.mapInPandas(fp, schema=schema)
 
 
 @register(
@@ -538,12 +518,12 @@ FROM d GROUP BY 1
 )
 def multimodal_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blob decode pipeline: documents → synthesized binary blobs + typed
-    metadata → Arrow-batched mapInPandas decode → per-dimension-bucket
-    stats.  Map-only until the final tiny aggregation; blobs never shuffle.
+    metadata → mapInArrow decode → per-dimension-bucket stats.  Map-only
+    until the final tiny aggregation; blobs never shuffle.
 
-    The decode runs in Python (the real-codec seam), but its stub output
-    is md5-derived, so the oracle recomputes the identical pixel
-    fingerprints in SQL — the mapInPandas plumbing itself is value-hash
+    The decode runs in Python (where a real codec would go), but its
+    stub output is md5-derived, so the oracle recomputes the identical
+    pixel fingerprints in SQL — the Arrow kernel itself is value-hash
     checked, not just row-counted.
     """
     docs = t(spark, sf_dir, "documents")
@@ -586,7 +566,7 @@ WHERE rnk <= 3
 )
 def multimodal_feature_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end multimodal similarity: blobs → feature vectors (stubbed
-    vision encoder via mapInPandas) → exact cosine top-3 neighbors for the
+    vision encoder via mapInArrow) → exact cosine top-3 neighbors for the
     first 10 items.  Demonstrates the binary-column → embedding-column →
     similarity-operator composition on real Spark plumbing; the md5-byte
     stub features let the oracle rebuild the same vectors and rankings.
@@ -719,14 +699,14 @@ FROM r
     tags=("multimodal", "north-star"),
 )
 def multimodal_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blob resize pipeline: documents → synthesized blobs → Arrow-batched
-    mapInPandas decode+resize to {RESIZE_W}×{RESIZE_H} → per-image
-    resampled-buffer fingerprint.  Map-only, blobs never shuffle.
+    """Blob resize pipeline: documents → synthesized blobs → mapInArrow
+    decode+resize to {RESIZE_W}×{RESIZE_H} → per-image resampled-buffer
+    fingerprint.  Map-only, blobs never shuffle.
 
     The resample stub derives the target buffer deterministically from
     the source buffer + target dims (multimodal/blob.py:_fake_resize_hex),
     so the oracle recomputes the identical fingerprints in SQL — the
-    mapInPandas plumbing is value-hash checked per document.
+    Arrow kernel is value-hash checked per document.
     """
     docs = t(spark, sf_dir, "documents")
     blobs = MM.attach_blob_column(docs, "text", "doc_id")
@@ -933,39 +913,21 @@ def multimodal_scene_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     least half the bits flip — the shot-boundary primitive that decides
     which frames of a video corpus are worth decoding/captioning.
 
-    Pipeline shape: blob → mapInPandas frame fan-out (map-only, the
-    ffmpeg seam) → per-frame fingerprint → one tiny window per video
-    (state = previous frame fingerprint).  The stub codec's hex algebra
-    lets the oracle recompute identical fingerprints, so the Python
-    fan-out AND the JVM-side sequential comparison are value-hash
-    checked together.
+    Pipeline shape: blob → mapInArrow frame fan-out (map-only; ffmpeg
+    would replace the byte-slicing stub) → per-frame ``portable.hash60``
+    fingerprint in SQL → one tiny window per video (state = previous
+    frame fingerprint).  The stub codec's hex algebra lets the oracle
+    recompute identical fingerprints, so the Python fan-out AND the
+    JVM-side sequential comparison are value-hash checked together.
     """
-    from uda_spark.multimodal.blob import _hash60_py
-    import pandas as pd
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
     docs = t(spark, sf_dir, "documents").where(F.col("doc_id") < 100)
     blobs = MM.attach_blob_column(docs, "text", "doc_id")
     frames = MM.sample_frames(blobs, n_frames=SCENE_FRAMES, id_col="doc_id")
-
-    def fp(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["id"],
-                    "frame_no": pdf["frame_no"],
-                    "fp": [_hash60_py(bytes(fr).hex()) for fr in pdf["frame"]],
-                }
-            )
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("frame_no", IntegerType()),
-            StructField("fp", LongType()),
-        ]
+    fps = frames.select(
+        F.col("id").alias("doc_id"),
+        "frame_no",
+        F.expr(portable.hash60("lower(hex(frame))", "spark")).alias("fp"),
     )
-    fps = frames.mapInPandas(fp, schema=schema)
     w = Window.partitionBy("doc_id").orderBy("frame_no")
     seq = fps.withColumn("prev_fp", F.lag("fp").over(w)).where(
         F.col("prev_fp").isNotNull()
@@ -1260,7 +1222,7 @@ FROM cand WHERE bit_count(xor(ha, hb)) <= 1
 )
 def multimodal_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual near-duplicate image pairs: 16-bit average-hash per
-    blob (Arrow-batched mapInPandas over the codec seam —
+    blob (mapInArrow over the stub codec —
     multimodal/blob.py:ahash_images), then hamming <= 1 pairs found by
     the pigeonhole band trick (hamming <= 1 means at least one 8-bit
     half matches exactly) — the image twin of SimHash text dedup,
@@ -1270,7 +1232,7 @@ def multimodal_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle — 2 ints per image leave the scan); candidates come from
     two half-key equi-joins, never an all-pairs pass; verification is
     one integer xor/bit_count per candidate.  A real codec changes
-    only the region averaging inside the seam, not the plan.
+    only the region averaging inside the kernel, not the plan.
     """
     docs = t(spark, sf_dir, "documents")
     blobs = MM.attach_blob_column(docs, "text", "doc_id")
@@ -1576,17 +1538,16 @@ FROM fr GROUP BY doc_id
     tags=("multimodal", "north-star", "audio"),
 )
 def multimodal_audio_loudness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio-modality analysis: blobs → Arrow-batched mapInPandas PCM
+    """Audio-modality analysis: blobs → mapInArrow PCM
     decode → per-frame amplitudes → per-clip loudness profile (frame
     count, total/peak amplitude, silent-frame count) — the
     voice-activity / silence-trim screening step of an audio training
     pipeline, completing the modality triple (image decode, video frame
     sampling, audio framing) on the same blob plumbing.
 
-    The codec is the deterministic md5 stub (no audio libs in this
-    environment; the real-decoder seam raises by name), so the oracle
-    recomputes the identical frame amplitudes in SQL — the mapInPandas
-    path is value-hash checked end to end.
+    The codec is the deterministic md5 stub, so the oracle recomputes
+    the identical frame amplitudes in SQL — the Arrow kernel is
+    value-hash checked end to end.
 
     Scale shape: map-only decode (blobs never shuffle), one exchange for
     the per-clip rollup keyed by id.
@@ -2198,8 +2159,8 @@ def pipeline_greedy_pack_nosplit(spark: SparkSession, sf_dir: str) -> DataFrame:
     that doesn't fit the current {NOSPLIT_CONTEXT}-token bin opens a new
     one and overlong docs are truncated to one bin.  Packing is a
     genuine per-stream RECURRENCE (bin fill depends on every prior
-    doc), expressed Spark-side as an Arrow-batched ``applyInPandas``
-    over (lang, shard) streams — the stateful-operator escape hatch the
+    doc), expressed Spark-side as a grouped ``applyInArrow`` over
+    (lang, shard) streams — the stateful-operator escape hatch the
     built-in window algebra cannot cover — and oracle-side as a DuckDB
     RECURSIVE CTE stepping the identical transition, so even the
     sequential state machine is value-hash checked.  The readout is the
@@ -2213,7 +2174,9 @@ def pipeline_greedy_pack_nosplit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exchange carries (doc_id, lang, shard, n_tokens) only, never
     text.
     """
-    import pandas as pd
+    from typing import Tuple
+
+    import pyarrow as pa
 
     toks = portable.tokens("text", "spark")
     tk = t(spark, sf_dir, "documents").select(
@@ -2227,11 +2190,14 @@ def pipeline_greedy_pack_nosplit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     size = NOSPLIT_CONTEXT
 
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
+    # The type annotations are required: pyspark 4.1.2's grouped
+    # applyInArrow fails with an UnboundLocalError when hint inference
+    # fails (see operators/similarity.py within_group_pair_dots).
+    def pack(key: Tuple[pa.Scalar, ...], g: pa.Table) -> pa.Table:
+        ntok = g.sort_by("doc_id").column("n_tokens").to_pylist()
         fill = bins = packed = 0
-        for n in pdf["n_tokens"]:
-            take = min(int(n), size)
+        for n in ntok:
+            take = min(n, size)
             if bins == 0 or fill + take > size:
                 bins += 1
                 fill = take
@@ -2239,19 +2205,19 @@ def pipeline_greedy_pack_nosplit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 fill += take
             packed += take
         waste = (bins * size - packed) * 1_000_000 // (bins * size)
-        return pd.DataFrame(
+        return pa.table(
             {
-                "lang": [pdf["lang"].iloc[0]],
-                "shard": [int(pdf["shard"].iloc[0])],
-                "n_docs": [len(pdf)],
-                "sum_tokens": [int(pdf["n_tokens"].sum())],
-                "packed_tokens": [packed],
-                "n_bins": [bins],
-                "waste_ppm": [waste],
+                "lang": pa.array([key[0].as_py()], pa.string()),
+                "shard": pa.array([key[1].as_py()], pa.int32()),
+                "n_docs": pa.array([len(ntok)], pa.int64()),
+                "sum_tokens": pa.array([sum(ntok)], pa.int64()),
+                "packed_tokens": pa.array([packed], pa.int64()),
+                "n_bins": pa.array([bins], pa.int64()),
+                "waste_ppm": pa.array([waste], pa.int64()),
             }
         )
 
-    return tk.groupBy("lang", "shard").applyInPandas(
+    return tk.groupBy("lang", "shard").applyInArrow(
         pack,
         schema=(
             "lang string, shard int, n_docs long, sum_tokens long, "
