@@ -16,7 +16,9 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("uda_spark_tests", master="local[8]", shuffle_partitions=8)
+    # master and shuffle width come from SPARK_GRAFT_CPUS, as in every
+    # get_spark session: a fixed local[8] oversubscribes a smaller host
+    s = get_spark("uda_spark_tests")
     yield s
     s.stop()
 

@@ -13,8 +13,8 @@ driver round has been an ANSI run all along.  This module makes that
 property explicit and durable: the fixture FORCES the conf to true
 (so a future Spark default flip or session-factory edit can't silently
 lose it), asserts the effective value, and writes the machine-readable
-ANSISWEEP.json stamp (count, git SHA, duration) on a complete green
-sweep.
+.sweeps/ANSISWEEP.json stamp (count, git SHA, duration) on a complete
+green sweep.
 
 Overflow reach at test scale: the historical wraps were LATENT — they
 fire at ~1e8-user cardinalities, far beyond sf0.01, so a green sweep
@@ -50,10 +50,11 @@ _SWEEP_PASSED: list[str] = []
 
 @pytest.fixture(scope="module", autouse=True)
 def _ansisweep_stamp():
-    """On a COMPLETE green sweep, write ANSISWEEP.json at the repo root
-    (count, duration, git SHA, timestamp) as committed external
-    evidence — same contract as PLAINSWEEP.json.  Partial runs leave
-    any existing stamp untouched."""
+    """On a COMPLETE green sweep, write .sweeps/ANSISWEEP.json (count,
+    duration, git SHA, timestamp) — same contract as the plain sweep's
+    .sweeps/PLAINSWEEP.json: git-ignored, copied to the repo root by
+    hand to commit a record.  Partial runs leave any existing stamp
+    untouched."""
     t0 = time.time()
     yield
     if len(_SWEEP_PASSED) != len(ORACLE_NAMES):
@@ -81,7 +82,9 @@ def _ansisweep_stamp():
         "git_sha": sha,
         "wall_clock_utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
-    with open(os.path.join(_REPO_ROOT, "ANSISWEEP.json"), "w") as fh:
+    out_dir = os.path.join(_REPO_ROOT, ".sweeps")
+    os.makedirs(out_dir, exist_ok=True)
+    with open(os.path.join(out_dir, "ANSISWEEP.json"), "w") as fh:
         json.dump(stamp, fh, indent=1)
         fh.write("\n")
 

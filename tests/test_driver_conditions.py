@@ -34,9 +34,11 @@ def _plainsweep_stamp():
     """Machine-readable record of the sweep: slow-marked means the judge
     and default CI never execute this module, so its green status was
     builder prose only.  On a COMPLETE green sweep (every oracle name
-    passed in this run), write PLAINSWEEP.json at the repo root —
-    count, duration, git SHA, timestamp — as the committed external
-    evidence.  Partial runs (``-k``, failures) leave any existing stamp
+    passed in this run), write .sweeps/PLAINSWEEP.json — count,
+    duration, git SHA, timestamp.  The directory is git-ignored, so a
+    sweep of an uncommitted tree never rewrites the committed record;
+    to commit a record, copy the stamp to the repo root by hand.
+    Partial runs (``-k``, failures) leave any existing stamp
     untouched."""
     t0 = time.time()
     yield
@@ -63,7 +65,9 @@ def _plainsweep_stamp():
         "git_sha": sha,
         "wall_clock_utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
-    with open(os.path.join(_REPO_ROOT, "PLAINSWEEP.json"), "w") as fh:
+    out_dir = os.path.join(_REPO_ROOT, ".sweeps")
+    os.makedirs(out_dir, exist_ok=True)
+    with open(os.path.join(out_dir, "PLAINSWEEP.json"), "w") as fh:
         json.dump(stamp, fh, indent=1)
         fh.write("\n")
 

@@ -580,42 +580,61 @@ class TestZorderLayout:
 class TestStarConnectedComponents:
     def test_long_chain_converges_in_log_rounds(self, spark):
         """A 200-node path graph has diameter 199 — one-hop label
-        propagation needs ~199 rounds, the star algorithm a handful."""
-        from uda_spark.operators.dedup import connected_components_star
+        propagation would need ~199 rounds, the star algorithm a
+        handful."""
+        from uda_spark.operators.dedup import connected_components
 
         chain = spark.createDataFrame(
             [(i, i + 1) for i in range(200)], "doc_a long, doc_b long"
         )
-        got = connected_components_star(chain, max_iterations=12).collect()
+        got = connected_components(chain, max_iterations=12).collect()
         assert len(got) == 201
         assert all(r["component"] == 0 for r in got)
 
-    def test_matches_label_propagation_on_random_graph(self, spark):
+    def test_matches_union_find_on_random_graphs(self, spark):
+        """Independent reference: a pure-Python union-find (min id per
+        component) over seeded random graphs with duplicate pairs,
+        reversed pairs and self-pairs.  A self-pair is not an edge, so a
+        node whose only pair is a self-pair gets no label."""
         import random
 
-        from uda_spark.operators.dedup import (
-            connected_components,
-            connected_components_star,
-        )
+        from uda_spark.operators.dedup import connected_components
 
-        rng = random.Random(7)
-        edges = [
-            (rng.randrange(300), rng.randrange(300)) for _ in range(180)
-        ]
-        edges = [(a, b) for a, b in edges if a != b]
-        df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        star = {
-            (r["node"], r["component"])
-            for r in connected_components_star(df).collect()
-        }
-        prop = {
-            (r["node"], r["component"])
-            for r in connected_components(df, max_iterations=60).collect()
-        }
-        assert star == prop
+        def min_labels(pairs):
+            parent: dict[int, int] = {}
+
+            def find(x):
+                while parent[x] != x:
+                    parent[x] = parent[parent[x]]
+                    x = parent[x]
+                return x
+
+            for a, b in pairs:
+                if a == b:
+                    continue
+                parent.setdefault(a, a)
+                parent.setdefault(b, b)
+                ra, rb = find(a), find(b)
+                if ra != rb:
+                    parent[max(ra, rb)] = min(ra, rb)
+            return {x: find(x) for x in parent}
+
+        for seed in (7, 19, 31):
+            rng = random.Random(seed)
+            pairs = [(rng.randrange(300), rng.randrange(300)) for _ in range(180)]
+            pairs += rng.sample(pairs, 20)  # duplicates
+            pairs += [(b, a) for a, b in rng.sample(pairs, 20)]  # reversed
+            pairs += [(a, a) for a, _ in rng.sample(pairs, 10)]  # self-pairs
+            pairs += [(1000 + seed, 1000 + seed)]  # a self-pair-only node
+            df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+            got = {
+                r["node"]: r["component"]
+                for r in connected_components(df).collect()
+            }
+            assert got == min_labels(pairs), seed
 
     def test_two_components_and_self_pairs_ignored(self, spark):
-        from uda_spark.operators.dedup import connected_components_star
+        from uda_spark.operators.dedup import connected_components
 
         df = spark.createDataFrame(
             [(5, 6), (6, 7), (20, 21), (21, 20), (9, 9)],
@@ -623,7 +642,7 @@ class TestStarConnectedComponents:
         )
         got = {
             r["node"]: r["component"]
-            for r in connected_components_star(df).collect()
+            for r in connected_components(df).collect()
         }
         assert got == {5: 5, 6: 5, 7: 5, 20: 20, 21: 20}
 
@@ -634,7 +653,7 @@ class TestStarConnectedComponents:
         IDENTICAL to the unguarded run on a random graph with hubs."""
         import random
 
-        from uda_spark.operators.dedup import connected_components_star
+        from uda_spark.operators.dedup import connected_components
 
         rng = random.Random(11)
         edges = [(rng.randrange(200), rng.randrange(200)) for _ in range(120)]
@@ -645,13 +664,13 @@ class TestStarConnectedComponents:
         df = spark.createDataFrame(edges, "doc_a long, doc_b long")
         guarded = {
             (r["node"], r["component"])
-            for r in connected_components_star(
+            for r in connected_components(
                 df, hot_degree_threshold=2
             ).collect()
         }
         plain = {
             (r["node"], r["component"])
-            for r in connected_components_star(df).collect()
+            for r in connected_components(df).collect()
         }
         assert guarded == plain
 
@@ -675,13 +694,26 @@ class TestStarConnectedComponents:
         rows = {(r["hi"], r["lo"]) for r in round1.collect()}
         assert rows == {(i, 0) for i in range(1, n)} | {(n, 0)}
 
+    def test_unguarded_star_step_is_a_window_not_a_join(self, spark):
+        """Each unguarded star step is one window min (one exchange plus
+        a sort), never an aggregate joined back to its own input."""
+        from uda_spark.operators.dedup import _star_round
+        from uda_spark.plans.explain import plan_str
+
+        edges = spark.createDataFrame(
+            [(2, 1), (3, 2), (4, 3)], "hi long, lo long"
+        )
+        plan = plan_str(_star_round(edges), mode="simple")
+        assert "Window" in plan
+        assert "Join" not in plan
+
 
 @pytest.mark.slow
 def test_star_cc_giant_family_stress(spark):
     """One giant near-dup family (300k nodes, 37 hot hubs of ~8k degree
     each — the shape a bucket-capped LSH pass emits for a template-spam
     corpus) plus a background chain: the degree-guarded star CC must
-    label every node exactly, converge in few rounds (LAST_STAR_ROUNDS
+    label every node exactly, converge in few rounds (LAST_CC_ROUNDS
     stays O(log), so per-round shuffle volume is bounded by the
     monotonically shrinking edge list — no round re-shuffles the hub
     rows on a hub key thanks to the broadcast min-join), and finish in
@@ -704,7 +736,7 @@ def test_star_cc_giant_family_stress(spark):
     )
     pairs = giant.union(spokes).union(chain)
     t0 = time.monotonic()
-    labels = D.connected_components_star(
+    labels = D.connected_components(
         pairs, hot_degree_threshold=1_000
     )
     bad = labels.where(
@@ -718,7 +750,7 @@ def test_star_cc_giant_family_stress(spark):
     assert labels.count() == n + 201
     # the 200-node chain drives the count (log2(200)~8 + the signature-
     # stabilization round); the giant family itself flattens in ~2
-    assert D.LAST_STAR_ROUNDS is not None and D.LAST_STAR_ROUNDS <= 10
+    assert D.LAST_CC_ROUNDS is not None and D.LAST_CC_ROUNDS <= 10
     assert wall < 120, f"giant-family CC took {wall:.0f}s"
 
 
@@ -1194,16 +1226,12 @@ import pytest
 @pytest.mark.slow
 def test_star_cc_chain_beats_diameter(spark):
     """Pathological chain graph (diameter = n-1): large-star/small-star
-    must resolve it in O(log n) rounds where one-hop propagation needs
-    O(diameter) — the claim its docstring makes, measured: a 4096-node
-    path (diameter 4095) converges in 14 star rounds, within the
-    default cap, while propagation capped at 5 rounds raises."""
+    must resolve it in O(log n) rounds where one-hop propagation would
+    need O(diameter) — measured: a 4096-node path (diameter 4095)
+    converges in 14 star rounds, within the default cap."""
     from pyspark.sql import functions as F
 
-    from uda_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from uda_spark.operators import dedup as D
 
     n = 4096
     edges = spark.range(n - 1).select(
@@ -1211,13 +1239,11 @@ def test_star_cc_chain_beats_diameter(spark):
     )
     labels = {
         r["node"]: r["component"]
-        for r in connected_components_star(edges).collect()
+        for r in D.connected_components(edges).collect()
     }
     assert len(labels) == n
     assert set(labels.values()) == {0}
-    # and propagation genuinely cannot do this within its round budget
-    with pytest.raises(RuntimeError):
-        connected_components(edges, max_iterations=5).collect()
+    assert D.LAST_CC_ROUNDS is not None and D.LAST_CC_ROUNDS <= 14
 
 
 class TestAnalyticsInvariants:

@@ -286,7 +286,7 @@ def _union_find_components(edges):
 @SPARK_SETTINGS
 @given(edges=edge_lists)
 def test_star_components_match_union_find(spark, edges):
-    from uda_spark.operators.dedup import connected_components_star
+    from uda_spark.operators.dedup import connected_components
 
     expected = _union_find_components(edges)
     if not expected:  # all self-loops: the operator returns no rows
@@ -294,7 +294,7 @@ def test_star_components_match_union_find(spark, edges):
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
     got = {
         (r["node"], r["component"])
-        for r in connected_components_star(df).collect()
+        for r in connected_components(df).collect()
     }
     assert got == expected
 

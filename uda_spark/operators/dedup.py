@@ -21,7 +21,7 @@ uda_spark/queries/dedup.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -568,104 +568,10 @@ def simhash_signatures(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     ).withColumnRenamed("doc", id_col)
 
 
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iterations: int = 20,
-) -> DataFrame:
-    """Label every node in the near-dup pair graph with its component's
-    minimum id — the clustering step that turns pairwise matches into
-    dedup groups (keep min id, drop the rest).
-
-    Algorithm: large-star/small-star-style min-label propagation.  Each
-    iteration joins the current (node, label) assignment to the edge
-    list and lowers each node's label to the min over its neighborhood;
-    terminates when no label changes and RAISES if max_iterations rounds
-    were insufficient (silent non-convergence would emit split clusters).
-    Propagation is one hop per round, so rounds ~ component diameter —
-    near-dup clusters are tiny and dense in practice (2-3 rounds); the
-    O(log n) large-star/small-star variant is the upgrade path if LSH
-    ever emits long chains.
-
-    Scale shape per iteration: one shuffle of (node, label) keyed by
-    node for the edge join, one groupBy(node) min — both on the same
-    key, so AQE reuses the partitioning.  The edge list never grows;
-    checkpointing via localCheckpoint() every iteration truncates the
-    lineage so plan size stays constant.
-
-    Output: (node, component) — component = min node id in the cluster.
-    """
-    edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .union(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
-        .distinct()
-        # materialize once: every iteration joins the edge list, and the
-        # upstream pair pipeline (LSH band join + verification) must not
-        # re-execute per round
-        .transform(_snapshot)
-    )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-    )
-    # Convergence check: per-node labels are monotonically NON-INCREASING
-    # (each round takes a min with the old label), so the label SUM
-    # strictly decreases until the fixpoint — sum unchanged ⟺ no node
-    # changed, exactly.  One scalar aggregate on the just-checkpointed
-    # relation replaces the old updated⋈labels inequality join + count
-    # per round (r13; one fewer join/exchange per round, same labels).
-    prev_sum = None
-    for _ in range(max_iterations):
-        # neighbor labels: for each edge (src,dst), dst's current label
-        nbr = (
-            edges.join(
-                labels.withColumnsRenamed({"node": "dst", "component": "nbr_label"}),
-                on="dst",
-            )
-            .groupBy("src")
-            .agg(F.min("nbr_label").alias("nbr_min"))
-        )
-        updated = (
-            labels.join(nbr, labels["node"] == nbr["src"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
-                ).alias("component"),
-            )
-        )
-        # LAZY checkpoint: the convergence probe right below is the
-        # single full-pass consumer, so it materializes the round's
-        # labels and computes the sum in ONE job (the eager variant
-        # paid a dedicated count job per round).  The initial `edges`
-        # snapshot above stays EAGER: it fans out into two union
-        # branches of the same stage, where unpersisted blocks race.
-        updated = updated.transform(_snapshot_lazy)
-        # Cast INSIDE the aggregate so accumulation is exact decimal:
-        # summing long first would overflow at corpus-scale id ranges
-        # (~1e12 nodes × 64-bit ids) — ANSI throws, non-ANSI wraps and
-        # could falsely report convergence (r14 fix).
-        cur_sum = updated.agg(
-            F.sum(F.col("component").cast("decimal(38,0)"))
-        ).first()[0]
-        labels = updated
-        if prev_sum is not None and cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
-            "iterations (component diameter exceeds the bound) — raise "
-            "max_iterations; propagation is one hop per round"
-        )
-    return labels.select("node", "component")
-
-
 # Hot nodes broadcast per star round are bounded: beyond this many, the
-# rest stay on the shuffled path (where AQE skew-join is the backstop), so
-# the broadcast can never itself become the memory problem.
+# rest stay on the window path (one task per key there; AQE's skew split
+# applies to joins only), so the broadcast can never itself become the
+# memory problem.
 _STAR_MAX_HOT = 4096
 
 
@@ -676,41 +582,45 @@ def _min_join(
     include_self: bool,
     hot_degree_threshold: int | None,
 ) -> DataFrame:
-    """Join every ``(key, val)`` row with ``m`` = min(val) per key
-    (optionally also min'd with the key itself) — the per-round kernel of
-    star CC, degree-skew-guarded.
+    """Attach ``m`` = min(val) over each key's rows (optionally also
+    min'd with the key itself) to every ``(key, val)`` row — the
+    per-round kernel of star CC, degree-skew-guarded.
 
-    Both star steps are "edge list ⋈ per-key aggregate of itself", and a
-    hub node (one giant near-dup family) puts ALL its rows on one join
-    key.  With ``hot_degree_threshold`` set, keys whose degree exceeds it
-    resolve through a BROADCAST of their (single-row) aggregates instead
-    of the shuffled join — the hub's rows never shuffle on the hub key at
-    all (the preceding groupBy is safe either way: partial aggregation
-    bounds per-task input).  The degree comes free as a COUNT alongside
-    the MIN, i.e. the same readout `graph_degree_histogram` profiles —
-    this is that histogram's heavy tail wired in as an execution guard,
-    the join-side analog of :func:`cap_buckets`.  Hot keys beyond
-    ``_STAR_MAX_HOT`` stay on the shuffled path, so the broadcast stays
+    Unguarded it is one window, ``min(val) OVER (PARTITION BY key)``: one
+    hash exchange on the key plus a sort.  An aggregate joined back to
+    its own input computes the same relation with a second scan of the
+    round's input, an exchange on each join side and a sort-merge join.
+
+    A hub node (one giant near-dup family) puts ALL its rows on one key.
+    With ``hot_degree_threshold`` set, keys whose degree exceeds it
+    resolve through a BROADCAST of their single-row aggregates, so the
+    hub's rows never shuffle on the hub key; the cold rows take the same
+    window step.  The degree comes free as a COUNT alongside the MIN,
+    i.e. the same readout `graph_degree_histogram` profiles — this is
+    that histogram's heavy tail wired in as an execution guard, the
+    join-side analog of :func:`cap_buckets`.  Hot keys beyond
+    ``_STAR_MAX_HOT`` stay on the window path, so the broadcast stays
     bounded no matter how degenerate the graph.
     """
-    m_col = F.least(F.col("mn"), F.col(key)) if include_self else F.col("mn")
-    mins = (
+
+    def m(mn: Column) -> Column:
+        return (F.least(mn, F.col(key)) if include_self else mn).alias("m")
+
+    window_m = m(F.min(val).over(Window.partitionBy(key)))
+    if hot_degree_threshold is None:
+        return rows.select("*", window_m)
+    hot = (
         rows.groupBy(key)
         .agg(F.min(val).alias("mn"), F.count("*").alias("deg"))
-        .select(key, m_col.alias("m"), "deg")
-    )
-    if hot_degree_threshold is None:
-        return rows.join(mins.select(key, "m"), on=key)
-    hot = (
-        mins.where(F.col("deg") > hot_degree_threshold)
+        .where(F.col("deg") > hot_degree_threshold)
         .orderBy(F.col("deg").desc(), key)
         .limit(_STAR_MAX_HOT)
-        .select(key, "m")
+        .select(key, m(F.col("mn")))
     )
     cold_rows = rows.join(F.broadcast(hot.select(key)), on=key, how="left_anti")
-    hot_joined = rows.join(F.broadcast(hot), on=key)
-    cold_joined = cold_rows.join(mins.select(key, "m"), on=key)
-    return hot_joined.union(cold_joined)
+    return rows.join(F.broadcast(hot), on=key).unionByName(
+        cold_rows.select("*", window_m)
+    )
 
 
 def _star_round(
@@ -725,13 +635,13 @@ def _star_round(
         edges.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
     )
     # NO distinct here (r13, guide §2.4): min is duplicate-insensitive,
-    # so duplicate (hi, lo) rows cannot change the small-star groupBy-min
-    # below, and every downstream consumer dedups at the round's final
+    # so duplicate (hi, lo) rows cannot change the small-star min below,
+    # and every downstream consumer dedups at the round's final
     # distinct — the intermediate distinct was a full exchange of the
     # rewritten edge list per round for nothing (measured at sf0.1:
     # CC tail 1.36s → 1.06s, labels identical).  The hot-degree counts
     # may inflate with duplicates, which only shifts keys between the
-    # broadcast and shuffled paths of _min_join — both compute the same
+    # broadcast and window paths of _min_join — both compute the same
     # relation.
     large = (
         _min_join(sym, "u", "v", True, hot_degree_threshold)
@@ -756,14 +666,15 @@ def _star_round(
     )
 
 
-# Observability: rounds used by the most recent connected_components_star
+# Observability: rounds used by the most recent connected_components
 # call on this driver (the algorithm is deterministic per input, so a
 # run-to-run wall-time swing with a CONSTANT round count is environmental,
-# not algorithmic — recorded per VERDICT r06 #6).
-LAST_STAR_ROUNDS: int | None = None
+# not algorithmic — recorded per VERDICT r06 #6).  Set by every call,
+# including one that raises on round exhaustion.
+LAST_CC_ROUNDS: int | None = None
 
 
-def connected_components_star(
+def connected_components(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
@@ -772,50 +683,55 @@ def connected_components_star(
     # covers ~2^14-diameter chains and costs nothing when convergence is
     # earlier (the loop breaks on the edge-set signature)
     max_iterations: int = 16,
-    # degree above which a node's per-round min-join resolves via
-    # broadcast instead of a shuffled join (see _min_join).  ADAPTIVE:
+    # degree above which a node's per-round min step resolves via
+    # broadcast instead of the window exchange (see _min_join).  ADAPTIVE:
     # one aggregation over the checkpointed input edges (the
     # `graph_degree_histogram` readout reduced to its max) decides
     # whether any node actually crosses the threshold — the guard pays
-    # a constant 2-3x per round (the min relation feeds the hot filter,
-    # the anti-join, AND the cold join; measured at sf0.1: cluster
-    # histogram 2.2s plain vs 6.1s always-guarded), so it only runs
-    # when a hot family exists.  Caveat (deliberate): star rounds
-    # concentrate degree on component minima, so a cold input with one
-    # huge-diameter component can grow a hot min mid-run — that
-    # residual case rides on AQE's skew-join split (proven firing in
-    # plans/partitioning.py); the realistic degenerate shape (a
-    # template-spam near-dup family, hot from round 0) takes the
-    # guarded path from the start.  None skips the profiling entirely.
+    # a constant factor per round (the input feeds the hot aggregate,
+    # the anti-join, the hot join AND the cold window; with the earlier
+    # aggregate+join step, measured at sf0.1: cluster histogram 2.2s
+    # plain vs 6.1s always-guarded), so it only runs when a hot family
+    # exists.  Caveat (deliberate): star rounds concentrate degree on
+    # component minima, so a cold input with one huge-diameter
+    # component can grow a hot min mid-run — that residual case stays
+    # on the window path, one task for the hot key; the realistic
+    # degenerate shape (a template-spam near-dup family, hot from round
+    # 0) takes the guarded path from the start.  None skips the
+    # profiling entirely.
     hot_degree_threshold: int | None = None,
 ) -> DataFrame:
-    """Connected components via alternating large-star/small-star edge
-    rewriting — the O(log n)-round formulation (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) that
-    :func:`connected_components` names as its upgrade path for graphs
-    with long chains, where one-hop min-label propagation needs
-    O(diameter) rounds.
+    """Label every node in the near-dup pair graph with its component's
+    minimum id — the clustering step that turns pairwise matches into
+    dedup groups (keep min id, drop the rest).
 
-    Each round rewires edges toward component minima: large-star points
-    every larger neighbor at the neighborhood minimum (halving chain
-    distances), small-star flattens the resulting trees into stars.  The
-    fixed point is a star forest — every node points directly at its
-    component's minimum id — so the label relation falls straight out of
-    the edge list with no separate propagation phase.
+    Algorithm: alternating large-star/small-star edge rewriting (Kiveris
+    et al., "Connected Components in MapReduce and Beyond", SoCC'14),
+    O(log n) rounds even on long chains.  Each round rewires edges toward
+    component minima: large-star points every larger neighbor at the
+    neighborhood minimum (halving chain distances), small-star flattens
+    the resulting trees into stars.  The fixed point is a star forest —
+    every node points directly at its component's minimum id — so the
+    label relation falls straight out of the edge list with no separate
+    propagation phase.
 
-    Scale shape per round: two groupBy-min aggregations and two joins,
-    all keyed on node ids (never content); the edge list SHRINKS
+    Scale shape per round: two window min steps (one hash exchange plus
+    a sort each, see :func:`_min_join`) keyed on node ids, never
+    content, and the round's final distinct; the edge list SHRINKS
     monotonically toward one edge per non-root node, so later rounds are
     cheaper than earlier ones.  localCheckpoint per round truncates
     lineage (constant plan size).  Convergence is detected by an edge-set
     signature (count + bit_xor of xxhash64(hi, lo), overflow-free under
     ANSI mode) — one aggregation action, no extra join; a colliding
     signature for *different* consecutive edge sets (probability ~2^-64
-    per round on deterministic data) is the only failure mode, and
-    RAISES on round exhaustion rather than returning split clusters.
+    per round on deterministic data) is the only failure mode.  RAISES
+    on round exhaustion rather than returning split clusters.
 
-    Output: (node, component) — component = min node id in the cluster,
-    identical to :func:`connected_components`.
+    A self-pair ``(a, a)`` is not an edge: a node whose only pair is a
+    self-pair gets no label.  The MinHash pair operators emit
+    ``doc_a < doc_b``, so no clustering query feeds one.
+
+    Output: (node, component) — component = min node id in the cluster.
     """
     edges = (
         pairs.select(
@@ -824,6 +740,8 @@ def connected_components_star(
         )
         .where(F.col("hi") != F.col("lo"))
         .distinct()
+        # materialize once: the upstream pair pipeline (LSH band join +
+        # verification) must not re-execute per round
         .transform(_snapshot)
     )
     if hot_degree_threshold is not None:
@@ -841,13 +759,15 @@ def connected_components_star(
         )
         if max_deg <= hot_degree_threshold:
             hot_degree_threshold = None
-    global LAST_STAR_ROUNDS
+    global LAST_CC_ROUNDS
     prev_sig = None
     for rounds_used in range(1, max_iterations + 1):
+        LAST_CC_ROUNDS = rounds_used
         # LAZY checkpoint: the signature probe below is the single
         # full-pass consumer — materialization and convergence check
         # share one job per round (initial snapshot stays eager: it
-        # fans out into the round's two union branches).
+        # fans out into the round's two union branches, where
+        # unpersisted blocks race).
         edges = _star_round(edges, hot_degree_threshold).transform(_snapshot_lazy)
         row = edges.agg(
             F.count("*").alias("n"),
@@ -855,12 +775,11 @@ def connected_components_star(
         ).first()
         sig = (row["n"], row["h"])
         if sig == prev_sig:
-            LAST_STAR_ROUNDS = rounds_used
             break
         prev_sig = sig
     else:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iterations} "
+            f"connected_components did not converge in {max_iterations} "
             "rounds — pathological for O(log n) convergence; raise "
             "max_iterations"
         )
@@ -1014,8 +933,6 @@ def prefix_filter_similarity_pairs(
     the verify join is the exact-intersection counterpart of its digest
     verification pass.
     """
-    from pyspark.sql import Window
-
     num, den = threshold_num, threshold_den
     if shingle_rows is not None:
         # caller-shared distinct (doc, s) relation — same tokenizer/k

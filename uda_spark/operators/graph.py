@@ -1,9 +1,10 @@
 """Graph operators over pair/edge relations (iterative DataFrame loops).
 
-Companion to dedup.connected_components: where cc answers "which rows
-are the same thing", PageRank answers "which node is the most central
-representative" — useful for picking canonical documents in large
-near-dup clusters and for influence-weighting crawl frontiers.
+Companion to dedup.connected_components (large-star/small-star rounds):
+where cc answers "which rows are the same thing", PageRank answers
+"which node is the most central representative" — useful for picking
+canonical documents in large near-dup clusters and for
+influence-weighting crawl frontiers.
 
 Determinism: ranks are kept in fixed-point integers (1e9 scale) and
 every step is integer arithmetic (div is floor division in both Spark
@@ -53,9 +54,9 @@ def pagerank_fp(
                     (damping_pct * sum(contribs into dst)) div 100
 
     Scale shape per iteration: one shuffle of (node, rank) onto the edge
-    list keyed by src, one groupBy(dst) sum — same two-exchange loop as
-    connected_components, lineage truncated per round.  The edge list
-    and degrees are materialized once.
+    list keyed by src, one groupBy(dst) sum — two exchanges per round,
+    lineage truncated per round.  The edge list and degrees are
+    materialized once.
 
     Output: (node, rank_fp BIGINT) — exact, engine-portable integers.
     """

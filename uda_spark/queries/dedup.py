@@ -423,15 +423,17 @@ FROM reach GROUP BY node
 )
 def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster labeling: MinHash near-dup pairs → connected
-    components via iterative min-label propagation — each node gets its
-    cluster's minimum doc id (the canonical survivor; dedup = keep rows
-    whose id equals their component).
+    components — each node gets its cluster's minimum doc id (the
+    canonical survivor; dedup = keep rows whose id equals their
+    component).
 
-    The iteration is a genuine DataFrame loop (join + groupBy-min per
-    round, lineage truncated via localCheckpoint); the oracle computes
-    the same components with a recursive-CTE transitive closure — only
-    viable at oracle scale, which is exactly why the iterative
-    formulation exists for 100 TB.
+    The iteration is a genuine DataFrame loop (large-star/small-star
+    rounds, each star step one window exchange, lineage truncated via
+    localCheckpoint); the oracle computes the same components with a
+    recursive-CTE transitive closure — only viable at oracle scale,
+    which is exactly why the iterative formulation exists for 100 TB.
+    This query runs the loop unguarded; `dedup_cluster_canonical_star`
+    runs it with the hot-degree guard armed.
     """
     pairs = D.minhash_near_dup_pairs(
         _corpus_near(spark, sf_dir),
@@ -468,13 +470,13 @@ FROM reach GROUP BY node
     tags=("dedup", "north-star", "iterative", "graph"),
 )
 def dedup_cluster_canonical_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate-cluster labeling via large-star/small-star edge
-    rewriting (Kiveris et al. SoCC'14) — the O(log n)-round alternative
-    to one-hop min-label propagation (`dedup_cluster_canonical`), for
-    graphs where LSH emits long chains and O(diameter) rounds would
-    dominate.  Identical output contract (node -> min id of its
-    component), same transitive-closure oracle, so the two formulations
-    value-hash-check each other through the driver.
+    """Duplicate-cluster labeling with the hot-degree guard armed
+    (``hot_degree_threshold=CC_HOT_DEGREE``): the same large-star/
+    small-star operator (Kiveris et al. SoCC'14) and output contract
+    (node -> min id of its component) as `dedup_cluster_canonical`,
+    checked against the same transitive-closure oracle.  At sf0.1 no
+    node crosses the threshold, so this covers the adaptive degree
+    readout that decides to run the rounds unguarded.
     """
     pairs = D.minhash_near_dup_pairs(
         _corpus_near(spark, sf_dir),
@@ -485,7 +487,7 @@ def dedup_cluster_canonical_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=3,
         jaccard_threshold=JACCARD_T,
     )
-    return D.connected_components_star(
+    return D.connected_components(
         pairs, hot_degree_threshold=CC_HOT_DEGREE
     ).select(
         F.col("node").cast("long").alias("node"),
@@ -531,8 +533,8 @@ def graph_pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer-only arithmetic (floor div contributions) makes each
     iteration bit-identical across engines, so an ITERATIVE algorithm
     gets a full value-hash oracle (5 unrolled CTE rounds in SQL); the
-    Spark side is the same two-exchange-per-round loop as
-    connected_components with lineage truncated per round.
+    Spark side is a two-exchange-per-round loop with lineage truncated
+    per round.
     """
     from uda_spark.operators.graph import pagerank_fp
 
@@ -1115,9 +1117,7 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus, "text", "doc_id",
         n_hashes=N_HASHES, bands=BANDS, k=3, jaccard_threshold=JACCARD_T,
     )
-    # star CC: identical min-id labels, fewer rounds (see
-    # pipeline_retrieval_e2e's A/B note)
-    labels = D.connected_components_star(pairs, hot_degree_threshold=CC_HOT_DEGREE)
+    labels = D.connected_components(pairs, hot_degree_threshold=CC_HOT_DEGREE)
     sizes = labels.groupBy("component").agg(F.count("*").alias("cluster_size"))
     hist = sizes.groupBy("cluster_size").agg(
         F.count("*").cast("long").alias("n_clusters"),
@@ -1939,7 +1939,7 @@ def dedup_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=3,
         jaccard_threshold=JACCARD_T,
     )
-    comp = D.connected_components_star(
+    comp = D.connected_components(
         pairs, hot_degree_threshold=CC_HOT_DEGREE
     )
     docs = t(spark, sf_dir, "documents").select("doc_id", "source")

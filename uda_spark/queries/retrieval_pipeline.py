@@ -11,7 +11,7 @@ Stage shapes at 100 TB (each inherited from its proven component):
   1. MinHash banded candidate gen — bucketed, never all-pairs
      (operators/dedup.py:45).
   2. Connected components — O(log n) large-star/small-star rounds,
-     lineage truncated (operators/dedup.py:448).
+     lineage truncated (operators/dedup.connected_components).
   3. Survivor selection — one integer-packed MAX per component
      (queries/dedup.py dedup_cluster_survivor).
   4. PQ codebook train + encode — one corpus pass, then a map-only
@@ -154,16 +154,14 @@ def pipeline_retrieval_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _retrieval_dedup_cc(spark: SparkSession, sf_dir: str):
-    """Stages 1-2: near-dup candidate pairs -> connected components.
-    O(log n) star CC: same min-id labels as connected_components
-    (equality property-tested), ~20% faster here (A/B at sf0.1:
-    3.6s vs 4.5s warm) and round-bounded on chainy graphs."""
+    """Stages 1-2: near-dup candidate pairs -> connected components
+    (O(log n) star rounds, round-bounded on chainy graphs)."""
     corpus = _corpus_near(spark, sf_dir)
     pairs = D.minhash_near_dup_pairs(
         corpus, "text", "doc_id",
         n_hashes=N_HASHES, bands=BANDS, k=3, jaccard_threshold=JACCARD_T,
     )
-    return corpus, D.connected_components_star(
+    return corpus, D.connected_components(
         pairs, hot_degree_threshold=CC_HOT_DEGREE
     )  # (node, component)
 
