@@ -62,6 +62,71 @@ class TestSort:
         sorted_ok = SRT.validate_sorted(shuffled, ["event_id"])
         assert not sorted_ok
 
+    # spark.range(100, numPartitions=4): partition p holds ids 25p..25p+24
+    def _four_runs(self, spark, key_sql):
+        return spark.range(100, numPartitions=4).select(F.expr(key_sql).alias("k"))
+
+    def test_validate_sorted_detects_partitions_out_of_order(self, spark):
+        runs = self._four_runs(spark, "(3 - id div 25) * 25 + id % 25")
+        assert not SRT.validate_sorted(runs, ["k"])
+
+    def test_validate_sorted_detects_disorder_inside_one_partition(self, spark):
+        # ids 30 and 31 swap: partition 1's min and max are unchanged
+        runs = self._four_runs(
+            spark, "CASE id WHEN 30 THEN 31 WHEN 31 THEN 30 ELSE id END"
+        )
+        assert not SRT.validate_sorted(runs, ["k"])
+
+    def test_validate_sorted_skips_empty_partitions(self, spark):
+        runs = self._four_runs(spark, "id").where("k < 25 OR k >= 75")
+        assert SRT.validate_sorted(runs, ["k"])
+
+    def test_global_order_operators_accept_empty_input(self, spark):
+        empty = spark.range(0).select(
+            F.col("id").alias("k"), (F.col("id") % 3).alias("g"), F.col("id").alias("v")
+        )
+        for out in (
+            SRT.global_rank(empty, ["k"]),
+            SRT.global_ntile(empty, ["k"], 4),
+            SRT.global_cumulative_sums(empty, ["k"], ["v"], ["c"]),
+            SRT.global_cumulative_extreme(empty, ["k"], "v", "m"),
+            SRT.grouped_global_cumulative_sum(empty, ["g"], ["k"], "v", "c"),
+        ):
+            assert out.collect() == []
+
+    def test_sort_has_one_range_exchange_and_no_bare_collect(self):
+        import inspect
+        import re
+
+        src = inspect.getsource(SRT)
+        assert src.count("repartitionByRange") == 1
+        assert "repartitionByRange" in inspect.getsource(SRT.range_scan)
+        assert not re.search(r"\.(collect|first)\(", src)
+
+    def test_range_scan_returns_a_materialized_snapshot(self, spark):
+        from uda_spark.plans.explain import plan_str
+
+        df = spark.range(1000).select(((F.col("id") * 7919) % 1000).alias("k"))
+        snap, carries = SRT.range_scan(
+            df, ["k"], [F.count(F.lit(1)).alias("_n")], num_partitions=4
+        )
+        assert [r["_pid"] for r in carries] == [0, 1, 2, 3]
+        assert sum(r["_n"] for r in carries) == 1000
+        plan = plan_str(snap, mode="simple")
+        assert "Scan ExistingRDD" in plan.splitlines()[1]
+        assert "rangepartitioning" not in plan
+        # materialized: a bare lazy snapshot is not yet checkpointed
+        checkpointed = lambda d: d._jdf.queryExecution().analyzed().rdd().isCheckpointed()
+        assert checkpointed(snap)
+        assert not checkpointed(SRT.snapshot_lazy(df.repartition(3)))
+
+    def test_global_ntile_plan_has_no_nested_loop_join(self, spark):
+        from uda_spark.plans.explain import plan_str
+
+        df = spark.range(1000).select(((F.col("id") * 7919) % 1000).alias("k"))
+        deciles = SRT.global_ntile(df, ["k"], 10, num_partitions=4)
+        assert "BroadcastNestedLoopJoin" not in plan_str(deciles, mode="simple")
+
     def test_global_rank_is_dense_and_ordered(self, spark):
         ev = load_table(spark, SF_SMOKE, "events").select("event_id").limit(1000)
         ranked = SRT.global_rank(ev, ["event_id"], num_partitions=4)
@@ -2109,10 +2174,10 @@ class TestR14Guards:
     driver collects in the kernel-closure paths, integral-id contract."""
 
     def test_cc_convergence_sum_exact_near_long_max(self, spark):
-        """VERDICT r13 #2: the convergence check must accumulate in
-        DECIMAL, not sum longs and cast the result — with node ids near
-        2^62 a 5-node component's label sum overflows int64 (ANSI mode
-        throws, non-ANSI wraps and can falsely converge)."""
+        """CC over node ids near 2^62 converges on the edge-set
+        signature (row count + bit_xor of xxhash64(hi, lo)), which no
+        id size can overflow, and labels every node with the chain's
+        minimum id."""
         from uda_spark.operators.dedup import connected_components
 
         base = 1 << 62
@@ -2127,18 +2192,14 @@ class TestR14Guards:
         assert got == {base + i: base for i in range(5)}
 
     def test_bounded_collect_raises_past_cap(self, spark):
-        from uda_spark.operators.similarity import (
-            _MAX_CLOSURE_ROWS,
-            _bounded_collect,
-        )
+        from uda_spark.collect import DriverCollectBoundError, bounded_collect
 
         import pytest
 
         small = spark.range(10)
-        assert len(_bounded_collect(small, "t")) == 10
-        big = spark.range(_MAX_CLOSURE_ROWS + 5)
-        with pytest.raises(ValueError, match="broadcast-material"):
-            _bounded_collect(big, "t")
+        assert len(bounded_collect(small, "t", 10)) == 10
+        with pytest.raises(DriverCollectBoundError, match="t: more than 9 rows"):
+            bounded_collect(small, "t", 9)
 
     def test_lsh_scored_candidates_requires_integral_ids(self, spark):
         """ADVICE r13: the scoring kernel keys queries by int64 — a

@@ -98,7 +98,6 @@ BNLJ_BOUNDED: dict[str, str] = {
     "sketch_histogram_persisted_merge": "3-row quantile-target x 1-row total (inequality join over <=64 buckets)",
     "streaming_histogram_quantiles": "3-row quantile-target x 1-row total (inequality join over <=64 buckets)",
     "events_cusum_changepoint": "1-row (days, total) relation for the deviation scoring",
-    "window_ntile_deciles": "1-row max-rank total (global_ntile closed-form bucket)",
     "q11_important_parts": "scalar national-value threshold (1-row agg)",
     "q22_sales_opportunity": "scalar avg-balance threshold (1-row agg)",
     "dedup_embedding_near_pairs": "scalar corpus-norm stats (1-row agg)",
@@ -126,7 +125,6 @@ BNLJ_BOUNDED: dict[str, str] = {
     "dedup_lsh_recall_eval": "scalar ground-truth pair count (1-row agg)",
     "multimodal_phash_near_dup": "64-row bit-position table for hamming distance",
     "basket_copurchase_pairs": "scalar basket-count total (1-row agg)",
-    "orders_rfm_segments": "scalar R/F/M tercile boundaries (1-row agg)",
     "lineitem_abc_analysis": "scalar revenue grand total (1-row agg)",
     "events_key_skew_profile": "scalar corpus mean/p99 skew stats (1-row agg)",
     "sketch_kmv_intersection": "two 1-row KMV sketch relations",
@@ -167,7 +165,6 @@ BNLJ_BOUNDED: dict[str, str] = {
     "ml_average_precision_at_k": "fixed query set + bounded per-label counts",
     "ml_cramers_v": "bounded (source x lang) marginals + scalar n (chi-square sibling)",
     "ml_kruskal_wallis": "1-row tie/total/term aggregates for the H arithmetic",
-    "text_perplexity_filter": "1-row max-rank total (global_ntile closed-form bucket)",
     "sim_centroid_drift": "1-row corpus total crossed onto bounded (label x dim) sums",
     "pipeline_epoch_repetition": "1-row budget/weight scalars x bounded per-source table",
     "ml_brier_decomposition": "10-row calibration bins x 1-row totals",

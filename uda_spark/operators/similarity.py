@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from uda_spark.collect import bounded_collect
 from uda_spark.functions import portable
 from uda_spark.plans.partitioning import ensure_min_partitions
 
@@ -30,18 +31,6 @@ from uda_spark.plans.partitioning import ensure_min_partitions
 # OOMing the driver silently at scale (r14; same pattern as the
 # semdedup centroid-cell ceiling).
 _MAX_CLOSURE_ROWS = 1 << 16
-
-
-def _bounded_collect(df: DataFrame, what: str) -> list:
-    rows = df.limit(_MAX_CLOSURE_ROWS + 1).collect()
-    if len(rows) > _MAX_CLOSURE_ROWS:
-        raise ValueError(
-            f"{what}: more than {_MAX_CLOSURE_ROWS} rows would be collected "
-            "to the driver for the kernel closure — this relation is "
-            "broadcast-material by contract; reduce the query set or use "
-            "the brute-force/shuffled path"
-        )
-    return rows
 
 
 def _prep(df: DataFrame, id_col: str, vec_col: str, prefix: str) -> DataFrame:
@@ -451,7 +440,7 @@ def _lsh_scored_candidates(
         )
     qrows = sorted(
         (int(r["q_id"]), list(r["q_vec"]), int(r["q_norm"]))
-        for r in _bounded_collect(q, "_lsh_scored_candidates queries")
+        for r in bounded_collect(q, "_lsh_scored_candidates queries", _MAX_CLOSURE_ROWS)
     )
     qids = np.array([x for x, _, _ in qrows], dtype=np.int64)
     qnorms = np.array([n for _, _, n in qrows], dtype=np.int64)
@@ -956,7 +945,7 @@ def assign_nearest_centroid_f64(
     Input columns must be (long id, array<bigint> vec, int label);
     output: ``(id_col long, label_col int, cluster_col int)``.
     """
-    rows = _bounded_collect(cent, "assign_nearest_centroid_f64 centroids")
+    rows = bounded_collect(cent, "assign_nearest_centroid_f64 centroids", _MAX_CLOSURE_ROWS)
     if not rows:
         raise ValueError("assign_nearest_centroid_f64 requires >= 1 centroid")
     cs = sorted((int(r[cluster_col]), list(r[centroid_col])) for r in rows)
@@ -1900,7 +1889,7 @@ def pq_search(
     # top-k ranking — is bit-identical to the retired
     # interpreted `aggregate(sequence(...))` per-candidate lambda.
     lut = pq_query_luts(queries, codebook, id_col, vec_col, m, dim)
-    lrows = _bounded_collect(lut, "pq_search query LUTs")
+    lrows = bounded_collect(lut, "pq_search query LUTs", _MAX_CLOSURE_ROWS)
     qids = np.array([r["q_id"] for r in lrows], dtype=np.int64)
     luts = [
         [np.array(list(r["lut"][mm]), dtype=np.float64) for mm in range(m)]

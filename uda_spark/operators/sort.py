@@ -7,18 +7,34 @@ The reference achieves global order via Hadoop's TotalOrderPartitioner
 partitioner + per-partition sort — no single-node sort barrier, scales to
 any cluster width).
 
+The global-order operators (``global_rank``, ``global_ntile``,
+``global_cumulative_sums``, ``global_cumulative_extreme``,
+``grouped_global_cumulative_sum``) share one primitive,
+:func:`range_scan`: one range exchange, one snapshot tagged with physical
+partition ids, and one bounded collect of per-partition carries (the
+reference's per-MOF index metadata, O2).  Each operator adds the carries
+of all earlier partitions to a window that runs inside each partition.
+
 ``validate_sorted`` is the teravalidate equivalent
 (scripts/regression/mr-dstatExcel.sh:249-302): it checks physical order
-without a global shuffle — per-partition monotonicity plus a tiny
-partition-boundary check (num_partitions rows on the driver).
+without a global shuffle in one action — per-partition monotonicity and
+min/max keys, collected as one bounded row per partition.
 """
 
 from __future__ import annotations
 
+import operator
 from typing import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from uda_spark.collect import bounded_collect
+
+# Driver-collect bounds: a grouped range scan's carries hold one row per
+# partition plus one per group; validate_sorted's one per input partition.
+_MAX_GROUPS = 1 << 16
+_MAX_PARTITIONS = 1 << 20
 
 # ---------------------------------------------------------------------------
 # Checkpoint mode for the two-pass range-partitioned operators (and the
@@ -79,8 +95,8 @@ def snapshot(df: DataFrame) -> DataFrame:
 def snapshot_lazy(df: DataFrame) -> DataFrame:
     """:func:`snapshot` minus the dedicated materialization job: the RDD
     is only MARKED for local checkpointing, and the caller's
-    immediately-following full-pass action (the offsets/convergence
-    probe every two-pass operator and iterative loop runs anyway)
+    immediately-following full-pass action (the carries collect of
+    :func:`range_scan`, the convergence probe of the iterative loops)
     computes and persists it in ONE job instead of two.
 
     Only valid when exactly one consumer action runs before the relation
@@ -117,6 +133,81 @@ def top_k(df: DataFrame, keys: Sequence[str], k: int, ascending: bool = False) -
     return df.orderBy(*cols).limit(k)
 
 
+def range_scan(
+    df: DataFrame,
+    order_keys: Sequence[str],
+    partial_aggs: Sequence[Column],
+    group_keys: Sequence[str] = (),
+    num_partitions: int | None = None,
+) -> tuple[DataFrame, list]:
+    """The one range-partitioned scan behind every global-order operator.
+
+    Range-partition ``df`` on ``group_keys + order_keys``, sort within
+    each partition, tag rows with their partition id ``_pid`` and
+    snapshot; then run ``partial_aggs`` per ``_pid`` (and group) in one
+    bounded collect.  Returns ``(snapshot, carries)``, the carries
+    sorted by ``_pid``: at most ``num_partitions`` rows, plus one per
+    group, since a range partition covers a contiguous key span — the
+    per-partition index metadata of the reference's MOF index (O2).
+
+    Snapshot, not persist: the carries job and every later consumer
+    must see the same partition ids, which a recomputed (and perhaps
+    differently coalesced) range exchange would not guarantee.  The
+    carries collect is the lazy snapshot's single consumer, so the
+    snapshot is materialized when returned and may fan out freely.
+    """
+    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    key_cols = [F.col(k) for k in (*group_keys, *order_keys)]
+    snap = (
+        df.repartitionByRange(n, *key_cols)
+        .sortWithinPartitions(*key_cols)
+        .withColumn("_pid", F.spark_partition_id())
+        .transform(snapshot_lazy)
+    )
+    carries = bounded_collect(
+        snap.groupBy("_pid", *group_keys).agg(*partial_aggs),
+        "range_scan carries",
+        n + (_MAX_GROUPS if group_keys else 0),
+    )
+    return snap, sorted(carries, key=lambda r: r["_pid"])
+
+
+def _carry_map(carries: list, col: str, combine, start=None, cast=None) -> Column:
+    """The carry of each row's partition: ``combine`` of ``col`` over all
+    earlier partitions (``start`` for the first; NULL carries skipped),
+    looked up by ``_pid`` in a literal map — or just ``start`` for an
+    empty input, where an empty map would not type-check."""
+    def lit(v):
+        return F.lit(v) if cast is None else F.lit(v).cast(cast)
+
+    entries, run = [], start
+    for r in carries:
+        entries += [F.lit(r["_pid"]), lit(run)]
+        if r[col] is not None:
+            run = r[col] if run is None else combine(run, r[col])
+    return F.create_map(*entries)[F.col("_pid")] if entries else lit(start)
+
+
+def _pid_window(order_keys: Sequence[str], group_keys: Sequence[str] = ()):
+    """Exclusive running frame within each (partition, group)."""
+    return (
+        Window.partitionBy("_pid", *group_keys)
+        .orderBy(*order_keys)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+
+
+def _rank(
+    df: DataFrame, keys: Sequence[str], num_partitions: int | None, alias: str
+) -> tuple[DataFrame, int]:
+    snap, carries = range_scan(
+        df, keys, [F.count(F.lit(1)).alias("_n")], num_partitions=num_partitions
+    )
+    rn = F.row_number().over(Window.partitionBy("_pid").orderBy(*keys))
+    rank = (rn + _carry_map(carries, "_n", operator.add, 0)).cast("long")
+    return snap.withColumn(alias, rank).drop("_pid"), sum(r["_n"] for r in carries)
+
+
 def global_rank(
     df: DataFrame,
     keys: Sequence[str],
@@ -124,45 +215,11 @@ def global_rank(
     alias: str = "rnk",
 ) -> DataFrame:
     """1-based dense global rank by ``keys`` without a single-partition
-    window (the scalable total-order-rank pattern).
-
-    Range-partition by the keys, row_number within each partition, then add
-    per-partition offsets (one tiny driver-side pass over num_partitions
-    counts — the same metadata volume as the reference's MOF index, O2).
-    Requires unique key tuples for a deterministic result.
+    window: :func:`range_scan` with per-partition counts, then
+    ``row_number`` within each partition plus the rows of all earlier
+    partitions.  Requires unique key tuples for a deterministic result.
     """
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    key_cols = [F.col(k) for k in keys]
-    parted = df.repartitionByRange(n, *key_cols).sortWithinPartitions(*key_cols)
-    # Checkpoint (snapshot), not persist: the offsets job and the
-    # rank job must observe the SAME physical partition ids.  A persisted
-    # plan can still recompute (cache eviction / executor loss), and a
-    # re-evaluated range exchange may be coalesced differently by AQE per
-    # downstream plan, silently shifting ids between the two jobs.
-    # Checkpointing truncates lineage so both jobs read the one
-    # materialized snapshot; local vs reliable is set_checkpoint_mode.
-    # LAZY variant: the offsets collect below is the single full-pass
-    # consumer that materializes the checkpoint — one job, not two.
-    snap = parted.withColumn("_pid", F.spark_partition_id()).transform(snapshot_lazy)
-    w = Window.partitionBy("_pid").orderBy(*key_cols)
-    ranked = snap.withColumn("_rn", F.row_number().over(w))
-
-    counts = sorted(
-        ranked.groupBy("_pid").count().collect(), key=lambda r: r["_pid"]
-    )
-    offsets: dict[int, int] = {}
-    acc = 0
-    for row in counts:
-        offsets[row["_pid"]] = acc
-        acc += row["count"]
-    offset_map = F.create_map(
-        *[F.lit(v) for pid_off in offsets.items() for v in pid_off]
-    )
-    return (
-        ranked.withColumn(alias, (F.col("_rn") + offset_map[F.col("_pid")]).cast("long"))
-        .drop("_pid", "_rn")
-    )
+    return _rank(df, keys, num_partitions, alias)[0]
 
 
 def global_cumulative_extreme(
@@ -178,52 +235,25 @@ def global_cumulative_extreme(
     NULL for the global first row) without a single-partition window —
     the skyline/Pareto building block.
 
-    Same two-pass shape as :func:`global_cumulative_sums`: range-partition
-    on the keys, exclusive window per physical partition, then combine
-    with the prefix-extreme of the per-partition extremes, collected as
-    O(num_partitions) driver metadata and broadcast back as a literal
-    map.  ``least``/``greatest`` skip NULLs, so the partition-local NULL
-    (first row) and the no-prior-partition NULL compose correctly.
-    Requires unique key tuples per row (group first).
+    :func:`range_scan` with per-partition extremes; each row combines
+    its partition's exclusive window extreme with the extreme of all
+    earlier partitions.  ``least``/``greatest`` skip NULLs, so the
+    partition-local NULL (first row) and the no-prior-partition NULL
+    compose correctly.  Requires unique key tuples per row (group
+    first).
     """
     if agg not in ("min", "max"):
         raise ValueError(f"agg must be 'min' or 'max', got {agg!r}")
     fn = F.min if agg == "min" else F.max
     comb = F.least if agg == "min" else F.greatest
-    py_comb = min if agg == "min" else max
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    key_cols = [F.col(k) for k in order_keys]
-    dt = df.schema[value_col].dataType
-    parted = df.repartitionByRange(n, *key_cols).sortWithinPartitions(*key_cols)
-    # snapshot() for the same reason as global_rank: the extremes job
-    # and the window job must observe identical physical partition ids.
-    snap = parted.withColumn("_pid", F.spark_partition_id()).transform(snapshot_lazy)
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy(*key_cols)
-        .rowsBetween(Window.unboundedPreceding, -1)
+    snap, carries = range_scan(
+        df, order_keys, [fn(value_col).alias("_t")], num_partitions=num_partitions
     )
-    within = fn(value_col).over(w)
-
-    totals = sorted(
-        snap.groupBy("_pid").agg(fn(value_col).alias("_t")).collect(),
-        key=lambda r: r["_pid"],
+    carry = _carry_map(
+        carries, "_t", min if agg == "min" else max, cast=df.schema[value_col].dataType
     )
-    prefix: dict[int, object] = {}
-    run = None
-    for row in totals:
-        prefix[row["_pid"]] = run
-        if row["_t"] is not None:
-            run = row["_t"] if run is None else py_comb(run, row["_t"])
-    offset_map = F.create_map(
-        *[
-            c
-            for pid, off in prefix.items()
-            for c in (F.lit(pid), F.lit(off).cast(dt))
-        ]
-    )
-    return snap.withColumn(alias, comb(within, offset_map[F.col("_pid")])).drop("_pid")
+    within = fn(value_col).over(_pid_window(order_keys))
+    return snap.withColumn(alias, comb(within, carry)).drop("_pid")
 
 
 def grouped_global_cumulative_sum(
@@ -236,48 +266,33 @@ def grouped_global_cumulative_sum(
 ) -> DataFrame:
     """Per-group exclusive running SUM(``value_col``) over the global
     ``order_keys`` order WITHIN each group, with no per-group
-    single-partition window: range-partition on (group_keys +
-    order_keys), window per (physical partition, group), then add
-    per-(partition, group) subtotals back as a broadcast offset join.
+    single-partition window: :func:`range_scan` on (group_keys +
+    order_keys) with per-(partition, group) subtotals, a window per
+    (partition, group), and each group's running offset across its
+    partitions added back as a broadcast join.
 
     The plain ``Window.partitionBy(group).orderBy(keys)`` is already
     partitioned BY GROUP — this helper matters when ONE group's
     order-key cardinality is itself huge (a hot group's window runs in
     one task); here every group spans as many range partitions as its
-    size demands.  Because range partitions cover contiguous
-    (group, order) spans, the collected offset relation has at most
-    num_partitions + num_groups rows — driver metadata, same class as
-    :func:`global_rank`'s counts.  Requires unique
-    (group + order) key tuples per row.
+    size demands.  Requires unique (group + order) key tuples per row.
     """
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    gcols = [F.col(k) for k in group_keys]
-    ocols = [F.col(k) for k in order_keys]
-    parted = df.repartitionByRange(n, *gcols, *ocols).sortWithinPartitions(
-        *gcols, *ocols
+    snap, carries = range_scan(
+        df, order_keys, [F.sum(value_col).alias("_t")],
+        group_keys=group_keys, num_partitions=num_partitions,
     )
-    snap = parted.withColumn("_pid", F.spark_partition_id()).transform(snapshot_lazy)
-    w = (
-        Window.partitionBy("_pid", *group_keys)
-        .orderBy(*ocols)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    within = F.coalesce(F.sum(value_col).over(w), F.lit(0))
-
-    totals = snap.groupBy("_pid", *group_keys).agg(F.sum(value_col).alias("_t")).collect()
-    # running offset per group across its (contiguous) partition span
+    within = F.coalesce(F.sum(value_col).over(_pid_window(order_keys, group_keys)), F.lit(0))
+    if not carries:  # empty input: schema inference has nothing to work with
+        return snap.withColumn(alias, F.lit(0).cast("long")).drop("_pid")
+    # carries come in _pid order and each group's partitions are
+    # contiguous, so one running offset per group suffices
     acc: dict[tuple, int] = {}
     rows = []
-    for r in sorted(totals, key=lambda r: (tuple(r[k] for k in group_keys), r["_pid"])):
+    for r in carries:
         g = tuple(r[k] for k in group_keys)
         rows.append((r["_pid"],) + g + (acc.get(g, 0),))
         acc[g] = acc.get(g, 0) + (r["_t"] or 0)
-    if not rows:  # empty input: schema inference has nothing to work with
-        return snap.withColumn(alias, F.lit(0).cast("long")).drop("_pid")
-    offsets = spark.createDataFrame(
-        rows, ["_pid", *group_keys, "_goff"]
-    )
+    offsets = df.sparkSession.createDataFrame(rows, ["_pid", *group_keys, "_goff"])
     return (
         snap.join(F.broadcast(offsets), on=["_pid", *group_keys])
         .withColumn(alias, (within + F.col("_goff")).cast("long"))
@@ -293,66 +308,59 @@ def global_ntile(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Exact NTILE(n) over the global ``keys`` order without a
-    single-partition window: :func:`global_rank`'s two-pass
-    range-partitioned rank plus the closed-form bucket from
-    (rank, total) — the first ``total % n`` buckets take one extra row,
-    exactly Window-ntile semantics.  Requires unique key tuples (append
-    a tiebreaker column); for a descending dimension pass a negated
-    column.  ``total`` is the max rank, broadcast as one row.
+    single-partition window: :func:`global_rank`'s range-partitioned
+    rank plus the closed-form bucket from (rank, total) — the first
+    ``total % n`` buckets take one extra row, exactly Window-ntile
+    semantics.  ``total`` is the sum of the range scan's partition
+    counts, so it costs no job of its own.  Requires unique key tuples
+    (append a tiebreaker column); for a descending dimension pass a
+    negated column.
     """
-    n = int(n_buckets)
-    ranked = global_rank(df, keys, num_partitions=num_partitions, alias="_gnt_rnk")
-    tot = ranked.agg(F.max("_gnt_rnk").alias("_gnt_total"))
-    big = f"(_gnt_total div {n} + 1)"
-    nbig = f"(_gnt_total % {n})"
+    ranked, total = _rank(df, keys, num_partitions, "_gnt_rnk")
+    small, nbig = divmod(total, int(n_buckets))
+    head = nbig * (small + 1)  # rows in the first nbig (larger) buckets
+    # the ELSE branch is unreachable when small == 0 (every rank <= head)
     bucket = (
-        f"CAST(CASE WHEN _gnt_rnk <= {nbig} * {big} "
-        f"THEN (_gnt_rnk - 1) div {big} + 1 "
-        f"ELSE {nbig} + (_gnt_rnk - 1 - {nbig} * {big})"
-        f" div (_gnt_total div {n}) + 1 END AS INT)"
+        f"CAST(CASE WHEN _gnt_rnk <= {head} THEN (_gnt_rnk - 1) div {small + 1} + 1 "
+        f"ELSE {nbig} + (_gnt_rnk - 1 - {head}) div {max(small, 1)} + 1 END AS INT)"
     )
-    return (
-        ranked.crossJoin(F.broadcast(tot))
-        .withColumn(alias, F.expr(bucket))
-        .drop("_gnt_rnk", "_gnt_total")
-    )
+    return ranked.withColumn(alias, F.expr(bucket)).drop("_gnt_rnk")
 
 
 def validate_sorted(df: DataFrame, keys: Sequence[str]) -> bool:
     """Teravalidate equivalent: is ``df`` physically in global ``keys`` order?
 
-    Scalable strategy (no global window):
-      1. snapshot physical order with ``monotonically_increasing_id`` (which
-         encodes partition index + in-partition position);
-      2. per partition, count rows where the key tuple decreases vs the
-         previous physical row (distributed window keyed by partition id);
-      3. check partition boundaries: max(partition i) <= min(partition i+1)
-         over one tiny collected row per partition.
+    One action, no global window: tag each row with its partition id and
+    ``monotonically_increasing_id`` (partition index + in-partition
+    position), then per partition count the rows whose key tuple drops
+    below the previous physical row's (a lag window keyed by partition
+    id) alongside the partition's min and max key.  The per-partition
+    summaries come back in one bounded collect; ``df`` is ordered iff no
+    partition has a drop and each non-empty partition's max is at most
+    the next non-empty partition's min.
     """
-    snap = df.select(
+    tagged = df.select(
         F.spark_partition_id().alias("_pid"),
         F.monotonically_increasing_id().alias("_mid"),
-        F.struct(*[F.col(k) for k in keys]).alias("_key"),
+        F.struct(*keys).alias("_key"),
     )
-    w = Window.partitionBy("_pid").orderBy("_mid")
-    within_violations = (
-        snap.withColumn("_prev", F.lag("_key").over(w))
-        .where(F.col("_prev").isNotNull() & (F.col("_prev") > F.col("_key")))
-        .count()
+    prev = F.lag("_key").over(Window.partitionBy("_pid").orderBy("_mid"))
+    summary = (
+        tagged.withColumn("_prev", prev)
+        .groupBy("_pid")
+        .agg(
+            F.count(F.when(F.col("_prev") > F.col("_key"), 1)).alias("drops"),
+            F.min("_key").alias("lo"),
+            F.max("_key").alias("hi"),
+        )
     )
-    if within_violations:
-        return False
-
-    bounds = (
-        snap.groupBy("_pid")
-        .agg(F.min("_key").alias("lo"), F.max("_key").alias("hi"))
-        .orderBy("_pid")
-        .collect()
+    parts = sorted(
+        bounded_collect(summary, "validate_sorted partition summaries", _MAX_PARTITIONS),
+        key=lambda r: r["_pid"],
     )
-    for prev, cur in zip(bounds, bounds[1:]):
-        if prev["hi"] > cur["lo"]:
-            return False
-    return True
+    return not any(r["drops"] for r in parts) and all(
+        a["hi"] <= b["lo"] for a, b in zip(parts, parts[1:])
+    )
 
 
 def global_cumulative_sums(
@@ -370,48 +378,27 @@ def global_cumulative_sums(
     DECIMAL running totals); the default long cast suits counting
     applications.
 
-    Same two-pass shape as :func:`global_rank`: range-partition on the
-    keys, window within each physical partition, then add
-    per-partition subtotals collected as O(num_partitions) driver
-    metadata and broadcast back as a literal map.  A naive
-    ``Window.orderBy(keys)`` forces every row through ONE task; this
-    keeps the window partitioned and scales with cluster width.  All
-    columns share the one range exchange, checkpoint and subtotal
-    collect, so CDF-style readouts (e.g. the two-sample KS statistic
-    needs both class counts cumulated over one score order) cost a
-    single pass.  Requires unique key tuples per row (group first — the
-    callers feed distinct-key grouped relations).
+    :func:`range_scan` with per-partition subtotals; each row adds its
+    partition's exclusive window sum to the subtotals of all earlier
+    partitions.  A naive ``Window.orderBy(keys)`` forces every row
+    through ONE task; this keeps the window partitioned and scales with
+    cluster width.  All columns share the one scan, so CDF-style
+    readouts (e.g. the two-sample KS statistic needs both class counts
+    cumulated over one score order) cost a single pass.  Requires unique
+    key tuples per row (group first — the callers feed distinct-key
+    grouped relations).
     """
     assert len(value_cols) == len(aliases)
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    key_cols = [F.col(k) for k in order_keys]
-    parted = df.repartitionByRange(n, *key_cols).sortWithinPartitions(*key_cols)
-    # snapshot(): the subtotal job and the window job must see the
-    # same physical partition ids (see global_rank)
-    snap = parted.withColumn("_pid", F.spark_partition_id()).transform(snapshot_lazy)
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy(*key_cols)
-        .rowsBetween(Window.unboundedPreceding, -1)
+    snap, carries = range_scan(
+        df, order_keys,
+        [F.sum(v).alias(f"_t{i}") for i, v in enumerate(value_cols)],
+        num_partitions=num_partitions,
     )
-    totals = sorted(
-        snap.groupBy("_pid")
-        .agg(*[F.sum(v).alias(f"_t{i}") for i, v in enumerate(value_cols)])
-        .collect(),
-        key=lambda r: r["_pid"],
-    )
+    w = _pid_window(order_keys)
     out = snap
     for i, (vcol, alias) in enumerate(zip(value_cols, aliases)):
-        offsets: dict[int, int] = {}
-        acc = 0
-        for row in totals:
-            offsets[row["_pid"]] = acc
-            acc += row[f"_t{i}"] or 0
-        offset_map = F.create_map(
-            *[F.lit(v) for pid_off in offsets.items() for v in pid_off]
-        )
-        total = F.coalesce(F.sum(vcol).over(w), F.lit(0)) + offset_map[F.col("_pid")]
+        carry = _carry_map(carries, f"_t{i}", operator.add, 0)
+        total = F.coalesce(F.sum(vcol).over(w), F.lit(0)) + carry
         if result_cast is not None:
             total = total.cast(result_cast)
         out = out.withColumn(alias, total)
