@@ -5,6 +5,7 @@ import os
 import duckdb
 import pytest
 
+from uda_spark.cache import release_persisted
 from uda_spark.session import get_spark
 from uda_spark.sources.tables import TABLES, table_path
 
@@ -21,6 +22,14 @@ def spark():
     s = get_spark("uda_spark_tests")
     yield s
     s.stop()
+
+
+@pytest.fixture(autouse=True)
+def _release_leftovers():
+    """Every test ends by releasing what it left behind: its tracked
+    persists and its scratch directories."""
+    yield
+    release_persisted()
 
 
 def make_duck(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -23,7 +23,6 @@ from pyspark.sql import SparkSession
 
 from tests.conftest import SF_SMOKE, make_duck
 from tests.test_oracle_parity import ORACLE_NAMES, SPECS, _rows_to_set
-from uda_spark.cache import release_persisted
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _SWEEP_PASSED: list[str] = []
@@ -109,10 +108,7 @@ def test_query_matches_oracle_plain_session(name, plain_spark, duck):
     spec = SPECS[name]
     sdf = spec.fn(plain_spark, SF_SMOKE)
     s_cols = [c.lower() for c in sdf.columns]
-    try:
-        s_rows = [tuple(r) for r in sdf.collect()]
-    finally:
-        release_persisted()
+    s_rows = [tuple(r) for r in sdf.collect()]
 
     rel = duck.sql(spec.oracle)
     d_cols = [c.lower() for c in rel.columns]

@@ -77,6 +77,50 @@ def test_null_blob_raises_named_error(spark, op):
         run(nulled).collect()
 
 
+def test_kernels_run_where_uda_spark_is_not_importable(spark, monkeypatch, tmp_path):
+    """Every blob kernel runs over its Arrow input, and the ``uda_kv``
+    data source's reader reads a segment, in an interpreter that cannot
+    import ``uda_spark`` (cwd outside the checkout, no PYTHONPATH): the
+    package is pickled by value."""
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from uda_spark.sources.hadoop_kv import encode_kv_records
+    from uda_spark.sources.pyds import UdaKVDataSource
+
+    blobs = _blobs(spark, n=4)
+    calls, real = [], type(blobs).mapInArrow
+    monkeypatch.setattr(
+        type(blobs), "mapInArrow",
+        lambda self, fn, *a, **kw: calls.append((fn, self)) or real(self, fn, *a, **kw),
+    )
+    for _, run in BLOB_OPS.values():
+        run(blobs)
+    assert len(calls) == len(BLOB_OPS)
+    kv = tmp_path / "kv"
+    kv.mkdir()
+    (kv / "part-00000").write_bytes(encode_kv_records([(b"k", b"v")]))
+
+    def runs(code: str, obj=None) -> bool:
+        return not subprocess.run(
+            [sys.executable, "-c", "import pickle, sys; x = pickle.loads(sys.stdin.buffer.read()); " + code],
+            input=cloudpickle.dumps(obj), cwd=tmp_path, env={}, capture_output=True,
+        ).returncode
+
+    assert not runs("import uda_spark")
+    kernel = "fn, batches = x; assert sum(b.num_rows for b in fn(iter(batches)))"
+    failed = [
+        name for (name, _), (fn, src) in zip(BLOB_OPS.values(), calls)
+        if not runs(kernel, (fn, src.toArrow().to_batches()))
+    ]
+    source = "r = x.reader(x.schema()); assert sum(b.num_rows for p in r.partitions() for b in r.read(p))"
+    if not runs(source, UdaKVDataSource({"path": str(kv)})):
+        failed.append("UdaKVDataSource")
+    assert failed == []
+
+
 def test_int_ids_widen_to_long(spark):
     """Every operator's output ``id`` is long, also for an int id column."""
     blobs = _blobs(spark, n=4).withColumn("doc_id", F.col("doc_id").cast("int"))

@@ -3,11 +3,16 @@ see (physical sortedness, plan shapes, workload validators)."""
 
 from __future__ import annotations
 
+import os
+import pathlib
+import re
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
+from uda_spark import cache
 from uda_spark.operators import join as J
 from uda_spark.operators import kv as KV
 from uda_spark.operators import sort as SRT
@@ -398,16 +403,54 @@ class TestPartitioningHelpers:
         assert bad == 0
 
 
+_TEMP_API = re.compile(r"\b(tempfile|gettempdir|mkdtemp)\b")
+
+
+def _temp_api_users(pkg_root) -> list[str]:
+    """Modules of ``pkg_root`` other than its ``cache.py`` that name the
+    temp-dir API: scratch paths have one owner, ``cache.scratch_dir``."""
+    return sorted(
+        str(p.relative_to(pkg_root)) for p in pkg_root.rglob("*.py")
+        if p != pkg_root / "cache.py" and _TEMP_API.search(p.read_text())
+    )
+
+
 class TestCacheLifecycle:
     def test_tracked_persist_releases(self, spark):
-        from uda_spark import cache
-
         df = cache.tracked_persist(spark.range(1000))
-        df.count()  # materialize the cached blocks
-        assert df.storageLevel.useMemory
-        released = cache.release_persisted()
-        assert released >= 1
-        assert not cache._TRACKED
+        df.count()
+        path = cache.scratch_dir("uda_test_owner")
+        os.makedirs(path)
+        assert df.storageLevel.useMemory and os.path.isdir(path)
+        assert cache.release_persisted() == 1
+        assert not df.storageLevel.useMemory and not os.path.exists(path)
+
+    def test_scratch_query_builds_get_their_own_dirs(self, spark):
+        """Two builds of one round-trip query write to two paths, and
+        release deletes both."""
+        from urllib.parse import urlparse
+
+        from uda_spark.queries.formats import csv_roundtrip_supplier as build
+
+        dirs = {
+            os.path.dirname(urlparse(f).path)
+            for _ in range(2) for f in build(spark, SF_SMOKE).inputFiles()
+        }
+        assert len(dirs) == 2 and all(map(os.path.isdir, dirs))
+        cache.release_persisted()
+        assert not any(map(os.path.exists, dirs))
+
+    def test_only_cache_names_the_temp_dir_api(self):
+        assert _temp_api_users(pathlib.Path(cache.__file__).parent) == []
+
+    def test_temp_dir_lint_flags_a_private_path(self, tmp_path):
+        for name, src in (
+            ("cache.py", "import tempfile"),
+            ("io.py", "from tempfile import mkdtemp"),
+            ("ok.py", "from uda_spark.cache import scratch_dir"),
+        ):
+            (tmp_path / name).write_text(src)
+        assert _temp_api_users(tmp_path) == ["io.py"]
 
 
 class TestBpeMergeRule:
@@ -888,7 +931,6 @@ def test_lsh_dedup_scale_stress(spark):
     sf0.1 (SCALING.md dedup section)."""
     import time
 
-    from uda_spark.cache import release_persisted
     from uda_spark.operators.dedup import minhash_near_dup_pairs
 
     # 200k docs needs a properly-sized driver JVM; if another module
@@ -925,7 +967,6 @@ def test_lsh_dedup_scale_stress(spark):
     )
     got = {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
     wall = time.perf_counter() - t0
-    release_persisted()
 
     planted = {(float(i), float(i + 1_000_000)) for i in range(n_pairs)}
     got_norm = {(float(min(a, b)), float(max(a, b))) for a, b in got}
@@ -950,7 +991,6 @@ def test_prefix_filter_skew_stress(spark):
     (the cap only touches tokens hotter than the cap)."""
     import time
 
-    from uda_spark.cache import release_persisted
     from uda_spark.operators.dedup import prefix_filter_similarity_pairs
 
     n_unique, n_family, n_pairs = 5_000, 2_000, 200
@@ -990,7 +1030,6 @@ def test_prefix_filter_skew_stress(spark):
     )
     got = {(int(r["doc_a"]), int(r["doc_b"])) for r in pairs.collect()}
     wall = time.perf_counter() - t0
-    release_persisted()
 
     planted = {(i, i + 1_000_000) for i in range(n_pairs)}
     missing = planted - got
@@ -1269,7 +1308,6 @@ class TestRound5PlanQuality:
         from uda_spark.plans.explain import plan_str
         from uda_spark.operators import similarity as SIM
         from uda_spark.sources.tables import load_table
-        from uda_spark.cache import release_persisted
 
         emb = load_table(spark, SF_SMOKE, "embeddings")
         codebook = SIM.pq_train_codebooks(emb, "vec_id", "embedding")
@@ -1282,7 +1320,6 @@ class TestRound5PlanQuality:
         # project -> broadcast join with no shuffle exchange above it
         corpus_side = plan.split("BroadcastExchange")[0]
         assert "Exchange hashpartitioning" not in corpus_side
-        release_persisted()
 
 
 import pytest
@@ -1325,12 +1362,10 @@ class TestAnalyticsInvariants:
             assert 0.0 <= r["type_entropy_bits"] <= math.log2(r["n_types"]) + 1e-9, r
 
     def test_cluster_density_in_unit_interval(self, spark):
-        from uda_spark.cache import release_persisted
         from uda_spark.registry import all_specs
         from tests.conftest import SF_SMOKE
 
         rows = all_specs()["graph_cluster_density"].fn(spark, SF_SMOKE).collect()
-        release_persisted()
         assert rows
         for r in rows:
             assert r["n_nodes"] >= 2 and 0.0 < r["density"] <= 1.0, r
@@ -1368,12 +1403,10 @@ class TestRound5EvalInvariants:
             assert r["recall_pct"] == r["n_hits"] * 100 // r["k"], r
 
     def test_minhash_calibration_bounds(self, spark):
-        from uda_spark.cache import release_persisted
         from uda_spark.registry import all_specs
         from tests.conftest import SF_SMOKE
 
         rows = all_specs()["dedup_minhash_calibration"].fn(spark, SF_SMOKE).collect()
-        release_persisted()
         assert rows
         for r in rows:
             assert 0 <= r["n_match"] <= 16, r
@@ -1436,7 +1469,6 @@ class TestLeakageAndBloomInvariants:
         from pyspark.sql import functions as F
 
         from tests.conftest import SF_SMOKE
-        from uda_spark.cache import release_persisted
         from uda_spark.functions import portable
         from uda_spark.operators import dedup as D
         from uda_spark.queries.dedup import (
@@ -1475,7 +1507,6 @@ class TestLeakageAndBloomInvariants:
             .where(F.col("sa") != F.col("sb"))
             .count()
         )
-        release_persisted()
         assert straddle == 0
 
     def test_bloom_filter_never_false_negative(self, spark):
@@ -1604,18 +1635,14 @@ class TestPqIndexLifecycle:
         """pq_build_index exists so the bench (and any serving path) can
         amortize training: both halves of the index must come back
         persisted, not as lazy lineage that re-trains per consumer."""
-        from uda_spark.cache import release_persisted
         from uda_spark.operators import similarity as SIM
         from uda_spark.sources.tables import load_table
 
         emb = load_table(spark, SF_SMOKE, "embeddings")
         codebook, coded = SIM.pq_build_index(emb, "vec_id", "embedding")
-        try:
-            assert codebook.storageLevel.useMemory or codebook.storageLevel.useDisk
-            assert coded.storageLevel.useMemory or coded.storageLevel.useDisk
-            assert coded.columns == ["c_id", "codes"]
-        finally:
-            release_persisted()
+        assert codebook.storageLevel.useMemory or codebook.storageLevel.useDisk
+        assert coded.storageLevel.useMemory or coded.storageLevel.useDisk
+        assert coded.columns == ["c_id", "codes"]
 
 
 def test_aqe_coalesces_shuffle_partitions(spark):
@@ -1773,24 +1800,21 @@ def test_semdedup_planted_giant_cluster_stress(spark):
     t0 = time.monotonic()
     assigned = S.semdedup_coarse_quantizer(corpus, "vid", "v", tgt)
     capped = S.cap_group_sizes(assigned, "cluster", "vid", tgt, out_col="g2")
-    capped = capped.persist()
-    try:
-        stats = (
-            capped.groupBy("g2")
-            .count()
-            .agg(
-                F.max("count").alias("max_c"),
-                F.sum(F.expr("count * (count - 1) div 2")).alias("pairs"),
-            )
-            .first()
+    capped = cache.tracked_persist(capped)
+    stats = (
+        capped.groupBy("g2")
+        .count()
+        .agg(
+            F.max("count").alias("max_c"),
+            F.sum(F.expr("count * (count - 1) div 2")).alias("pairs"),
         )
-        giant_groups = (
-            capped.where(F.col("vid") < n_half).select("g2").distinct().count()
-        )
-        total = capped.count()
-        wall = time.monotonic() - t0
-    finally:
-        capped.unpersist()
+        .first()
+    )
+    giant_groups = (
+        capped.where(F.col("vid") < n_half).select("g2").distinct().count()
+    )
+    total = capped.count()
+    wall = time.monotonic() - t0
     assert total == 2 * n_half
     # measured: max group 66 -> max per-task pair count 66*65/2 = 2145,
     # UNDER target² = 2500 (vs 50M for the fixed-k single-cluster task)
@@ -2122,40 +2146,37 @@ def test_semdedup_hier_planted_giant_super_stress(spark):
     )
     corpus = giant.unionByName(spread)
     t0 = time.monotonic()
-    assigned = S.semdedup_hierarchical_quantizer(
+    assigned = cache.tracked_persist(S.semdedup_hierarchical_quantizer(
         corpus, "vid", "v", tgt, row_replication=rep, keep_super=True
-    ).persist()
-    try:
-        total = assigned.count()
-        # the giant mass's super-cluster(s): per-(super, salt) assignment
-        # task sizes — the salting must cap any one task well under the
-        # whole super (the level-2 GEMM reads only that slice)
-        salt_hash = portable.hash60("concat('hr|', CAST(vid AS STRING))", "spark")
-        task_sizes = (
-            assigned.groupBy("super", F.expr(f"pmod({salt_hash}, {rep})"))
-            .count()
-            .agg(F.max("count").alias("max_task"))
-            .first()
+    ))
+    total = assigned.count()
+    # the giant mass's super-cluster(s): per-(super, salt) assignment
+    # task sizes — the salting must cap any one task well under the
+    # whole super (the level-2 GEMM reads only that slice)
+    salt_hash = portable.hash60("concat('hr|', CAST(vid AS STRING))", "spark")
+    task_sizes = (
+        assigned.groupBy("super", F.expr(f"pmod({salt_hash}, {rep})"))
+        .count()
+        .agg(F.max("count").alias("max_task"))
+        .first()
+    )
+    max_sup = (
+        assigned.groupBy("super").count().agg(F.max("count")).first()[0]
+    )
+    capped = S.cap_group_sizes(
+        assigned.select("vid", "v", "cluster"), "cluster", "vid", tgt,
+        out_col="g2",
+    )
+    stats = (
+        capped.groupBy("g2")
+        .count()
+        .agg(
+            F.max("count").alias("max_c"),
+            F.sum(F.expr("count * (count - 1) div 2")).alias("pairs"),
         )
-        max_sup = (
-            assigned.groupBy("super").count().agg(F.max("count")).first()[0]
-        )
-        capped = S.cap_group_sizes(
-            assigned.select("vid", "v", "cluster"), "cluster", "vid", tgt,
-            out_col="g2",
-        )
-        stats = (
-            capped.groupBy("g2")
-            .count()
-            .agg(
-                F.max("count").alias("max_c"),
-                F.sum(F.expr("count * (count - 1) div 2")).alias("pairs"),
-            )
-            .first()
-        )
-        wall = time.monotonic() - t0
-    finally:
-        assigned.unpersist()
+        .first()
+    )
+    wall = time.monotonic() - t0
     assert total == 2 * n_half
     # hash salting spreads the biggest super over ~rep tasks (Chernoff
     # concentration at these sizes keeps the max near the mean)

@@ -14,7 +14,6 @@ import math
 
 import pytest
 
-from uda_spark.cache import release_persisted
 from uda_spark.registry import all_specs
 from tests.conftest import SF_SMOKE
 
@@ -51,10 +50,7 @@ def test_query_matches_oracle(name, spark, duck_smoke):
     spec = SPECS[name]
     sdf = spec.fn(spark, SF_SMOKE)
     s_cols = [c.lower() for c in sdf.columns]
-    try:
-        s_rows = [tuple(r) for r in sdf.collect()]
-    finally:
-        release_persisted()  # drop tracked intermediates (minhash/simhash)
+    s_rows = [tuple(r) for r in sdf.collect()]
 
     rel = duck_smoke.sql(spec.oracle)
     d_cols = [c.lower() for c in rel.columns]

@@ -53,7 +53,6 @@ import re
 import pytest
 
 from tests.conftest import SF_SMOKE
-from uda_spark.cache import release_persisted
 from uda_spark.plans.explain import plan_str
 from uda_spark.registry import all_specs
 
@@ -287,12 +286,9 @@ def _topk_violation(name: str, simple_plan: str, merges: int) -> str | None:
 @pytest.mark.parametrize("name", ALL_NAMES)
 def test_plan_lint(name, spark):
     spec = SPECS[name]
-    try:
-        df = spec.fn(spark, SF_SMOKE)
-        simple = plan_str(df, mode="simple")
-        formatted = plan_str(df, final_only=False)
-    finally:
-        release_persisted()
+    df = spec.fn(spark, SF_SMOKE)
+    simple = plan_str(df, mode="simple")
+    formatted = plan_str(df, final_only=False)
 
     sp = _sp_violations(simple)
     if name not in SP_BOUNDED:

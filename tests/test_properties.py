@@ -413,11 +413,9 @@ class TestQualityOrderStatInvariants:
 
     def test_winsorize_cut_and_sum_bounds(self, spark):
         from tests.conftest import SF_SMOKE
-        from uda_spark.cache import release_persisted
         from uda_spark.registry import all_specs
 
         rows = all_specs()["events_value_winsorize"].fn(spark, SF_SMOKE).collect()
-        release_persisted()
         assert rows
         for r in rows:
             n = r["n"]
@@ -429,12 +427,10 @@ class TestQualityOrderStatInvariants:
 
     def test_mad_anomalies_satisfy_their_threshold(self, spark):
         from tests.conftest import SF_SMOKE
-        from uda_spark.cache import release_persisted
         from uda_spark.queries.quality import MAD_K
         from uda_spark.registry import all_specs
 
         rows = all_specs()["events_hourly_anomalies_mad"].fn(spark, SF_SMOKE).collect()
-        release_persisted()
         for r in rows:
             assert r["mad_events"] > 0
             assert abs(r["n_events"] - r["median_events"]) >= MAD_K * r["mad_events"]
@@ -444,12 +440,10 @@ class TestQualityOrderStatInvariants:
         import math
 
         from tests.conftest import SF_SMOKE
-        from uda_spark.cache import release_persisted
         from uda_spark.queries.quality import KMV_K
         from uda_spark.registry import all_specs
 
         row = all_specs()["sketch_kmv_intersection"].fn(spark, SF_SMOKE).collect()[0]
-        release_persisted()
         se = 6 / math.sqrt(KMV_K - 2)
         for est, exact in ((row["est_a"], row["exact_a"]), (row["est_b"], row["exact_b"])):
             if exact <= KMV_K:
@@ -476,7 +470,6 @@ def test_triangle_stats_matches_bruteforce(spark, edges):
     the same rule both sides use."""
     from itertools import combinations
 
-    from uda_spark.cache import release_persisted
     from uda_spark.operators.graph import triangle_stats
 
     # normalize: undirected simple graph, no self-loops
@@ -494,7 +487,6 @@ def test_triangle_stats_matches_bruteforce(spark, edges):
 
     df = spark.createDataFrame(sorted(eset), "doc_a long, doc_b long")
     row = triangle_stats(df).collect()[0]
-    release_persisted()
     assert row["n_nodes"] == len(nodes)
     assert row["n_edges"] == len(eset)
     assert row["n_wedges"] == wedges
@@ -506,11 +498,9 @@ def test_tvd_drift_bounds_and_self_consistency(spark):
     value must land in [0, 1e6] ppm, and a single-source corpus (each
     source alone IS the corpus) must measure 0 drift."""
     from tests.conftest import SF_SMOKE
-    from uda_spark.cache import release_persisted
     from uda_spark.registry import all_specs
 
     rows = all_specs()["text_source_drift_tvd"].fn(spark, SF_SMOKE).collect()
-    release_persisted()
     assert rows
     for r in rows:
         assert 0 <= r["tvd_ppm"] <= 1_000_000
@@ -524,12 +514,10 @@ def test_attribution_models_conserve_purchases(spark):
     must equal total purchase value — credit is conserved, never
     double-counted or dropped."""
     from tests.conftest import SF_SMOKE
-    from uda_spark.cache import release_persisted
     from uda_spark.registry import all_specs
     from uda_spark.sources.tables import load_table
 
     rows = all_specs()["events_attribution_touchpoints"].fn(spark, SF_SMOKE).collect()
-    release_persisted()
     ev = load_table(spark, SF_SMOKE, "events").where(F.col("event_type") == "purchase")
     n_purchases = ev.count()
     total_cents = ev.agg(
@@ -556,7 +544,6 @@ def test_prefix_filter_join_is_complete(spark, docs):
     over random small token sets is the ground truth."""
     from itertools import combinations
 
-    from uda_spark.cache import release_persisted
     from uda_spark.queries.dedup import PFX_DEN, PFX_NUM
     from uda_spark.registry import all_specs  # noqa: F401  (import path check)
 
@@ -598,7 +585,6 @@ def test_prefix_filter_join_is_complete(spark, docs):
         .distinct()
     )
     got_cand = {(r["doc_a"], r["doc_b"]) for r in cand.collect()}
-    release_persisted()
     missing = expected - got_cand
     assert not missing, f"prefix filter dropped true pairs: {sorted(missing)[:5]}"
 
@@ -641,11 +627,9 @@ class TestStatisticsTierInvariants:
         import numpy as np
 
         from tests.conftest import SF_SMOKE
-        from uda_spark.cache import release_persisted
         from uda_spark.registry import all_specs
 
         row = all_specs()["ml_linear_fit_price_qty"].fn(spark, SF_SMOKE).collect()[0]
-        release_persisted()
         x, y = self._lineitem_xy(spark)
         assert row["n_rows"] == len(x)
         assert 0.0 <= row["r2"] <= 1.0
@@ -666,7 +650,6 @@ class TestStatisticsTierInvariants:
         import numpy as np
 
         from tests.conftest import SF_SMOKE
-        from uda_spark.cache import release_persisted
         from uda_spark.queries.quality import _CORR_MEASURES
         from uda_spark.registry import all_specs
         from uda_spark.sources.tables import load_table
@@ -674,7 +657,6 @@ class TestStatisticsTierInvariants:
         import pyspark.sql.functions as SF
 
         rows = all_specs()["ml_correlation_matrix"].fn(spark, SF_SMOKE).collect()
-        release_persisted()
         names = [n for n, _ in _CORR_MEASURES]
         n_vars = len(names)
         assert len(rows) == n_vars * (n_vars - 1) // 2
@@ -695,14 +677,12 @@ class TestStatisticsTierInvariants:
         import numpy as np
 
         from tests.conftest import SF_SMOKE
-        from uda_spark.cache import release_persisted
         from uda_spark.registry import all_specs
         from uda_spark.sources.tables import load_table
 
         import pyspark.sql.functions as SF
 
         row = all_specs()["events_ab_welch_test"].fn(spark, SF_SMOKE).collect()[0]
-        release_persisted()
         data = (
             load_table(spark, SF_SMOKE, "events")
             .where(SF.col("value").isNotNull())
@@ -742,11 +722,9 @@ class TestEvaluationTierInvariants:
 
     def test_auc_matches_pairwise_definition(self, spark):
         from tests.conftest import SF_SMOKE
-        from uda_spark.cache import release_persisted
         from uda_spark.registry import all_specs
 
         row = all_specs()["ml_auc_rank_sum"].fn(spark, SF_SMOKE).collect()[0]
-        release_persisted()
         base = self._base_rows(spark)
         pos = [r["score"] for r in base if r["label"] == 1]
         neg = [r["score"] for r in base if r["label"] == 0]
@@ -759,12 +737,10 @@ class TestEvaluationTierInvariants:
 
     def test_confusion_accounting_identities(self, spark):
         from tests.conftest import SF_SMOKE
-        from uda_spark.cache import release_persisted
         from uda_spark.queries.evaluation import CONFUSION_THRESHOLD_CENTS
         from uda_spark.registry import all_specs
 
         row = all_specs()["ml_confusion_report"].fn(spark, SF_SMOKE).collect()[0]
-        release_persisted()
         base = self._base_rows(spark)
         assert row["tp"] + row["fp"] + row["tn"] + row["fn"] == len(base)
         tp = sum(
@@ -780,11 +756,9 @@ class TestEvaluationTierInvariants:
 
     def test_calibration_bins_partition_users(self, spark):
         from tests.conftest import SF_SMOKE
-        from uda_spark.cache import release_persisted
         from uda_spark.registry import all_specs
 
         rows = all_specs()["ml_calibration_bins"].fn(spark, SF_SMOKE).collect()
-        release_persisted()
         base = self._base_rows(spark)
         assert sum(r["n_users"] for r in rows) == len(base)
         for r in rows:
@@ -802,7 +776,6 @@ class TestGraphDegreeHistogramInvariants:
 
     def test_histogram_accounts_for_pairs(self, spark):
         from tests.conftest import SF_SMOKE
-        from uda_spark.cache import release_persisted
         from uda_spark.queries.dedup import (
             BANDS,
             JACCARD_T,
@@ -817,7 +790,6 @@ class TestGraphDegreeHistogramInvariants:
             _corpus_near(spark, SF_SMOKE), "text", "doc_id",
             n_hashes=N_HASHES, bands=BANDS, k=3, jaccard_threshold=JACCARD_T,
         ).collect()
-        release_persisted()
         nodes = {p["doc_a"] for p in pairs} | {p["doc_b"] for p in pairs}
         assert sum(r["n_nodes"] for r in rows) == len(nodes)
         assert sum(r["sum_degree"] for r in rows) == 2 * len(pairs)
@@ -833,11 +805,9 @@ class TestLshRecallEvalInvariants:
 
     def test_subset_and_ratio_identities(self, spark):
         from tests.conftest import SF_SMOKE
-        from uda_spark.cache import release_persisted
         from uda_spark.registry import all_specs
 
         row = all_specs()["dedup_lsh_recall_eval"].fn(spark, SF_SMOKE).collect()[0]
-        release_persisted()
         assert row["n_lsh"] == row["n_found"]
         assert row["precision_ppm"] == 1_000_000
         assert row["n_found"] <= row["n_truth"]
@@ -851,7 +821,6 @@ class TestHistogramQuantileSketchBracket:
 
     def test_bracket_contains_exact_quantile(self, spark):
         from tests.conftest import SF_SMOKE
-        from uda_spark.cache import release_persisted
         from uda_spark.registry import all_specs
         from uda_spark.sources.tables import event_micros, load_table
 
@@ -868,7 +837,6 @@ class TestHistogramQuantileSketchBracket:
             ).collect()
             if r["cents"] is not None and r["cents"] > 0
         )
-        release_persisted()
         assert rows and len(cents) == rows[0]["total_n"]
         for r in rows:
             exact = cents[r["target_rank"] - 1]  # rank is 1-based
@@ -919,7 +887,6 @@ class TestCusumChangepointInvariants:
 
     def test_argmax_matches_recompute(self, spark):
         from tests.conftest import SF_SMOKE
-        from uda_spark.cache import release_persisted
         from uda_spark.registry import all_specs
         from uda_spark.sources.tables import event_micros, load_table
 
@@ -934,7 +901,6 @@ class TestCusumChangepointInvariants:
             .agg(SF.count("*").alias("n"))
             .collect()
         )
-        release_persisted()
         d = len(daily)
         s = sum(n for _, n in daily)
         assert row["n_days"] == d

@@ -24,8 +24,17 @@ Layout:
                   oracle (driver contract in __spark_entry__.py)
 """
 
+import sys
+
+import pyspark.cloudpickle
+
 from uda_spark.session import get_spark
 from uda_spark.registry import all_specs, get_queries, get_oracles
+
+# Kernels and data sources defined in this package are pickled by value,
+# so Python workers run them without ``uda_spark`` importable, in every
+# session, also one that never calls ``get_spark``.
+pyspark.cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 __all__ = ["get_spark", "all_specs", "get_queries", "get_oracles"]
 __version__ = "0.1.0"

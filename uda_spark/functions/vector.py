@@ -17,11 +17,6 @@ def int_vec(col: str) -> Column:
     return F.expr(portable.int_vec(col, "spark"))
 
 
-def int_norm_sq(col: str) -> Column:
-    """Exact integer squared norm of a fixed-point vector column."""
-    return F.expr(portable.int_dot(col, col, "spark"))
-
-
 def cosine(a: str, b: str, na_sq: str, nb_sq: str) -> Column:
     """Deterministic double cosine from fixed-point vectors + cached norms."""
     dot = portable.int_dot(a, b, "spark")

@@ -35,26 +35,9 @@ def davg(col: str | Column, alias: str) -> Column:
     return (F.sum(dec(c)).cast("double") / F.count(c)).alias(alias)
 
 
-def reduce_by_key(df: DataFrame, keys: Sequence[str], *aggs: Column) -> DataFrame:
-    """groupBy().agg() — the engine-level reduce (see kv.reduce_merged)."""
-    return df.groupBy(*keys).agg(*aggs)
-
-
 def rollup_agg(df: DataFrame, keys: Sequence[str], *aggs: Column) -> DataFrame:
     return df.rollup(*keys).agg(*aggs)
 
 
 def cube_agg(df: DataFrame, keys: Sequence[str], *aggs: Column) -> DataFrame:
     return df.cube(*keys).agg(*aggs)
-
-
-def distinct_count(df: DataFrame, cols: Sequence[str], alias: str = "n_distinct") -> DataFrame:
-    return df.select(F.count_distinct(*[F.col(c) for c in cols]).alias(alias))
-
-
-def approx_distinct_count(
-    df: DataFrame, col: str, rsd: float = 0.05, alias: str = "approx_n"
-) -> DataFrame:
-    """HyperLogLog++ sketch — the 100 TB path for cardinality (no shuffle of
-    raw values; fixed-size sketch merge)."""
-    return df.select(F.approx_count_distinct(col, rsd).alias(alias))

@@ -68,10 +68,7 @@ def _doc_grams(k: int):
     test_tokenizer_parity): ``str.lower()`` equals Spark's ``lower()``
     and ``str.split(' ')`` equals Spark's ``split(_, ' ')`` (both keep
     empty strings, including leading/trailing); md5 over UTF-8 bytes
-    equals Spark's ``md5``.  Nested function on purpose: cloudpickle
-    serializes it BY VALUE so Python workers never need ``uda_spark``
-    importable (zero-install contract, same as the GEMM kernels in
-    operators/similarity.py).
+    equals Spark's ``md5``.
     """
 
     def grams(text: str) -> list[str]:

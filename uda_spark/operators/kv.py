@@ -57,23 +57,3 @@ def reduce_merged(
     before the exchange, shrinking shuffle bytes — critical at 100 TB).
     """
     return df.groupBy(*_cols(keys)).agg(*aggs)
-
-
-def merged_partition_stats(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Per-partition (min, max, count) of a partition_and_merge output.
-
-    Observability analog of the reference's MOF index records
-    (src/MOFServer/IndexInfo.h:94-104): one small metadata row per
-    partition describing the run it holds.
-    """
-    pid = F.spark_partition_id().alias("partition_id")
-    key0 = F.col(keys[0])
-    return (
-        df.select(pid, key0.alias("_k"))
-        .groupBy("partition_id")
-        .agg(
-            F.count("*").alias("rows"),
-            F.min("_k").alias("min_key"),
-            F.max("_k").alias("max_key"),
-        )
-    )

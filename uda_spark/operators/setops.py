@@ -17,10 +17,6 @@ def union_all(*dfs: DataFrame) -> DataFrame:
     return out
 
 
-def union_distinct(*dfs: DataFrame) -> DataFrame:
-    return union_all(*dfs).distinct()
-
-
 def intersect(a: DataFrame, b: DataFrame, keep_duplicates: bool = False) -> DataFrame:
     return a.intersectAll(b) if keep_duplicates else a.intersect(b)
 

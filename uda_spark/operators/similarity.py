@@ -359,7 +359,6 @@ def srp_buckets(
     iv = portable.int_vec(vec_col, "spark")
     prepped = df.select(F.col(id_col), F.expr(iv).alias("_v"))
     id_type = df.schema[id_col].dataType.simpleString()
-    _vec_matrix, _ = _arrow_views()
 
     def buckets(batches):
         import numpy as np
@@ -449,7 +448,6 @@ def _lsh_scored_candidates(
         if qrows
         else np.empty((0, 0), dtype=np.int64)
     )
-    _vec_matrix, _i64 = _arrow_views()
 
     def cdots(batches):
         import numpy as np
@@ -556,10 +554,8 @@ EXACT_PAIRS_ROW_CAP = 100_000
 _GEMM_CHUNK_CELLS = 10_000_000
 
 
-def _arrow_views():
-    """Build the two Arrow→numpy view helpers the GEMM kernels close
-    over: ``vec_matrix`` (an (n × d) int64 view of a ``list<int64>``
-    column) and ``i64`` (an int64 view of an integer column).
+def _vec_matrix(col):
+    """An (n × d) int64 view of a ``list<int64>`` Arrow column.
 
     Optimization guide §4.2: a list column in a record batch is one
     contiguous values buffer plus offsets, so the matrix is a reshape of
@@ -568,42 +564,34 @@ def _arrow_views():
     grouped GEMM at sf0.1 (r13).  Guards (cheap, O(n) on the offsets
     only): NULL vectors and ragged widths raise instead of silently
     misaligning the reshape.
-
-    Returned as NESTED functions (not module-level ones) on purpose:
-    cloudpickle serializes nested functions BY VALUE, so the task
-    closures stay self-contained and the Python workers never need
-    ``uda_spark`` importable — the same zero-install contract the
-    pandas kernels had.
     """
+    import numpy as np
 
-    def vec_matrix(col):
-        import numpy as np
+    la = col.combine_chunks() if hasattr(col, "combine_chunks") else col
+    n = len(la)
+    if n == 0:
+        return np.empty((0, 0), dtype=np.int64)
+    if la.null_count:
+        raise ValueError(
+            "GEMM kernel received NULL vectors — filter them upstream"
+        )
+    offs = np.asarray(la.offsets)
+    widths = np.diff(offs)
+    if widths.min() != widths.max():
+        raise ValueError(
+            f"GEMM kernel requires fixed-width vectors; widths span "
+            f"[{widths.min()}, {widths.max()}]"
+        )
+    flat = np.asarray(la.values)[offs[0] : offs[-1]]
+    return flat.astype(np.int64, copy=False).reshape(n, -1)
 
-        la = col.combine_chunks() if hasattr(col, "combine_chunks") else col
-        n = len(la)
-        if n == 0:
-            return np.empty((0, 0), dtype=np.int64)
-        if la.null_count:
-            raise ValueError(
-                "GEMM kernel received NULL vectors — filter them upstream"
-            )
-        offs = np.asarray(la.offsets)
-        widths = np.diff(offs)
-        if widths.min() != widths.max():
-            raise ValueError(
-                f"GEMM kernel requires fixed-width vectors; widths span "
-                f"[{widths.min()}, {widths.max()}]"
-            )
-        flat = np.asarray(la.values)[offs[0] : offs[-1]]
-        return flat.astype(np.int64, copy=False).reshape(n, -1)
 
-    def i64(col):
-        import numpy as np
+def _i64(col):
+    """An int64 view of an integer Arrow column."""
+    import numpy as np
 
-        la = col.combine_chunks() if hasattr(col, "combine_chunks") else col
-        return np.asarray(la).astype(np.int64, copy=False)
-
-    return vec_matrix, i64
+    la = col.combine_chunks() if hasattr(col, "combine_chunks") else col
+    return np.asarray(la).astype(np.int64, copy=False)
 
 
 def _exact_pair_dots_blocked(
@@ -676,7 +664,6 @@ def _exact_pair_dots_blocked(
     )
     out_schema = "id_a long, id_b long, dot long, norm_a long, norm_b long"
     thr = float(threshold)
-    _vec_matrix, _i64 = _arrow_views()
     _names = ("id_a", "id_b", "dot", "norm_a", "norm_b")
 
     def _tbl(cols) -> pa.Table:
@@ -802,7 +789,6 @@ def within_group_pair_dots(
         "grp long, id_a long, id_b long, dot long, norm_a long, norm_b long"
     )
     thr = float(threshold)
-    _vec_matrix, _i64 = _arrow_views()
     _names = ("grp", "id_a", "id_b", "dot", "norm_a", "norm_b")
 
     def _tbl(cols) -> pa.Table:
@@ -891,7 +877,6 @@ def assign_nearest_centroid(
     cids = np.array([c for c, _ in cents], dtype=np.int64)
     cn = (C * C).sum(axis=1)
     schema = f"{id_col} long, {vec_col} array<bigint>, {out_col} long"
-    _vec_matrix, _i64 = _arrow_views()
 
     # Arrow-native (guide §4.2): the vec column reshapes from its values
     # buffer (_vec_matrix) and PASSES THROUGH to the output unchanged —
@@ -954,7 +939,6 @@ def assign_nearest_centroid_f64(
     widths = {len(v) for v in cent_vecs}
     if len(widths) != 1:
         raise ValueError(f"ragged centroid widths: {sorted(widths)}")
-    _vec_matrix, _ = _arrow_views()
 
     def assign(batches):
         import numpy as np
@@ -1261,7 +1245,6 @@ def semdedup_hierarchical_quantizer(
         f"concat('hr|', CAST({id_col} AS STRING))", "spark"
     )
     rows = sup.withColumn("_salt", F.expr(f"pmod({salt_hash}, {rep})"))
-    _vec_matrix, _i64 = _arrow_views()
     # super always rides the assignment output: the Lloyd update below
     # groups by it (free — cluster determines super), which is what lets
     # the refined centroids re-enter the cogroup without any
@@ -1605,7 +1588,6 @@ def _pq_assign_codes(
     import numpy as np
     import pyarrow as pa
 
-    _vec_matrix, _ = _arrow_views()
     dtypes = dict(prepped.dtypes)
     out_names = ["_id"] + (["_v"] if keep_vec else []) + ["codes"] + [
         c for c in extra_cols
@@ -1662,7 +1644,6 @@ def pq_min_dists(prepped: DataFrame, cbs: list, m: int, sub: int) -> DataFrame:
     order-insensitive for doubles, so the emitted d2 equals the SQL
     ``array_min`` over the retired ``_pq_dists_expr`` arrays bit for
     bit."""
-    _vec_matrix, _ = _arrow_views()
 
     def mind2(batches):
         import numpy as np
@@ -1896,8 +1877,6 @@ def pq_search(
         for r in lrows
     ]
     nq = len(qids)
-    _, _i64v = _arrow_views()
-    _vm, _ = _arrow_views()
 
     def adc_score(batches):
         import numpy as np
@@ -1907,8 +1886,8 @@ def pq_search(
             n = b.num_rows
             if n == 0 or nq == 0:
                 continue
-            codes = _vm(b.column("codes"))  # (n, m) int64 view
-            cids = _i64v(b.column("c_id"))
+            codes = _vec_matrix(b.column("codes"))  # (n, m) int64 view
+            cids = _i64(b.column("c_id"))
             approx = np.empty((nq, n), dtype=np.float64)
             for qi in range(nq):
                 acc = np.zeros(n, dtype=np.float64)

@@ -67,10 +67,6 @@ def set_checkpoint_mode(mode: str) -> None:
     _CHECKPOINT_MODE = mode
 
 
-def get_checkpoint_mode() -> str:
-    return _CHECKPOINT_MODE
-
-
 def snapshot(df: DataFrame) -> DataFrame:
     """Eagerly materialize ``df`` with stable physical partition ids and
     truncated lineage, honoring :func:`set_checkpoint_mode`.  See the

@@ -9,47 +9,8 @@ requires a partition key.
 
 from __future__ import annotations
 
-from typing import Sequence
-
-from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def keyed_window(partition_by: Sequence[str], order_by: Sequence[str]) -> WindowSpec:
-    return Window.partitionBy(*partition_by).orderBy(*order_by)
-
-
-def running_sum(
-    df: DataFrame, partition_by: Sequence[str], order_by: Sequence[str], col: Column, alias: str
-) -> DataFrame:
-    w = keyed_window(partition_by, order_by).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return df.withColumn(alias, F.sum(col).over(w))
-
-
-def moving_avg(
-    df: DataFrame,
-    partition_by: Sequence[str],
-    order_by: Sequence[str],
-    col: Column,
-    preceding: int,
-    alias: str,
-) -> DataFrame:
-    w = keyed_window(partition_by, order_by).rowsBetween(-preceding, Window.currentRow)
-    return df.withColumn(alias, F.avg(col).over(w))
-
-
-def rank_in_group(
-    df: DataFrame, partition_by: Sequence[str], order_by: Sequence[Column], alias: str = "rn"
-) -> DataFrame:
-    w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    return df.withColumn(alias, F.row_number().over(w))
-
-
-def top_k_per_group(
-    df: DataFrame, partition_by: Sequence[str], order_by: Sequence[Column], k: int
-) -> DataFrame:
-    """Top-k rows per group — one shuffle, rank filter pushed via WindowGroupLimit."""
-    return rank_in_group(df, partition_by, order_by).where(F.col("rn") <= k)
 
 
 def sessionize(

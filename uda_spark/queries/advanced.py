@@ -553,17 +553,13 @@ def hll_sketch_persisted_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch survives serialization through the storage layer with its
     mergeability intact; the bounded oracle is the same
     exact + within_bound pattern as hll_sketch_two_level."""
-    import os
-    import tempfile
+    from uda_spark.cache import scratch_dir
 
     ev = t(spark, sf_dir, "events")
     shards = ev.groupBy(
         "event_type", (F.col("user_id") % 8).alias("shard")
     ).agg(F.expr("hll_sketch_agg(user_id)").alias("sk"))
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"uda_hll_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    path = scratch_dir("uda_hll")
     shards.write.mode("overwrite").parquet(path)
     stored = spark.read.parquet(path)
     est = stored.groupBy("event_type").agg(

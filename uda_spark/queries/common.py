@@ -7,6 +7,9 @@ columns to DECIMAL(18,2) makes the sum exact (order-independent), and the
 final CAST to DOUBLE is then a deterministic function of an exact rational
 — bit-identical between Spark and DuckDB.  Counts are cast to BIGINT on
 both sides (DuckDB sums of INT return HUGEINT otherwise).
+
+What a query leaves behind (persisted intermediates, scratch
+directories) is not kept here: ``uda_spark.cache`` owns it.
 """
 
 from __future__ import annotations
@@ -55,41 +58,3 @@ def revenue_expr():
     return F.col("l_extendedprice").cast("decimal(18,2)") * (
         F.lit(1) - F.col("l_discount").cast("decimal(18,2)")
     )
-
-
-# ---------------------------------------------------------------------------
-# Per-run scratch directories for queries that round-trip through storage.
-
-_SCRATCH_DIRS: list[str] = []
-
-
-def run_scratch_dir(prefix: str, sf_dir: str) -> str:
-    """A scratch directory unique to THIS call — never shared between
-    concurrent runs.
-
-    Queries that write an intermediate artifact and read it back (the
-    persisted-sketch merge, the foreachBatch parquet sink, the shard
-    manifest) previously keyed the path only by the sf-dir basename, so
-    two concurrent runs at the same scale factor raced (one run's
-    overwrite clobbering the other's read-back).  Including the pid and
-    a fresh uuid component per call removes the race entirely; a
-    best-effort ``atexit`` sweep bounds accumulation within the process
-    lifetime.
-    """
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"{prefix}_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{os.getpid()}_{uuid.uuid4().hex[:8]}",
-    )
-    if not _SCRATCH_DIRS:
-        atexit.register(
-            lambda: [shutil.rmtree(p, ignore_errors=True) for p in _SCRATCH_DIRS]
-        )
-    _SCRATCH_DIRS.append(path)
-    return path

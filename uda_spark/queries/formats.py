@@ -14,21 +14,15 @@ text round trip is bit-exact (Java shortest-round-trip formatting).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from uda_spark.cache import scratch_dir
 from uda_spark.functions import portable
 from uda_spark.queries.common import t
 from uda_spark.registry import register
 from uda_spark.sources import formats as FMT
-
-
-def _fmt_path(fmt: str, sf_dir: str) -> str:
-    return os.path.join(
-        tempfile.gettempdir(), f"uda_fmt_{fmt}_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
 
 
 @register(
@@ -43,7 +37,7 @@ def csv_roundtrip_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = t(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
     )
-    path = _fmt_path("csv", sf_dir)
+    path = scratch_dir("uda_fmt_csv")
     FMT.write_csv(src, path)
     return FMT.read_csv(spark, path, src.schema)
 
@@ -56,7 +50,7 @@ def csv_roundtrip_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 def json_roundtrip_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """nation → JSON lines → explicit-schema scan → rows."""
     src = t(spark, sf_dir, "nation")
-    path = _fmt_path("json", sf_dir)
+    path = scratch_dir("uda_fmt_json")
     FMT.write_json(src, path)
     return FMT.read_json(spark, path, src.schema)
 
@@ -76,7 +70,7 @@ def text_roundtrip_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes the checksum from the original column, so line
     framing (no quoting layer — text must be newline-free) is what is
     checked."""
-    path = _fmt_path("text", sf_dir)
+    path = scratch_dir("uda_fmt_text")
     src = t(spark, sf_dir, "documents").select("text")
     src.write.mode("overwrite").text(path)
     back = FMT.read_text(spark, path)
@@ -103,7 +97,7 @@ def kv_sequencefile_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's Hadoop KV input domain (SURVEY §1.5)."""
     from uda_spark.sources import hadoop_kv as HKV
 
-    path = _fmt_path("seq", sf_dir)
+    path = scratch_dir("uda_fmt_seq")
     ev = t(spark, sf_dir, "events").select("event_id", "event_type")
     HKV.write_sequence_file(ev, path, "event_id", "event_type")
     back = HKV.read_sequence_file(spark, path, "event_id long, event_type string")
@@ -131,7 +125,7 @@ def kv_vint_stream_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream of the parse everything is ordinary JVM-side DataFrame."""
     from uda_spark.sources import hadoop_kv as HKV
 
-    path = _fmt_path("vint", sf_dir)
+    path = scratch_dir("uda_fmt_vint")
     o = t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
     HKV.write_kv_stream(o, path, "o_orderkey", "o_orderstatus")
     back = HKV.read_kv_stream(spark, path)
@@ -170,7 +164,7 @@ def schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     append-only table-evolution pattern every long-lived 100 TB dataset
     hits.  The checksum covers the null-filled column, so the merge
     semantics (not just row counts) are what the oracle checks."""
-    base = _fmt_path("evolve", sf_dir)
+    base = scratch_dir("uda_fmt_evolve")
     o = t(spark, sf_dir, "orders")
     v1 = o.where(F.col("o_orderkey") % 2 == 0).select("o_orderkey", "o_totalprice")
     v2 = o.where(F.col("o_orderkey") % 2 == 1).select(
@@ -201,7 +195,7 @@ def orc_roundtrip_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     """part → ORC (zstd) → scan → rows; columnar round trip with stripe
     stats, same pushdown properties as parquet."""
     src = t(spark, sf_dir, "part")
-    path = _fmt_path("orc", sf_dir)
+    path = scratch_dir("uda_fmt_orc")
     FMT.write_orc(src, path)
     return FMT.read_orc(spark, path, src.schema)
 
@@ -217,7 +211,7 @@ def xml_roundtrip_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix (CSV/JSON/text/XML) alongside the binary one
     (parquet/ORC/SequenceFile/VInt)."""
     src = t(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    path = _fmt_path("xml", sf_dir)
+    path = scratch_dir("uda_fmt_xml")
     FMT.write_xml(src, path)
     return FMT.read_xml(spark, path, src.schema)
 
@@ -253,7 +247,7 @@ def join_dpp_partitioned_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )
-    path = _fmt_path("dpp", sf_dir)
+    path = scratch_dir("uda_fmt_dpp")
     src.write.mode("overwrite").partitionBy("o_orderpriority").parquet(path)
     fact = spark.read.parquet(path)
     dim = (

@@ -391,10 +391,10 @@ def streaming_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle."""
     import os
 
-    from uda_spark.queries.common import _SCRATCH_DIRS, run_scratch_dir
+    from uda_spark.cache import scratch_dir
 
-    path = run_scratch_dir("uda_fb_sink", sf_dir)
-    _SCRATCH_DIRS.append(path + "_ckpt")
+    root = scratch_dir("uda_fb_sink")
+    path, ckpt = os.path.join(root, "sink"), os.path.join(root, "ckpt")
 
     ev = ST.events_file_stream(spark, sf_dir).select(
         "user_id",
@@ -406,7 +406,7 @@ def streaming_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q = (
         ev.writeStream.foreachBatch(write_epoch)
-        .option("checkpointLocation", path + "_ckpt")
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
@@ -1297,10 +1297,10 @@ def pipeline_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     directories (asserted for this layout family in
     tests/test_operators.py zorder/partition suites).
     """
-    from uda_spark.queries.common import run_scratch_dir
+    from uda_spark.cache import scratch_dir
     from uda_spark.sources.formats import write_parquet
 
-    path = run_scratch_dir("uda_shards", sf_dir)
+    path = scratch_dir("uda_shards")
     docs = t(spark, sf_dir, "documents").select(
         "doc_id",
         "n_chars",
@@ -1657,11 +1657,11 @@ def streaming_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame
     """
     import os
 
-    from uda_spark.queries.common import _SCRATCH_DIRS, run_scratch_dir
+    from uda_spark.cache import scratch_dir
     from uda_spark.queries.quality import histogram_lvl1, histogram_quantiles
 
-    path = run_scratch_dir("uda_qhist_stream", sf_dir)
-    _SCRATCH_DIRS.append(path + "_ckpt")
+    root = scratch_dir("uda_qhist_stream")
+    path, ckpt = os.path.join(root, "sink"), os.path.join(root, "ckpt")
 
     ev = ST.events_file_stream(spark, sf_dir)
 
@@ -1672,7 +1672,7 @@ def streaming_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame
 
     q = (
         ev.writeStream.foreachBatch(write_epoch)
-        .option("checkpointLocation", path + "_ckpt")
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )

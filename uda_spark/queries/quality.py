@@ -2140,10 +2140,10 @@ def sketch_histogram_persisted_merge(spark: SparkSession, sf_dir: str) -> DataFr
     the full recompute — persisted-merge and recompute must agree
     exactly, integers end to end.
     """
-    from uda_spark.queries.common import run_scratch_dir
+    from uda_spark.cache import scratch_dir
 
     lvl1 = histogram_lvl1(t(spark, sf_dir, "events"))
-    path = run_scratch_dir("uda_qhist", sf_dir)
+    path = scratch_dir("uda_qhist")
     lvl1.write.mode("overwrite").parquet(path)
     stored = spark.read.parquet(path)
     return histogram_quantiles(stored)

@@ -13,12 +13,11 @@ correctness of the write/read path is oracle territory.
 from __future__ import annotations
 
 import itertools
-import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from uda_spark.cache import scratch_dir
 from uda_spark.functions import portable
 from uda_spark.operators import kv as KV
 from uda_spark.operators import sort as SRT
@@ -155,9 +154,7 @@ def dfsio_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     write and the read-back aggregate are embarrassingly parallel; the
     only exchange is the final 1-row reduce.
     """
-    path = os.path.join(
-        tempfile.gettempdir(), f"uda_dfsio_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    path = scratch_dir("uda_dfsio")
     payload_hex = F.rpad(
         F.sha2(F.col("id").cast("string"), 256), DFSIO_PAYLOAD_HEX_CHARS, "ab"
     )
@@ -248,9 +245,7 @@ def kv_pyds_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from uda_spark.sources import pyds
 
     pyds.register(spark)
-    path = os.path.join(
-        tempfile.gettempdir(), f"uda_pyds_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    path = scratch_dir("uda_pyds")
     o = t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").cast("string").cast("binary").alias("key"),
         F.col("o_orderstatus").cast("binary").alias("value"),
@@ -297,9 +292,7 @@ def kv_pyds_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     pyds.register(spark)
-    path = os.path.join(
-        tempfile.gettempdir(), f"uda_pyds_stream_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    path = scratch_dir("uda_pyds_stream")
     o = t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").cast("string").cast("binary").alias("key"),
         F.col("o_orderstatus").cast("binary").alias("value"),
@@ -343,30 +336,25 @@ def federated_mixed_format_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning still per-format where supported); unionByName is a
     zero-shuffle plan node; only the final digest aggregates.
     """
-    import os as _os
-    import tempfile as _tf
-
     from uda_spark.sources import formats as FMT
 
     sup = t(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey"
     )
-    base = _os.path.join(
-        _tf.gettempdir(), f"uda_fed_{_os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    base = scratch_dir("uda_fed")
     legs = {
         "parquet": sup.where(F.col("s_suppkey") % 3 == 0),
         "csv": sup.where(F.col("s_suppkey") % 3 == 1),
         "json": sup.where(F.col("s_suppkey") % 3 == 2),
     }
-    legs["parquet"].write.mode("overwrite").parquet(f"{base}_parquet")
-    FMT.write_csv(legs["csv"], f"{base}_csv")
-    FMT.write_json(legs["json"], f"{base}_json")
+    legs["parquet"].write.mode("overwrite").parquet(f"{base}/parquet")
+    FMT.write_csv(legs["csv"], f"{base}/csv")
+    FMT.write_json(legs["json"], f"{base}/json")
 
     schema = "s_suppkey LONG, s_name STRING, s_nationkey INT"
-    p = spark.read.parquet(f"{base}_parquet")
-    c = spark.read.schema(schema).option("header", "true").csv(f"{base}_csv")
-    j = spark.read.schema(schema).json(f"{base}_json")
+    p = spark.read.parquet(f"{base}/parquet")
+    c = spark.read.schema(schema).option("header", "true").csv(f"{base}/csv")
+    j = spark.read.schema(schema).json(f"{base}/json")
     fed = p.unionByName(c).unionByName(j)
     chk = portable.hash60(
         "concat(CAST(s_suppkey AS STRING), '|', s_name)", "spark"

@@ -8,7 +8,7 @@ layer behind config points, so the engine-level analog of "install UDA"
 is one builder call — no query code changes, exactly like the
 reference's drop-in plugin model (plugins/.../UdaShuffleConsumerPlugin).
 
-Three integration levels, strongest first:
+Two integration levels, strongest first:
 
 1. ``spark.shuffle.manager`` — a full ShuffleManager replacement (this
    is where an RDMA shuffle implementation registers; open-source
@@ -16,11 +16,10 @@ Three integration levels, strongest first:
    reference).
 2. ``spark.shuffle.sort.io.plugin.class`` — keep the sort shuffle but
    swap the I/O layer (local disk → disaggregated / remote store).
-3. Tuning of the stock transport (this module's defaults): the knobs
-   that correspond 1:1 to the reference's fetch scheduling —
-   maxSizeInFlight / maxReqsInFlight are UDA's RDMA-buffer fetch budget
-   (MergeManager.cc:64-91), io.compression.codec is O12's codec choice
-   (reducer.cc:439-450).
+
+The stock transport's own settings (codec, compression — O12,
+reducer.cc:439-450) have one home, ``session.get_spark``; this module
+adds none.
 
 This module is pure configuration: it contains no JVM code and degrades
 to the stock sort shuffle when no plugin jar is present — mirroring the
@@ -31,23 +30,6 @@ UdaShuffleConsumerPluginShared.java:162-177).
 from __future__ import annotations
 
 from typing import Mapping
-
-# The reference's fetch budget: only issue a fetch when a buffer pair is
-# free (MergeManager.cc:64-91).  Spark's equivalents, sized for a fat
-# network (the reference assumes IB/RoCE — README.md:4-8).
-TRANSPORT_TUNING: dict[str, str] = {
-    # total bytes in flight per reduce task (UDA: num buffer pairs × buf size)
-    "spark.reducer.maxSizeInFlight": "96m",
-    # concurrent fetch requests (UDA: free-pair budget)
-    "spark.reducer.maxReqsInFlight": "2147483647",
-    # O12: compressed shuffle streams
-    "spark.shuffle.compress": "true",
-    "spark.shuffle.spill.compress": "true",
-    "spark.io.compression.codec": "lz4",
-    # batch-fetch contiguous partitions from the same map output (the
-    # analog of UDA serving one MOF over many chunks, IndexInfo.cc)
-    "spark.sql.adaptive.fetchShuffleBlocksInBatch": "true",
-}
 
 
 def shuffle_plugin_conf(
@@ -60,14 +42,13 @@ def shuffle_plugin_conf(
     ``shuffle_manager``: fully-qualified ShuffleManager class of the
     transport plugin (e.g. an RDMA shuffle manager jar on the
     classpath).  ``io_plugin_class``: alternative lighter seam — a
-    ShuffleDataIO implementation.  With neither, returns the stock-
-    transport tuning only (the safe fallback, O18 analog).
+    ShuffleDataIO implementation.  With neither, returns only ``extra``
+    (the stock transport, O18 analog).
     """
-    conf = dict(TRANSPORT_TUNING)
+    conf: dict[str, str] = {}
     if shuffle_manager is not None:
         conf["spark.shuffle.manager"] = shuffle_manager
     if io_plugin_class is not None:
         conf["spark.shuffle.sort.io.plugin.class"] = io_plugin_class
-    if extra:
-        conf.update(extra)
+    conf.update(extra or {})
     return conf
