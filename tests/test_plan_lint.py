@@ -20,7 +20,10 @@ Rules (per query):
    set, and catastrophic when x is data-sized.  Boundedness of the
    broadcast side is a design property the plan text cannot prove, so
    every BNLJ query declares its reason in ``BNLJ_BOUNDED``; a new BNLJ
-   without an entry fails.
+   without an entry fails, and so does an entry whose query no longer
+   plans a BNLJ (a stale entry would wave a future one through).  The
+   rule reads the whole formatted plan: the simple plan the other rules
+   read stops at the first persisted input's nested AQE plan.
 
 3. **Top-k merges keep their map-side partial.**  A top-k merge is one
    ``row_number() <= k`` window per group, which Catalyst plans as
@@ -99,21 +102,15 @@ BNLJ_BOUNDED: dict[str, str] = {
     "events_cusum_changepoint": "1-row (days, total) relation for the deviation scoring",
     "q11_important_parts": "scalar national-value threshold (1-row agg)",
     "q22_sales_opportunity": "scalar avg-balance threshold (1-row agg)",
-    "dedup_embedding_near_pairs": "scalar corpus-norm stats (1-row agg)",
     "sim_knn_bruteforce": "fixed query set (vec_id < K pushed filter, <=64 rows)",
     "sim_quantized_knn": "fixed query set + 1-row quantization scale",
     "text_bpe_train_merges": "scalar vocab totals per merge round (1-row aggs)",
     "events_gap_fill": "1-row min/max day span driving a sequence generator",
     "multimodal_feature_knn": "fixed query set (<=64 rows)",
-    "kmeans_embeddings": "k centroids (k=8, broadcast each iteration)",
-    "sim_ivf_knn": "fixed query set + probed centroid list (bounded by k)",
-    "sim_pq_knn": "fixed query set + 256-row PQ codebook LUT",
-    "sim_ivfpq_knn": "fixed query set + centroids + 256-row PQ LUT",
     "sim_ann_recall_eval": "fixed query set on both exact and ANN sides",
     "sim_matryoshka_knn": "fixed query set at both prefix widths",
     "sim_hybrid_rrf": "fixed query set on both dense and lexical sides",
     "sim_filtered_knn": "fixed query set with predicate",
-    "sim_pq_incremental_serve": "fixed query set + PQ LUT",
     "sim_binary_hamming_knn": "fixed query set (binary codes)",
     "sim_late_interaction_maxsim": "fixed multi-vector query set",
     "sim_recall_at_k_curve": "fixed query set on exact and ANN sides",
@@ -130,7 +127,6 @@ BNLJ_BOUNDED: dict[str, str] = {
     "part_supplier_hhi": "scalar market-size total (1-row agg)",
     "orders_seasonality_index": "scalar overall-mean relation (1-row agg)",
     "pipeline_retrieval_e2e": "composed stages' scalar totals + query set",
-    "pipeline_corpus_refresh_e2e": "composed stages' scalar totals + query set",
     "text_bm25_topk": "scalar corpus length stats + bounded query-term set",
     "pipeline_lorenz_deciles": "scalar corpus totals + 10-row deciles",
     "text_js_divergence_sources": "per-source totals (bounded) + 1-row grand total",
@@ -153,13 +149,13 @@ BNLJ_BOUNDED: dict[str, str] = {
     "events_theil_sen_trend": "1-row median-slope relation crossed onto the 1-row day count",
     "dq_iqr_outlier_audit": "scalar row-count total + 1-row quartile fence relation",
     "sim_knn_margin_audit": "fixed query set (vec_id < K pushed filter, <=64 rows)",
-    "sim_ivf_balance_audit": "k-row centroid table broadcast onto the corpus scan + 1-row totals",
+    "sim_ivf_balance_audit": "1-row (n_total, k) totals crossed onto the assigned corpus",
     # (dedup_semdedup_clusters dropped its BNLJ in round 11: the coarse
     # quantizer's centroids now ride the GEMM task closure, and the cap's
     # count join is an equi broadcast-hash join)
     "text_heaps_law_fit": "1-row max-doc-id relation for prefix bucketing",
     "events_cuped_adjusted_ab": "1-row time-span relation for the period split",
-    "sim_recall_vs_nprobe": "fixed query set + (queries x k) probe table + 4-row nprobe grid",
+    "sim_recall_vs_nprobe": "fixed query set + (queries x max nprobe) probe table + 4-row nprobe grid",
     "ml_mrr_at_k": "fixed query set (vec_id < K pushed filter, <=64 rows)",
     "ml_average_precision_at_k": "fixed query set + bounded per-label counts",
     "ml_cramers_v": "bounded (source x lang) marginals + scalar n (chi-square sibling)",
@@ -170,7 +166,6 @@ BNLJ_BOUNDED: dict[str, str] = {
     "events_seasonal_strength": "calendar-day daily relation x 1-row totals (7-row dow groups)",
     "ml_fairness_equalized_odds": "1-row parity-gap aggregate crossed onto bounded per-segment rates",
     "ml_friedman_test": "calendar-day x |types| grid cross product + 1-row dims",
-    "sim_pq_distortion": "m*k-row codebook broadcast onto one corpus scan (PQ family shape)",
     "ml_delong_auc_variance": "1-row (n_pos, n_neg) totals crossed onto the distinct-score groups",
     "events_diff_in_diff": "1-row time-span relation for the period split",
     "ml_anova_oneway": "1-row total/term aggregates for the F arithmetic (kruskal sibling)",
@@ -269,6 +264,22 @@ def _map_side_topk_partials(simple_plan: str) -> int:
     return n
 
 
+def _bnlj_violation(name: str, plan: str, bounded: dict) -> str | None:
+    has_bnlj = "BroadcastNestedLoopJoin" in plan
+    if has_bnlj and name not in bounded:
+        return (
+            f"{name}: BroadcastNestedLoopJoin without a declared bounded "
+            f"broadcast side — if the broadcast relation is bounded by "
+            f"design, add the query to BNLJ_BOUNDED with the reason."
+        )
+    if name in bounded and not has_bnlj:
+        return (
+            f"{name}: listed in BNLJ_BOUNDED but its plan holds no "
+            f"BroadcastNestedLoopJoin — drop the stale entry."
+        )
+    return None
+
+
 def _topk_violation(name: str, simple_plan: str, merges: int) -> str | None:
     found = _map_side_topk_partials(simple_plan)
     if found >= merges:
@@ -299,12 +310,8 @@ def test_plan_lint(name, spark):
             f"bounded, add the query to SP_BOUNDED with the reason."
         )
 
-    if name not in BNLJ_BOUNDED:
-        assert "BroadcastNestedLoopJoin" not in simple, (
-            f"{name}: BroadcastNestedLoopJoin without a declared bounded "
-            f"broadcast side — if the broadcast relation is bounded by "
-            f"design, add the query to BNLJ_BOUNDED with the reason."
-        )
+    msg = _bnlj_violation(name, formatted, BNLJ_BOUNDED)
+    assert msg is None, msg
 
     if name in TOPK_MERGES:
         msg = _topk_violation(name, simple, TOPK_MERGES[name])
@@ -335,3 +342,30 @@ def test_topk_rule_rejects_k_past_threshold(spark):
     assert _topk_violation("synthetic", topk_plan(1000), 1) is None
     msg = _topk_violation("synthetic", topk_plan(1001), 1)
     assert msg is not None and "1000" in msg
+
+
+def test_bnlj_rule_rejects_undeclared_and_stale_entries(spark):
+    """The BNLJ rule cuts both ways: a broadcast crossJoin fails until it
+    is declared, and a declared query whose plan has no BNLJ fails as a
+    stale entry.  A BNLJ printed after a persisted input counts too: the
+    simple plan is cut at the persisted plan's nested ``== Initial Plan
+    ==`` marker, the whole formatted plan the rule reads is not."""
+    from pyspark.sql import functions as F
+
+    rows = spark.range(100)
+    nested = plan_str(rows.crossJoin(F.broadcast(spark.range(3))), final_only=False)
+    plain = plan_str(rows.where("id > 5"), final_only=False)
+    declared = {"synthetic": "3-row literal table"}
+
+    assert "without a declared" in _bnlj_violation("synthetic", nested, {})
+    assert _bnlj_violation("synthetic", nested, declared) is None
+    assert "stale entry" in _bnlj_violation("synthetic", plain, declared)
+    assert _bnlj_violation("synthetic", plain, {}) is None
+
+    cached = rows.groupBy((F.col("id") % 5).alias("k")).count().persist()
+    cached.count()
+    crossed = spark.range(5).crossJoin(F.broadcast(spark.range(3).withColumnRenamed("id", "j")))
+    behind = cached.join(crossed.withColumnRenamed("id", "k"), "k")
+    assert _bnlj_violation("synthetic", plan_str(behind, mode="simple"), declared)
+    assert _bnlj_violation("synthetic", plan_str(behind, final_only=False), declared) is None
+    cached.unpersist()

@@ -243,3 +243,38 @@ def test_streaming_freshness_matches_batch_audit(spark):
         assert s["max_us"] == b["max_us"]
         assert s["lag_us"] == b["lag_us"]
     assert min(r["lag_us"] for r in stream_rows.values()) == 0
+
+
+def _stream_dirs(spark):
+    """(JVM temp-checkpoint dirs, registered stream checkpoint roots)."""
+    import glob
+    import os
+
+    from uda_spark import cache
+
+    jvm_tmp = spark.sparkContext._jvm.java.lang.System.getProperty("java.io.tmpdir")
+    temps = set(glob.glob(os.path.join(jvm_tmp, "temporary-*")))
+    return temps, [d for d in cache._DIRS if "uda_stream_ckpt" in d]
+
+
+def test_stream_checkpoints_have_one_owner(spark):
+    """A streaming query checkpoints under cache.scratch_dir, never in a
+    Spark temp dir: a registered pipeline query and a stream that fails
+    leave no ``temporary-*`` directory in the JVM temp dir, and
+    release_persisted deletes both checkpoint roots."""
+    import os
+
+    from uda_spark import cache
+
+    temps0, _ = _stream_dirs(spark)
+    all_specs()["streaming_hourly_rollup"].fn(spark, SF_SMOKE).collect()
+    failing = events_file_stream(spark, SF_SMOKE).select(
+        F.expr("CAST(raise_error('planted stream failure') AS INT)").alias("x")
+    )
+    with pytest.raises(Exception, match="planted stream failure"):
+        run_stream_to_memory(failing, "t_failing_stream", mode="append")
+    temps, roots = _stream_dirs(spark)
+    assert temps == temps0
+    assert len(roots) == 2 and all(map(os.path.isdir, roots))
+    cache.release_persisted()
+    assert not any(map(os.path.exists, roots))

@@ -16,6 +16,8 @@ so results are bit-stable across engines and partitionings.
 
 from __future__ import annotations
 
+from typing import Sequence
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -842,6 +844,62 @@ def within_group_pair_dots(
     )
 
 
+# ---------------------------------------------------------------------------
+# The centroid layer of the k-means / IVF / PQ / SemDeDup family: one
+# centroid-mean builder, one float64 fold, one int64 GEMM argmin, and the
+# two map-side assignment operators built on them.
+
+
+def mean_centroids(df: DataFrame, group_cols: Sequence[str], vec_col: str) -> DataFrame:
+    """Per-group mean vectors: ``(group_cols…, n, centroid array<double>)``.
+
+    Exact integer sums per (group, d), divided once as ``sum(x) /
+    count(*)``, then ordered by dimension through
+    ``array_sort(collect_list(struct(d, m)))`` — the arithmetic the SQL
+    oracles replay as ``list(CAST(s AS DOUBLE) / n ORDER BY d)``.  Two
+    aggregations on bounded keys ((group, d), then group); the exploded
+    corpus is partial-aggregated map-side before its one shuffle."""
+    g = list(group_cols)
+    return (
+        df.select(*g, F.posexplode(vec_col).alias("_d", "_x"))
+        .groupBy(*g, "_d")
+        .agg(F.count("*").alias("n"), (F.sum("_x") / F.count("*")).alias("_m"))
+        .groupBy(*g)
+        .agg(
+            F.max("n").alias("n"),
+            F.array_sort(F.collect_list(F.struct("_d", "_m"))).alias("_dm"),
+        )
+        .select(*g, "n", F.expr("transform(_dm, e -> e._m)").alias("centroid"))
+    )
+
+
+def _fold_dist2(X, C):
+    """(n × k) squared L2 distances from the rows of ``X`` to the rows of
+    ``C``, float64, each folded over the dimensions STRICTLY in ascending
+    order — bit-identical to the SQL fold ``Σ_d (x_d − c_d)²`` evaluated
+    left to right.  numpy's ``.sum(axis=-1)`` uses an unrolled
+    multi-accumulator order whose doubles differ by 1 ulp at quantization
+    boundaries (caught by the sim_pq_distortion oracle), hence the loop."""
+    import numpy as np
+
+    acc = np.zeros((X.shape[0], C.shape[0]), dtype=np.float64)
+    for d in range(C.shape[1]):
+        e = X[:, d : d + 1] - C[None, :, d]
+        acc += e * e
+    return acc
+
+
+def _gemm_argmin(X, C):
+    """Row index of the nearest row of ``C`` for every row of ``X``, over
+    EXACT integer vectors: ``dist² = ‖x‖² − 2·X@Cᵀ + ‖c‖²`` in int64 —
+    identical to the per-dimension Σ(x−c)² a SQL oracle evaluates — with
+    numpy's first-min rule, so ties go to the lower row."""
+    import numpy as np
+
+    d2 = (X * X).sum(axis=1)[:, None] - 2 * (X @ C.T) + (C * C).sum(axis=1)[None, :]
+    return np.argmin(d2, axis=1)
+
+
 def assign_nearest_centroid(
     df: DataFrame,
     id_col: str,
@@ -849,21 +907,17 @@ def assign_nearest_centroid(
     centroids: list[tuple[int, list[int]]],
     out_col: str = "cluster",
 ) -> DataFrame:
-    """Map-side nearest-centroid assignment over EXACT integer vectors —
-    the coarse-quantizer inner loop of SemDeDup / IVF training, run as a
-    vectorized int64 GEMM instead of an interpreted per-(row, centroid)
-    lambda.
+    """Map-side nearest-centroid assignment over EXACT integer centroids —
+    the coarse-quantizer inner loop of SemDeDup, one vectorized int64
+    GEMM (:func:`_gemm_argmin`) per Arrow batch instead of an interpreted
+    per-(row, centroid) lambda.
 
     ``centroids`` is a driver-side list of (cluster_id, int_vector) —
     k·d int64s, metadata-scale for k = n/target_cluster_size at bench
-    sizes and closure-broadcast to every task (the same k×d doubles
-    `kmeans_embeddings` broadcasts; at extreme k a hierarchical
-    two-level quantizer over these same pieces is the seam).  Each Arrow
-    batch computes ``dist² = ‖x‖² − 2·X@Cᵀ + ‖c‖²`` in exact int64 —
-    identical to the per-dimension Σ(x−c)² a SQL oracle evaluates — and
-    takes the argmin with ties to the LOWEST cluster id (centroid rows
-    are sorted by id, so numpy's first-min tie rule IS the SQL
-    ``ORDER BY dist2, cluster`` rule).  No shuffle: one map pass.
+    sizes and closure-shipped to every task (at extreme k the
+    hierarchical two-level quantizer is the seam).  Centroid rows are
+    sorted by id, so the first-min tie rule IS the SQL ``ORDER BY dist2,
+    cluster`` rule.  No shuffle: one map pass.
 
     Output: the input frame (id, vec) plus ``out_col`` (long).
     """
@@ -875,7 +929,6 @@ def assign_nearest_centroid(
     cents = sorted(centroids, key=lambda t: t[0])
     C = np.array([v for _, v in cents], dtype=np.int64)
     cids = np.array([c for c, _ in cents], dtype=np.int64)
-    cn = (C * C).sum(axis=1)
     schema = f"{id_col} long, {vec_col} array<bigint>, {out_col} long"
 
     # Arrow-native (guide §4.2): the vec column reshapes from its values
@@ -886,13 +939,11 @@ def assign_nearest_centroid(
             if b.num_rows == 0:
                 continue
             X = _vec_matrix(b.column(vec_col))
-            xn = (X * X).sum(axis=1)
-            d2 = xn[:, None] - 2 * (X @ C.T) + cn[None, :]
             yield pa.record_batch(
                 [
                     b.column(id_col),
                     b.column(vec_col),
-                    pa.array(cids[np.argmin(d2, axis=1)], type=pa.int64()),
+                    pa.array(cids[_gemm_argmin(X, C)], type=pa.int64()),
                 ],
                 names=[id_col, vec_col, out_col],
             )
@@ -904,72 +955,79 @@ def assign_nearest_centroid(
     )
 
 
-def assign_nearest_centroid_f64(
+def nearest_centroids(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    label_col: str,
     cent: DataFrame,
-    cluster_col: str = "cluster",
-    centroid_col: str = "centroid",
+    nprobe: int = 1,
+    keep: Sequence[str] = (),
 ) -> DataFrame:
-    """Map-side nearest-centroid assignment against DOUBLE-mean centroids
-    (the ``sim_ivf_knn`` convention: exact integer sums divided once) —
-    the f64 sibling of :func:`assign_nearest_centroid`, replacing the
-    interpreted per-(row, centroid) ``aggregate(zip_with(...))`` fold +
-    per-row top-1 window with one Arrow pass.
+    """The ``nprobe`` nearest DOUBLE-mean centroids of every row of
+    ``df``, in one map-side Arrow pass: ``(id_col, *keep, cluster,
+    probe)``, one row per (row, probed centroid), ``probe`` the 1-based
+    rank (int).  ``vec_col`` (exact integers) is passed through only when
+    listed in ``keep``.
 
-    Bit-identical to the SQL formulation: dist² accumulates per
-    DIMENSION in ascending order (an explicit d-loop of IEEE float64
-    adds — numpy's pairwise ``sum`` would round differently), and the
-    argmin ties to the LOWEST cluster id (centroid rows sorted by id, so
-    numpy's first-min rule IS ``ORDER BY dist2, cluster``).  The
-    centroid relation is k rows by contract — collected with the
-    bounded-collect guard and closure-shipped.
-
-    Input columns must be (long id, array<bigint> vec, int label);
-    output: ``(id_col long, label_col int, cluster_col int)``.
+    ``cent`` is a k-row relation whose FIRST column is the centroid id
+    and whose ``centroid`` column is the array<double> mean — e.g. the
+    output of :func:`mean_centroids`.  It is collected with the
+    bounded-collect guard and closure-shipped, so the probe needs no
+    crossJoin and no per-row window.  ``cluster`` keeps the id column's
+    type.  Bit-identical to the SQL formulation ``ROW_NUMBER() OVER
+    (PARTITION BY id ORDER BY dist2, <centroid id>) <= nprobe``: dist² is
+    :func:`_fold_dist2`'s ascending-dimension float64 fold, and a STABLE
+    argsort over id-sorted centroids breaks ties to the lower id.
     """
-    rows = bounded_collect(cent, "assign_nearest_centroid_f64 centroids", _MAX_CLOSURE_ROWS)
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    cid_col = cent.columns[0]
+    rows = bounded_collect(
+        cent.select(cid_col, "centroid"), "nearest_centroids centroids", _MAX_CLOSURE_ROWS
+    )
     if not rows:
-        raise ValueError("assign_nearest_centroid_f64 requires >= 1 centroid")
-    cs = sorted((int(r[cluster_col]), list(r[centroid_col])) for r in rows)
-    cent_vecs = [v for _, v in cs]
-    cids = [c for c, _ in cs]
-    widths = {len(v) for v in cent_vecs}
+        raise ValueError("nearest_centroids requires >= 1 centroid")
+    cs = sorted((r[0], list(r[1])) for r in rows)
+    widths = {len(v) for _, v in cs}
     if len(widths) != 1:
         raise ValueError(f"ragged centroid widths: {sorted(widths)}")
+    C = np.array([v for _, v in cs], dtype=np.float64)
+    cid_type = cent.schema[cid_col].dataType
+    ids = pa.array([c for c, _ in cs], type=to_arrow_type(cid_type))
+    p = min(int(nprobe), len(cs))
+    out_cols = list(dict.fromkeys([id_col, *keep]))
+    schema = StructType(
+        [df.schema[c] for c in out_cols]
+        + [StructField("cluster", cid_type), StructField("probe", IntegerType())]
+    )
 
     def assign(batches):
         import numpy as np
         import pyarrow as pa
 
-        C = np.array(cent_vecs, dtype=np.float64)
-        ids = np.array(cids, dtype=np.int32)
         for b in batches:
-            if b.num_rows == 0:
+            n = b.num_rows
+            if n == 0:
                 continue
             X = _vec_matrix(b.column(vec_col)).astype(np.float64, copy=False)
             if X.shape[1] != C.shape[1]:
                 raise ValueError(
                     f"vector width {X.shape[1]} != centroid width {C.shape[1]}"
                 )
-            acc = np.zeros((X.shape[0], C.shape[0]))
-            for d in range(C.shape[1]):
-                diff = X[:, d : d + 1] - C[None, :, d].reshape(1, -1)
-                acc = acc + diff * diff
-            yield pa.record_batch(
-                [
-                    b.column(id_col),
-                    b.column(label_col),
-                    pa.array(ids[np.argmin(acc, axis=1)], type=pa.int32()),
-                ],
-                names=[id_col, label_col, cluster_col],
-            )
+            near = np.argsort(_fold_dist2(X, C), axis=1, kind="stable")[:, :p]
+            cols = [b.column(c) for c in out_cols]
+            if p > 1:
+                rep = pa.array(np.repeat(np.arange(n), p))
+                cols = [c.take(rep) for c in cols]
+            cols.append(ids.take(pa.array(near.reshape(-1))))
+            cols.append(pa.array(np.tile(np.arange(1, p + 1, dtype=np.int32), n)))
+            yield pa.record_batch(cols, names=out_cols + ["cluster", "probe"])
 
-    return ensure_min_partitions(df.select(id_col, label_col, vec_col)).mapInArrow(
-        assign, f"{id_col} long, {label_col} int, {cluster_col} int"
-    )
+    src = df.select(*dict.fromkeys([*out_cols, vec_col]))
+    return ensure_min_partitions(src).mapInArrow(assign, schema)
 
 
 # Ceiling on the driver-side centroid relation (k·d int64 cells): 50M
@@ -1288,17 +1346,12 @@ def semdedup_hierarchical_quantizer(
             order = np.argsort(cids_raw, kind="stable")
             C = _vec_matrix(right.column("_sv"))[order]
             cids = cids_raw[order]
-            cn = (C * C).sum(axis=1)
             X = _vec_matrix(left.column(vec_col))
-            xn = (X * X).sum(axis=1)
-            d2 = xn[:, None] - 2 * (X @ C.T) + cn[None, :]
             return pa.table(
                 {
                     id_col: left.column(id_col),
                     vec_col: left.column(vec_col),
-                    "cluster": pa.array(
-                        cids[np.argmin(d2, axis=1)], type=pa.int64()
-                    ),
+                    "cluster": pa.array(cids[_gemm_argmin(X, C)], type=pa.int64()),
                     "super": pa.array(
                         np.full(left.num_rows, key[0].as_py(), dtype="int64")
                     ),
@@ -1537,22 +1590,20 @@ def _pq_subvectors(df: DataFrame, id_col: str, vec_col: str, m: int, sub: int) -
     )
 
 
-_PQ_DIST2 = (
-    "aggregate(zip_with(sv, cent, (x, c) -> (x - c) * (x - c)), "
-    "CAST(0 AS DOUBLE), (acc, e) -> acc + e)"
-)
-
-
 def _collect_codebook(codebook: DataFrame, m: int) -> list:
     """Driver-side pos-ordered centroid matrices, one (k_m × sub) float64
     array per subspace — m·k·sub cells (1024 at the bench parameters), the
-    same metadata scale as ``assign_nearest_centroid``'s centroid list.
-    Kernel argmin over a pos-ordered matrix IS the SQL ``_PQ_ARGMIN``
-    tie rule (first occurrence of the min = lowest pos)."""
+    same metadata scale as ``assign_nearest_centroid``'s centroid list,
+    read with the bounded-collect guard.  Kernel argmin over a
+    pos-ordered matrix IS the SQL ``ORDER BY d2, cid`` tie rule (first
+    occurrence of the min = lowest pos)."""
     import numpy as np
 
     by_m: dict[int, list] = {mm: [] for mm in range(m)}
-    for r in codebook.select("m", "pos", "cent").collect():
+    rows = bounded_collect(
+        codebook.select("m", "pos", "cent"), "PQ codebook", _MAX_CLOSURE_ROWS
+    )
+    for r in rows:
         by_m[r["m"]].append((r["pos"], list(r["cent"])))
     out = []
     for mm in range(m):
@@ -1571,19 +1622,13 @@ def _pq_assign_codes(
     keep_vec: bool = False,
     extra_cols: tuple = (),
 ) -> DataFrame:
-    """Arrow-native PQ assignment (guide §4.2): per batch, one numpy
-    distance pass per subspace against the driver-collected pos-ordered
-    codebook; emits ``codes`` (array<int> of per-subspace argmin
-    positions).  Replaces the ``_pq_dists_expr`` projection — m·k
-    interpreted ``aggregate(zip_with(...))`` lambdas per row — measured
-    0.72–1.14s → ~0.2s for the sf0.1 encode (4–5×), codes identical.
-
-    Float contract: d² folds (x−c)² over the sub dimensions in ascending
-    order with a float64 accumulator on both sides — numpy's last-axis
-    sum is sequential below its 128-element pairwise threshold, so the
-    doubles (and therefore every argmin and tie) are bit-identical to the
-    SQL fold.  ``_id`` (and ``_v``/extras when kept) pass through the
-    batch untouched.
+    """Arrow-native PQ assignment (guide §4.2): per batch, one
+    :func:`_fold_dist2` pass per subspace against the driver-collected
+    pos-ordered codebook; emits ``codes`` (array<int> of per-subspace
+    argmin positions).  The ascending-dimension float64 fold makes every
+    distance, argmin and tie bit-identical to the oracle's SQL fold.
+    ``_id`` (and ``_v``/extras when kept) pass through the batch
+    untouched.
     """
     import numpy as np
     import pyarrow as pa
@@ -1610,16 +1655,7 @@ def _pq_assign_codes(
             X = _vec_matrix(b.column("_v")).astype(np.float64)
             codes = np.empty((n, m), dtype=np.int32)
             for mm in range(m):
-                sv = X[:, mm * sub : (mm + 1) * sub]
-                # fold (x-c)^2 over dims STRICTLY in ascending order —
-                # numpy's .sum(axis=-1) uses an unrolled multi-
-                # accumulator order whose doubles differ from the SQL
-                # fold by 1 ulp at quantization boundaries (caught by
-                # the sim_pq_distortion oracle)
-                d2 = np.zeros((n, cbs[mm].shape[0]), dtype=np.float64)
-                for dd in range(sub):
-                    e = sv[:, dd : dd + 1] - cbs[mm][None, :, dd]
-                    d2 += e * e
+                d2 = _fold_dist2(X[:, mm * sub : (mm + 1) * sub], cbs[mm])
                 codes[:, mm] = np.argmin(d2, axis=1)
             la = pa.FixedSizeListArray.from_arrays(
                 pa.array(codes.reshape(-1)), m
@@ -1639,11 +1675,9 @@ def pq_min_dists(prepped: DataFrame, cbs: list, m: int, sub: int) -> DataFrame:
     """(m, d2) rows — each input vector's per-subspace min distance to
     its nearest centroid, the distortion readout of the PQ index.  Same
     Arrow kernel shape and float contract as :func:`_pq_assign_codes`
-    (d² folds (x−c)² in ascending dim order, float64 accumulator), with
-    ``min`` instead of ``argmin`` — min over the k centroid distances is
-    order-insensitive for doubles, so the emitted d2 equals the SQL
-    ``array_min`` over the retired ``_pq_dists_expr`` arrays bit for
-    bit."""
+    (:func:`_fold_dist2`), with ``min`` instead of ``argmin`` — min over
+    the k centroid distances is order-insensitive for doubles, so the
+    emitted d2 equals the oracle's ``MIN`` bit for bit."""
 
     def mind2(batches):
         import numpy as np
@@ -1656,12 +1690,7 @@ def pq_min_dists(prepped: DataFrame, cbs: list, m: int, sub: int) -> DataFrame:
             X = _vec_matrix(b.column("_v")).astype(np.float64)
             out = np.empty((n, m), dtype=np.float64)
             for mm in range(m):
-                sv = X[:, mm * sub : (mm + 1) * sub]
-                # same strict ascending-dim fold as _pq_assign_codes
-                d2 = np.zeros((n, cbs[mm].shape[0]), dtype=np.float64)
-                for dd in range(sub):
-                    e = sv[:, dd : dd + 1] - cbs[mm][None, :, dd]
-                    d2 += e * e
+                d2 = _fold_dist2(X[:, mm * sub : (mm + 1) * sub], cbs[mm])
                 out[:, mm] = d2.min(axis=1)
             yield pa.record_batch(
                 [
@@ -1687,13 +1716,13 @@ def pq_train_codebooks(
     clusters), so codes index positionally into a cid-ordered distance
     table.
 
-    Scale: training is one corpus pass — a broadcast of m·k tiny
-    centroids, assignment as a pure projection (no join, no shuffle of
-    the corpus), and one partial-aggregated (m, cid, d) rollup whose
-    group count is m·k·sub, independent of corpus size.  The analog of
-    the reference's fixed-at-INIT comparator/codec setup
-    (src/Merger/reducer.cc:56-133): the codebook is job-level metadata,
-    not data-path state.
+    Scale: training is one corpus pass — the m·k init centroids ride the
+    assignment kernel's closure (no join, no shuffle of the corpus), and
+    the update is :func:`mean_centroids` over (m, cid): a
+    partial-aggregated rollup whose group count is m·k·sub, independent
+    of corpus size.  The analog of the reference's fixed-at-INIT
+    comparator/codec setup (src/Merger/reducer.cc:56-133): the codebook
+    is job-level metadata, not data-path state.
     """
     sub = dim // m
     iv = portable.int_vec(vec_col, "spark")
@@ -1709,8 +1738,8 @@ def pq_train_codebooks(
     # Arrow assignment against the driver-collected init codebook (guide
     # §4.2; r13): the init centroids are exact fixed-point integers cast
     # to double, so every kernel distance is an exactly-representable
-    # integer — argmin/ties identical to the retired _pq_dists_expr
-    # projection (m·k interpreted lambdas per corpus row).  pos == cid
+    # integer — argmin/ties identical to the oracle's
+    # ``ORDER BY d2, cid``.  pos == cid
     # for the init codebook (first-k dense ids), so the argmin position
     # IS the cid the Lloyd rollup groups by.
     a1 = (
@@ -1727,17 +1756,8 @@ def pq_train_codebooks(
         )
         .select("_id", "m", F.col("cs.cid").alias("cid"), F.col("cs.sv").alias("sv"))
     )
-    c1 = (
-        a1.select("m", "cid", F.posexplode("sv").alias("d", "x"))
-        .groupBy("m", "cid", "d")
-        .agg(F.sum("x").alias("s"), F.count("*").alias("n"))
-        .groupBy("m", "cid")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("d", (F.col("s") / F.col("n")).alias("mu")))
-            ).alias("cm")
-        )
-        .select("m", "cid", F.expr("transform(cm, e -> e.mu)").alias("cent"))
+    c1 = mean_centroids(a1, ("m", "cid"), "sv").select(
+        "m", "cid", F.col("centroid").alias("cent")
     )
     # The codebook is m×k rows but its lineage is a full corpus training
     # pass; every consumer (encoding, query LUTs, composed IVF-PQ) would
@@ -1769,9 +1789,8 @@ def pq_encode(
     collected once (metadata scale, the same contract as
     ``assign_nearest_centroid``) and shipped in the task closure; the
     corpus is never joined, exploded, or shuffled, and the per-row
-    argmin runs as a numpy distance pass per Arrow batch instead of the
-    retired m·k interpreted lambdas (guide §4.2; 4–5× at sf0.1, codes
-    bit-identical — see ``_pq_assign_codes`` for the float contract).
+    argmin runs as a numpy distance pass per Arrow batch (guide §4.2; see
+    ``_pq_assign_codes`` for the float contract).
     """
     sub = dim // m
     iv = portable.int_vec(vec_col, "spark")
@@ -1792,22 +1811,43 @@ def pq_query_luts(
     dim: int = 64,
 ) -> DataFrame:
     """Per-query ADC lookup tables: (q_id, lut array<array<double>>) —
-    lut[m][pos] = exact subspace distance from the query's m-th
-    subvector to centroid pos.  |queries| × m × k doubles: broadcast
-    material, computed once per query batch."""
+    lut[m][pos] = exact subspace distance (:func:`_fold_dist2`) from the
+    query's m-th subvector to centroid pos.  One map-only Arrow pass
+    against the driver-collected codebook: |queries| × m × k doubles,
+    broadcast material, computed once per query batch."""
+    import numpy as np
+
     sub = dim // m
-    qsubs = _pq_subvectors(queries, id_col, vec_col, m, sub)
-    return (
-        qsubs.join(F.broadcast(codebook), "m")
-        .withColumn("d2", F.expr(_PQ_DIST2))
-        .groupBy("_id", "m")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "d2"))).alias("cd"))
-        .select("_id", "m", F.expr("transform(cd, e -> e.d2)").alias("dl"))
-        .groupBy("_id")
-        .agg(F.array_sort(F.collect_list(F.struct("m", "dl"))).alias("md"))
-        .select(
-            F.col("_id").alias("q_id"), F.expr("transform(md, e -> e.dl)").alias("lut")
-        )
+    cbs = _collect_codebook(codebook, m)
+    ks = np.array([cb.shape[0] for cb in cbs])
+    qv = queries.select(
+        F.col(id_col).alias("q_id"), F.expr(portable.int_vec(vec_col, "spark")).alias("_v")
+    )
+
+    def luts(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        for b in batches:
+            n = b.num_rows
+            if n == 0:
+                continue
+            X = _vec_matrix(b.column("_v")).astype(np.float64)
+            # (n, Σk) row-major: per query, subspace by subspace, pos order
+            D = np.hstack(
+                [_fold_dist2(X[:, mm * sub : (mm + 1) * sub], cbs[mm]) for mm in range(m)]
+            )
+            inner = pa.ListArray.from_arrays(
+                pa.array(np.concatenate([[0], np.cumsum(np.tile(ks, n))]), pa.int32()),
+                pa.array(D.reshape(-1)),
+            )
+            outer = pa.ListArray.from_arrays(
+                pa.array(np.arange(0, n * m + 1, m), pa.int32()), inner
+            )
+            yield pa.record_batch([b.column("q_id"), outer], names=["q_id", "lut"])
+
+    return qv.mapInArrow(
+        luts, f"q_id {dict(qv.dtypes)['q_id']}, lut array<array<double>>"
     )
 
 

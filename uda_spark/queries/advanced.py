@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from uda_spark.functions import portable
 from uda_spark.operators.dedup import _doc_grams
+from uda_spark.operators.similarity import mean_centroids, nearest_centroids
 from uda_spark.operators.sort import global_ntile
 from uda_spark.queries.common import t
 from uda_spark.registry import register
@@ -645,11 +646,14 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNROLLS both iterations in SQL CTEs and value-hashes the final
     assignment (member_checksum pins membership exactly).
 
-    Scale: each iteration is one broadcast of k×dim centroid doubles +
-    one map-side assignment + one (cluster, d) aggregation — no
-    all-pairs anything; iterations are driver-side loop steps exactly
-    like the reference's regression harness loops (PageRank/CC use the
-    same pattern with localCheckpoint for long chains).
+    Scale: each iteration collects the k×dim centroid doubles to the
+    driver, assigns every vector in one map-side Arrow pass
+    (operators/similarity.nearest_centroids — no crossJoin, no per-row
+    window) and rebuilds the means with one (cluster, d) aggregation
+    (mean_centroids) — no all-pairs anything; iterations are
+    driver-side loop steps exactly like the reference's regression
+    harness loops (PageRank/CC use the same pattern with localCheckpoint
+    for long chains).
     """
     emb = t(spark, sf_dir, "embeddings")
     iv = emb.select(
@@ -659,32 +663,10 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cluster"),
         F.expr("transform(v, x -> CAST(x AS DOUBLE))").alias("centroid"),
     )
-    dist2 = (
-        "aggregate(zip_with(v, centroid, (x, c) -> (x - c) * (x - c)), "
-        "CAST(0 AS DOUBLE), (acc, e) -> acc + e)"
-    )
     assigned = None
     for _ in range(KMEANS_ITERS):
-        w = Window.partitionBy("vec_id").orderBy("dist2", "cluster")
-        assigned = (
-            iv.crossJoin(F.broadcast(cent))
-            .withColumn("dist2", F.expr(dist2))
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select("vec_id", "v", "cluster")
-        )
-        cent = (
-            assigned.select("cluster", F.posexplode("v").alias("d", "x"))
-            .groupBy("cluster", "d")
-            .agg(F.sum("x").alias("s"), F.count("*").alias("n"))
-            .groupBy("cluster")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("d", (F.col("s") / F.col("n")).alias("m")))
-                ).alias("cm")
-            )
-            .select("cluster", F.expr("transform(cm, e -> e.m)").alias("centroid"))
-        )
+        assigned = nearest_centroids(iv, "vec_id", "v", cent, keep=("v",))
+        cent = mean_centroids(assigned, ("cluster",), "v")
     fp = portable.FIXED_POINT
     l2 = (
         f"round(sqrt(aggregate(transform(centroid, m -> (m / {fp}) * (m / {fp})), "
@@ -753,46 +735,30 @@ def sim_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     order in both engines), so DuckDB reproduces the identical probe
     assignment and ranking.
 
-    The centroids here are the per-label means (sim_label_centroid_dist
-    builds them); a production IVF trains k-means centroids the same way.
-    Shuffle profile: centroid build is one tiny agg; search is a broadcast
-    of queries against ~nprobe/k of the corpus.  Recall vs brute force is
-    additionally asserted in tests (these synthetic embeddings are
-    near-uniform, so recall ~ nprobe/k is the expectation — clustered
-    real data recalls far higher at the same nprobe).
+    The centroids here are the per-label means (mean_centroids, as in
+    sim_label_centroid_dist); a production IVF trains k-means centroids
+    the same way (kmeans_embeddings).  Shuffle profile: centroid build
+    is one tiny agg, the probe is map-only (nearest_centroids); search
+    is a broadcast of the probed queries against ~nprobe/k of the
+    corpus.  Recall vs brute force is additionally asserted in tests
+    (these synthetic embeddings are near-uniform, so recall ~ nprobe/k
+    is the expectation — clustered real data recalls far higher at the
+    same nprobe).
     """
     emb = t(spark, sf_dir, "embeddings")
     iv = emb.select(
         "vec_id", "label", F.expr(portable.int_vec("embedding", "spark")).alias("v")
     )
-    # per-label centroid (exact integer sums -> double means)
-    cent = (
-        iv.select("label", F.posexplode("v").alias("d", "x"))
-        .groupBy("label", "d")
-        .agg(F.sum("x").alias("s"), F.count("*").alias("n"))
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("d", (F.col("s") / F.col("n")).alias("m")))).alias("cm"))
-        .select("label", F.expr("transform(cm, e -> e.m)").alias("centroid"))
-    )
-    # drop the query's own label: the crossJoin below must have exactly one
-    # label column (the centroid's)
-    queries = iv.where(F.col("vec_id") < 10).select("vec_id", "v")
-    # assign each query to its nearest centroid by exact double distance
-    q_cent = (
-        queries.crossJoin(F.broadcast(cent))
-        .withColumn(
-            "dist2",
-            F.expr(
-                "aggregate(zip_with(v, centroid, (x, c) -> (x - c) * (x - c)), "
-                "CAST(0 AS DOUBLE), (acc, e) -> acc + e)"
-            ),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(Window.partitionBy("vec_id").orderBy("dist2", "label")),
-        )
-        .where(F.col("rn") <= IVF_NPROBE)
-        .select(F.col("vec_id").alias("q_id"), F.col("v").alias("q_vec"), F.col("label").alias("probe_label"))
+    # per-label centroids (exact integer sums -> double means), then each
+    # query's nprobe nearest, map-side against the collected centroids
+    cent = mean_centroids(iv, ("label",), "v")
+    q_cent = nearest_centroids(
+        iv.where(F.col("vec_id") < 10), "vec_id", "v", cent,
+        nprobe=IVF_NPROBE, keep=("v",),
+    ).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("v").alias("q_vec"),
+        F.col("cluster").alias("probe_label"),
     )
     # search only the probed partition (alias both sides: q_cent shares
     # lineage with iv, so attribute references would be ambiguous)

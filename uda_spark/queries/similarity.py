@@ -106,19 +106,11 @@ def sim_label_centroid_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = t(spark, sf_dir, "embeddings")
     iv = emb.select("label", F.expr(portable.int_vec("embedding", "spark")).alias("v"))
-    dims = (
-        iv.select("label", F.posexplode("v").alias("d", "x"))
-        .groupBy("label", "d")
-        .agg(F.sum("x").alias("s"), F.count("*").alias("n"))
-    )
-    means = dims.withColumn(
-        "m", F.col("s").cast("double") / F.col("n") / portable.FIXED_POINT
-    )
-    g = means.groupBy("label").agg(
-        F.max("n").cast("long").alias("n_vectors"),
-        F.expr("transform(array_sort(collect_list(struct(d, m))), e -> e.m)").alias(
-            "ms"
-        ),
+    # m / FIXED_POINT per element is the oracle's s / n / FIXED_POINT
+    g = SIM.mean_centroids(iv, ("label",), "v").select(
+        "label",
+        F.col("n").alias("n_vectors"),
+        F.expr(f"transform(centroid, m -> m / {portable.FIXED_POINT})").alias("ms"),
     )
     norm = (
         "round(sqrt(aggregate(ms, CAST(0 AS DOUBLE), (acc, x) -> acc + x * x)), 6)"
@@ -405,18 +397,7 @@ def ivfpq_build(spark: SparkSession, sf_dir: str):
     iv = emb.select(
         "vec_id", "label", F.expr(portable.int_vec("embedding", "spark")).alias("v")
     )
-    cent = tracked_persist(
-        iv.select("label", F.posexplode("v").alias("d", "x"))
-        .groupBy("label", "d")
-        .agg(F.sum("x").alias("s"), F.count("*").alias("n"))
-        .groupBy("label")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("d", (F.col("s") / F.col("n")).alias("mu")))
-            ).alias("cm")
-        )
-        .select("label", F.expr("transform(cm, e -> e.mu)").alias("centroid"))
-    )
+    cent = tracked_persist(SIM.mean_centroids(iv, ("label",), "v"))
     codebook = SIM.pq_train_codebooks(emb, "vec_id", "embedding", PQ_M, PQ_K, EMB_DIM)
     coded = tracked_persist(
         SIM.pq_encode(
@@ -441,23 +422,10 @@ def ivfpq_search(
         "vec_id", F.expr(portable.int_vec("embedding", "spark")).alias("v")
     )
     queries = emb.where(F.col("vec_id") < N_QUERIES)
-    qv = iv.where(F.col("vec_id") < N_QUERIES).select("vec_id", "v")
-    probes = (
-        qv.crossJoin(F.broadcast(cent))
-        .withColumn(
-            "dist2",
-            F.expr(
-                "aggregate(zip_with(v, centroid, (x, c) -> (x - c) * (x - c)), "
-                "CAST(0 AS DOUBLE), (acc, e) -> acc + e)"
-            ),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(Window.partitionBy("vec_id").orderBy("dist2", "label")),
-        )
-        .where(F.col("rn") <= IVFPQ_NPROBE)
-        .select(F.col("vec_id").alias("q_id"), F.col("label").alias("probe_label"))
-    )
+    probes = SIM.nearest_centroids(
+        iv.where(F.col("vec_id") < N_QUERIES), "vec_id", "v", cent,
+        nprobe=IVFPQ_NPROBE,
+    ).select(F.col("vec_id").alias("q_id"), F.col("cluster").alias("probe_label"))
     luts = SIM.pq_query_luts(queries, codebook, "vec_id", "embedding", PQ_M, EMB_DIM)
     probe_luts = probes.join(luts, on="q_id")
     adc = (
@@ -1652,45 +1620,22 @@ def sim_ivf_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer ppm with the count·k product carried in DECIMAL(38,0)/
     HUGEINT.
 
-    Scale shape: one corpus scan against a BROADCAST k-row centroid
-    table (map-only assignment, per-vector bounded top-1 window keyed by
-    vec_id), then an O(k) rollup — the corpus never shuffles by data
-    volume, only the k-row result does.
+    Scale shape: one corpus scan against the k-row centroid table
+    collected into the assignment kernel's closure (map-only, no window),
+    then an O(k) rollup — the corpus never shuffles by data volume, only
+    the k-row result does.
     """
     emb = t(spark, sf_dir, "embeddings")
     iv = emb.select(
         "vec_id", "label", F.expr(portable.int_vec("embedding", "spark")).alias("v")
     )
-    # exact per-dimension integer sums -> double means, the sim_ivf_knn shape
-    cent = (
-        iv.select("label", F.posexplode("v").alias("d", "x"))
-        .groupBy("label", "d")
-        .agg(F.sum("x").alias("s"), F.count("*").alias("n"))
-        .groupBy("label")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("d", (F.col("s") / F.col("n")).alias("m")))
-            ).alias("cm")
-        )
-        .select(
-            F.col("label").alias("cluster"),
-            F.expr("transform(cm, e -> e.m)").alias("centroid"),
-        )
-    )
-    # Full-corpus assignment via the Arrow f64 kernel (r14, guide §4.2):
-    # this is the one IVF query where EVERY corpus vector pays the
-    # per-(row, centroid) interpreted dist² fold + a per-row top-1 window
-    # (2.6M interpreted lambda evals at sf0.1; the probe-side folds in
-    # sim_ivf_knn / sim_recall_vs_nprobe touch only N_QUERIES rows and
-    # stay relational).  Bit-identical: ascending-dimension IEEE fold,
-    # argmin ties to the lowest cluster id — measured 1.2s → 0.7s on the
-    # stage, row-for-row equal at sf0.1.
-    assigned = SIM.assign_nearest_centroid_f64(
-        iv, "vec_id", "v", "label", cent
-    )
+    # exact per-dimension integer sums -> double means, the sim_ivf_knn
+    # shape; every corpus vector is assigned in one map-side Arrow pass
+    cent = SIM.mean_centroids(iv, ("label",), "v")
+    assigned = SIM.nearest_centroids(iv, "vec_id", "v", cent, keep=("label",))
     from uda_spark.cache import tracked_persist
 
-    assigned = tracked_persist(assigned)
+    assigned = tracked_persist(assigned.drop("probe"))
     tot = assigned.agg(
         F.count("*").cast("long").alias("n_total"),
         F.countDistinct("cluster").cast("long").alias("k"),
@@ -1811,9 +1756,10 @@ def sim_recall_vs_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers on both engines.
 
     Scale shape: ONE broadcast-queries corpus scan produces the scored
-    relation; the probe assignment is a (queries × k)-row bounded
-    relation; the truth top-{TOP_K} and each nprobe's ANN top-{TOP_K} are
-    one ``row_number()`` window each, which Catalyst plans as
+    relation; the probe assignment is a map-only (queries ×
+    max(NPROBES))-row relation (nearest_centroids); the truth
+    top-{TOP_K} and each nprobe's ANN top-{TOP_K} are one
+    ``row_number()`` window each, which Catalyst plans as
     ``WindowGroupLimit`` Partial per map task → exchange → Final (k ≤
     1000, the default threshold) — no single task ever sees a query's
     full score stream; the scanned-share arithmetic is O(k) metadata.
@@ -1828,39 +1774,16 @@ def sim_recall_vs_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "label", "v",
         F.expr(portable.int_dot("v", "v", "spark")).alias("nsq"),
     )
-    cent = (
-        iv.select("label", F.posexplode("v").alias("d", "x"))
-        .groupBy("label", "d")
-        .agg(F.sum("x").alias("s"), F.count("*").alias("cnt"))
-        .groupBy("label")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("d", (F.col("s") / F.col("cnt")).alias("m")))
-            ).alias("cm")
-        )
-        .select("label", F.expr("transform(cm, e -> e.m)").alias("centroid"))
-    )
+    cent = SIM.mean_centroids(iv, ("label",), "v")
     q = nsq.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
         F.col("v").alias("q_vec"),
         F.col("nsq").alias("q_nsq"),
     )
-    probes = (
-        q.select("q_id", "q_vec")
-        .crossJoin(F.broadcast(cent))
-        .withColumn(
-            "dist2",
-            F.expr(
-                "aggregate(zip_with(q_vec, centroid, (x, c) -> (x - c) * (x - c)), "
-                "CAST(0 AS DOUBLE), (acc, e) -> acc + e)"
-            ),
-        )
-        .withColumn(
-            "pr",
-            F.row_number().over(Window.partitionBy("q_id").orderBy("dist2", "label")),
-        )
-        .select("q_id", F.col("label").alias("plabel"), "pr")
-    )
+    # every setting's probes at once: the max(NPROBES) nearest per query
+    probes = SIM.nearest_centroids(
+        q, "q_id", "q_vec", cent, nprobe=max(NPROBES)
+    ).select("q_id", F.col("cluster").alias("plabel"), F.col("probe").alias("pr"))
     score = portable.cosine_from_ints(_NP_QDOT, "q_nsq", "c_nsq")
     scored = (
         nsq.select(
@@ -2044,10 +1967,10 @@ def sim_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     are order-independent exact integers in DECIMAL(38,0)/HUGEINT.
 
     Scale shape: the trained codebook (m·k tiny rows, one corpus
-    training pass shared via tracked_persist) broadcasts onto ONE
-    corpus scan; the min-distance is a codegen'd HOF projection (no
-    join, no explode of the corpus) and the readout is a bounded
-    groupBy(m) over m rows' worth of partial sums.
+    training pass shared via tracked_persist) is collected into the
+    closure of ONE map-side Arrow pass over the corpus (no join, no
+    explode of the corpus), and the readout is a bounded groupBy(m)
+    over m rows' worth of partial sums.
     """
     from uda_spark.operators.similarity import (
         _collect_codebook,
@@ -2061,10 +1984,9 @@ def sim_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("_id"),
         F.expr(portable.int_vec("embedding", "spark")).alias("_v"),
     )
-    # r13 (guide §4.2): per-(vector, subspace) min distances via the
-    # Arrow kernel against the driver-collected codebook — replaces the
-    # broadcast-row crossJoin + m*k interpreted-lambda _pq_dists_expr
-    # projection; d2 doubles bit-identical (see pq_min_dists).
+    # per-(vector, subspace) min distances via the Arrow kernel against
+    # the driver-collected codebook; d2 doubles bit-identical to the
+    # oracle's MIN (see pq_min_dists)
     mins = pq_min_dists(civ, _collect_codebook(cb, PQ_M), PQ_M, PQ_SUB)
     return (
         mins.select(

@@ -21,6 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from uda_spark.cache import scratch_dir
 from uda_spark.sources.tables import event_micros, table_path
 
 # Compressed input bytes per streaming STATE partition.  Stateful
@@ -163,6 +164,11 @@ def run_stream_to_memory(
     (availableNow trigger) into an in-memory table; returns the table as a
     DataFrame.  Used by tests to compare streaming vs batch output.
 
+    The checkpoint lives under :func:`uda_spark.cache.scratch_dir`, so
+    ``release_persisted`` deletes it whether the stream succeeded or
+    failed (Spark's default temp checkpoint is left behind in the JVM
+    temp dir when a stream fails).
+
     ``state_partitions`` (see :func:`scaled_state_partitions`) sizes the
     stateful exchanges for the query: the state-store partition count is
     fixed from ``spark.sql.shuffle.partitions`` at query start and AQE
@@ -179,6 +185,7 @@ def run_stream_to_memory(
             result.writeStream.format("memory")
             .queryName(name)
             .outputMode(mode)
+            .option("checkpointLocation", scratch_dir("uda_stream_ckpt"))
             .trigger(availableNow=True)
             .start()
         )
