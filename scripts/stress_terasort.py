@@ -12,8 +12,14 @@ heap-size-dependent:
     spill pressure exists too.
 
 Validates the full terasort contract afterwards: global sortedness
-across partition boundaries (teravalidate) AND count + key-checksum
-equality with the generated input.  Prints one JSON line.
+across partition boundaries (teravalidate) AND count + record-checksum
+equality with the generated input.  The checksum is crc32 over each
+whole record (key and value), and the sorted output is materialized
+before either check reads it, so every value byte goes through the
+sort's shuffle and a corrupted value fails the run.  An aggregate
+straight over the sort would not do: Spark drops a sort under an
+order-insensitive aggregate, and column pruning drops the value from a
+key-only check.  Prints one JSON line.
 
 Run standalone:  python scripts/stress_terasort.py --rows 50000000
 Via pytest:      python -m pytest tests/ -m slow
@@ -56,26 +62,29 @@ def main() -> None:
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
+    from uda_spark.operators.sort import snapshot
     from uda_spark.operators.workloads import (
         gen_terasort_records,
         terasort,
         teravalidate,
     )
 
+    def checksum(df):
+        row = df.agg(
+            F.sum(F.crc32(F.concat("key", "value"))).alias("c"), F.count("*").alias("n")
+        ).first()
+        return row["c"], row["n"]
+
     records = gen_terasort_records(spark, args.rows)
-    before = records.agg(
-        F.sum(F.crc32("key")).alias("c"), F.count("*").alias("n")
-    ).collect()[0]
+    before = checksum(records)
 
     t0 = time.perf_counter()
-    sorted_df = terasort(records)
+    # the sort's output, written once, as terasort writes its output files
+    sorted_df = snapshot(terasort(records))
     ok_sorted = teravalidate(sorted_df)
     sort_sec = round(time.perf_counter() - t0, 3)
 
-    after = sorted_df.agg(
-        F.sum(F.crc32("key")).alias("c"), F.count("*").alias("n")
-    ).collect()[0]
-    ok_checksum = (before["c"], before["n"]) == (after["c"], after["n"])
+    ok_checksum = before == checksum(sorted_df)
 
     result = {
         "metric": "terasort_stress",

@@ -45,3 +45,30 @@ def make_duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
 @pytest.fixture(scope="session")
 def duck_smoke():
     return make_duck(SF_SMOKE)
+
+
+def plan_nodes(df) -> list[str]:
+    """Node names of ``df``'s executed physical plan, read through the
+    adaptive wrapper, its query stages and persisted inputs (each
+    persisted input once, however many scans read it).  Unlike the
+    simple explain string, nothing after a nested adaptive plan is cut."""
+    names, seen = [], set()
+
+    def walk(node):
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if kind.endswith("QueryStageExec"):
+            return walk(node.plan())
+        names.append(node.nodeName())
+        if kind == "InMemoryTableScanExec":
+            cached = node.relation().cachedPlan()
+            if cached.toString() not in seen:
+                seen.add(cached.toString())
+                walk(cached)
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return names

@@ -187,3 +187,14 @@ def test_fold_lint_flags_a_second_loop():
         "        y = b * b\n"
     )
     assert _self_product_range_loops(ast.parse(src)) == ["f"]
+
+
+def test_kmeans_runs_its_last_assignment_once(spark):
+    """The last assignment feeds both the cluster stats and the last
+    means: persisted, so the plan holds one assign pass over the corpus."""
+    from tests.conftest import SF_SMOKE, plan_nodes
+    from uda_spark.queries.advanced import kmeans_embeddings
+
+    nodes = plan_nodes(kmeans_embeddings(spark, SF_SMOKE))
+    assert nodes.count("MapInArrow") == 1
+    assert "InMemoryTableScan" in nodes

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, plan_nodes
 from uda_spark import cache
 from uda_spark.operators import join as J
 from uda_spark.operators import kv as KV
@@ -66,6 +66,9 @@ class TestSort:
         shuffled = ev.repartition(4)
         sorted_ok = SRT.validate_sorted(shuffled, ["event_id"])
         assert not sorted_ok
+        # one partition: only the in-partition check can see the disorder
+        one_run = ev.orderBy(F.rand(7)).coalesce(1)
+        assert not SRT.validate_sorted(one_run, ["event_id"])
 
     # spark.range(100, numPartitions=4): partition p holds ids 25p..25p+24
     def _four_runs(self, spark, key_sql):
@@ -85,6 +88,38 @@ class TestSort:
     def test_validate_sorted_skips_empty_partitions(self, spark):
         runs = self._four_runs(spark, "id").where("k < 25 OR k >= 75")
         assert SRT.validate_sorted(runs, ["k"])
+
+    def test_validate_sorted_accepts_ties_and_nulls(self, spark):
+        # (a, b): a ties inside every partition and across the 0|1 and
+        # 2|3 boundaries; b is NULL on ids 0-29, so partitions 0 and 1
+        # meet at (0, NULL) | (0, NULL), and the full key (1, 7) spans 2|3
+        runs = spark.range(100, numPartitions=4).select(
+            (F.col("id") / 50).cast("int").alias("a"),
+            F.expr("CASE WHEN id < 30 THEN NULL ELSE CAST(id div 10 AS INT) END").alias("b"),
+        )
+        assert SRT.validate_sorted(runs, ["a", "b"])
+        assert SRT.validate_sorted(runs, ["b"])
+
+    def test_validate_sorted_checks_the_finished_run(self, spark):
+        keys = spark.range(20000, numPartitions=4).select(
+            ((F.col("id") * 7919) % 20000).alias("k")
+        )
+        assert not SRT.validate_sorted(keys, ["k"])
+        out = SRT.total_order_sort(keys, ["k"])
+        assert SRT.validate_sorted(out, ["k"])  # not run yet: checks a run of its own
+        out.toArrow()
+        sc, group = spark.sparkContext, "validate_finished_run"
+        sc.setJobGroup(group, group)
+        try:
+            assert SRT.validate_sorted(out, ["k"])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        jobs = [tracker.getJobInfo(j).stageIds for j in tracker.getJobIdsForGroup(group)]
+        # every job starts from the finished range shuffle (its map stage
+        # is listed, and skipped): none samples or scans the input again
+        assert 1 <= len(jobs) <= 2
+        assert all(len(stages) >= 2 for stages in jobs)
 
     def test_global_order_operators_accept_empty_input(self, spark):
         empty = spark.range(0).select(
@@ -106,7 +141,8 @@ class TestSort:
         src = inspect.getsource(SRT)
         assert src.count("repartitionByRange") == 1
         assert "repartitionByRange" in inspect.getsource(SRT.range_scan)
-        assert not re.search(r"\.(collect|first)\(", src)
+        for module in (SRT, WL):
+            assert not re.search(r"\.(collect|first)\(", inspect.getsource(module))
 
     def test_range_scan_returns_a_materialized_snapshot(self, spark):
         from uda_spark.plans.explain import plan_str
@@ -131,6 +167,30 @@ class TestSort:
         df = spark.range(1000).select(((F.col("id") * 7919) % 1000).alias("k"))
         deciles = SRT.global_ntile(df, ["k"], 10, num_partitions=4)
         assert "BroadcastNestedLoopJoin" not in plan_str(deciles, mode="simple")
+
+    def test_rank_and_ntile_plan_no_exchange_over_the_snapshot(self, spark):
+        df = spark.range(1000).select(((F.col("id") * 7919) % 1000).alias("k"))
+        for out in (
+            SRT.global_rank(df, ["k"], num_partitions=4),
+            SRT.global_ntile(df, ["k"], 10, num_partitions=4),
+        ):
+            nodes = plan_nodes(out)
+            assert "Scan ExistingRDD" in nodes
+            assert not [n for n in nodes if "Exchange" in n]
+
+    def test_global_rank_counts_across_an_empty_partition(self, spark, monkeypatch):
+        # a stand-in range scan that keeps the input's own layout: four
+        # sorted runs of 25 keys with partition 1 emptied
+        def layout_scan(df, order_keys, partial_aggs, num_partitions=None):
+            snap = df.withColumn("_pid", F.spark_partition_id()).transform(SRT.snapshot)
+            carries = snap.groupBy("_pid").agg(*partial_aggs).collect()
+            return snap, sorted(carries, key=lambda r: r["_pid"])
+
+        monkeypatch.setattr(SRT, "range_scan", layout_scan)
+        runs = self._four_runs(spark, "id").where("k < 25 OR k >= 50")
+        ranked = SRT.global_rank(runs, ["k"])
+        rows = sorted((r["k"], r["rnk"]) for r in ranked.collect())
+        assert [rnk for _, rnk in rows] == list(range(1, 76))
 
     def test_global_rank_is_dense_and_ordered(self, spark):
         ev = load_table(spark, SF_SMOKE, "events").select("event_id").limit(1000)
@@ -867,10 +927,10 @@ def test_terasort_spill_stress():
     """O9/O10 evidence under memory pressure (SCALING.md): 50M 100-byte
     records (~5 GB) against ~1.6 GB of execution memory plus a 1M-row
     force-spill threshold — ExternalSorter must spill and merge, and the
-    full terasort contract (global order + count + key checksum) must
-    still hold.  Runs in a subprocess because the memory confs must be
-    set before the JVM starts (the shared test session can't be
-    reconfigured)."""
+    full terasort contract (global order + count + a checksum over every
+    key and value byte) must still hold.  Runs in a subprocess because
+    the memory confs must be set before the JVM starts (the shared test
+    session can't be reconfigured)."""
     import json
     import os
     import subprocess

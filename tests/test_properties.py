@@ -49,6 +49,34 @@ def test_partition_and_merge_preserves_multiset(spark, rows):
 
 
 @SPARK_SETTINGS
+@given(
+    keys=st.lists(st.integers(-(1 << 40), 1 << 40), unique=True, max_size=200),
+    n_parts=st.integers(1, 8),
+    n_buckets=st.integers(1, 9),
+)
+def test_global_rank_and_ntile_match_one_window(spark, keys, n_parts, n_buckets):
+    """Ranks numbered by physical position equal ``row_number`` and
+    ``ntile`` over one global window, for any input and partition count
+    (fewer keys than partitions leaves requested range partitions
+    empty)."""
+    from pyspark.sql import Window
+
+    df = spark.createDataFrame([(k,) for k in keys], "k long").repartition(3)
+    w = Window.orderBy("k")
+    want = {
+        r["k"]: (r["rn"], r["nt"])
+        for r in df.select(
+            "k", F.row_number().over(w).alias("rn"), F.ntile(n_buckets).over(w).alias("nt")
+        ).collect()
+    }
+    rank = SRT.global_rank(df, ["k"], num_partitions=n_parts)
+    ntile = SRT.global_ntile(df, ["k"], n_buckets, num_partitions=n_parts)
+    got_rank = {r["k"]: r["rnk"] for r in rank.collect()}
+    got_ntile = {r["k"]: r["ntile"] for r in ntile.collect()}
+    assert {k: (got_rank[k], got_ntile[k]) for k in got_rank} == want
+
+
+@SPARK_SETTINGS
 @given(keys=st.lists(st.binary(min_size=1, max_size=16), min_size=1, max_size=300))
 def test_total_order_sort_validates_and_permutes(spark, keys):
     df = spark.createDataFrame([(k,) for k in keys], "key binary")

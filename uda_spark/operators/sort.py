@@ -13,12 +13,17 @@ The global-order operators (``global_rank``, ``global_ntile``,
 :func:`range_scan`: one range exchange, one snapshot tagged with physical
 partition ids, and one bounded collect of per-partition carries (the
 reference's per-MOF index metadata, O2).  Each operator adds the carries
-of all earlier partitions to a window that runs inside each partition.
+of all earlier partitions to a value computed inside each partition.
+Ranks need no window for that: a snapshot partition is already sorted,
+so a row's rank within it is its physical position.
 
 ``validate_sorted`` is the teravalidate equivalent
-(scripts/regression/mr-dstatExcel.sh:249-302): it checks physical order
-without a global shuffle in one action — per-partition monotonicity and
-min/max keys, collected as one bounded row per partition.
+(scripts/regression/mr-dstatExcel.sh:249-302).  It is map-only: per
+partition, a stable re-sort by the key must leave every row where it
+was, and the partition's min and max keys come back in one bounded
+collect.  When the caller has already run the sorted relation, the check
+reads that same run (its finished shuffle), as teravalidate reads the
+files terasort wrote — no second sample and no second sort.
 """
 
 from __future__ import annotations
@@ -35,6 +40,9 @@ from uda_spark.collect import bounded_collect
 # partition plus one per group; validate_sorted's one per input partition.
 _MAX_GROUPS = 1 << 16
 _MAX_PARTITIONS = 1 << 20
+
+# monotonically_increasing_id() is (partition index << 33) + row position
+_POSITION_MASK = (1 << 33) - 1
 
 # ---------------------------------------------------------------------------
 # Checkpoint mode for the two-pass range-partitioned operators (and the
@@ -196,11 +204,15 @@ def _pid_window(order_keys: Sequence[str], group_keys: Sequence[str] = ()):
 def _rank(
     df: DataFrame, keys: Sequence[str], num_partitions: int | None, alias: str
 ) -> tuple[DataFrame, int]:
+    """Rank by physical position: each snapshot partition is sorted by
+    ``keys`` and its index is its ``_pid``, so a row's 1-based position
+    in it, plus the rows of all earlier partitions, is its global rank.
+    No window, so no exchange above the snapshot."""
     snap, carries = range_scan(
         df, keys, [F.count(F.lit(1)).alias("_n")], num_partitions=num_partitions
     )
-    rn = F.row_number().over(Window.partitionBy("_pid").orderBy(*keys))
-    rank = (rn + _carry_map(carries, "_n", operator.add, 0)).cast("long")
+    position = F.monotonically_increasing_id().bitwiseAND(_POSITION_MASK) + 1
+    rank = (position + _carry_map(carries, "_n", operator.add, 0)).cast("long")
     return snap.withColumn(alias, rank).drop("_pid"), sum(r["_n"] for r in carries)
 
 
@@ -211,9 +223,10 @@ def global_rank(
     alias: str = "rnk",
 ) -> DataFrame:
     """1-based dense global rank by ``keys`` without a single-partition
-    window: :func:`range_scan` with per-partition counts, then
-    ``row_number`` within each partition plus the rows of all earlier
-    partitions.  Requires unique key tuples for a deterministic result.
+    window: :func:`range_scan` with per-partition counts, then each
+    row's position within its sorted partition plus the rows of all
+    earlier partitions.  Requires unique key tuples for a deterministic
+    result.
     """
     return _rank(df, keys, num_partitions, alias)[0]
 
@@ -323,39 +336,62 @@ def global_ntile(
     return ranked.withColumn(alias, F.expr(bucket)).drop("_gnt_rnk")
 
 
+def _finished_run(df: DataFrame) -> DataFrame:
+    """The rows of ``df``'s own finished adaptive run, or ``df`` itself
+    if it has not been run.  Re-executing a final adaptive plan reads its
+    materialized shuffles, so the rows come back in the same partitions
+    and order, with no new sample and no new exchange."""
+    qe = df._jdf.queryExecution()
+    plan = qe.executedPlan()
+    if plan.nodeName() != "AdaptiveSparkPlan" or not plan.isFinalPlan():
+        return df
+    spark = df.sparkSession
+    jdf = spark._jsparkSession.internalCreateDataFrame(qe.toRdd(), plan.schema(), False)
+    return DataFrame(jdf, spark)
+
+
+def _ascending(row) -> tuple:
+    """A Python sort key for a key tuple that orders as Spark's ascending
+    sort does: NULL first, NaN last."""
+    return tuple((v is not None, v != v, v if v == v else 0) for v in row)
+
+
 def validate_sorted(df: DataFrame, keys: Sequence[str]) -> bool:
     """Teravalidate equivalent: is ``df`` physically in global ``keys`` order?
 
-    One action, no global window: tag each row with its partition id and
-    ``monotonically_increasing_id`` (partition index + in-partition
-    position), then per partition count the rows whose key tuple drops
-    below the previous physical row's (a lag window keyed by partition
-    id) alongside the partition's min and max key.  The per-partition
-    summaries come back in one bounded collect; ``df`` is ordered iff no
-    partition has a drop and each non-empty partition's max is at most
-    the next non-empty partition's min.
+    Map-only: tag each row with its partition id and its physical
+    position ``_pos``, re-sort each partition by (key, ``_pos``) and
+    number the result ``_rk`` the same way.  The partition is
+    non-decreasing iff this stable re-sort is the identity, i.e. no row
+    has ``_pos != _rk``.  That count and the partition's min and max key
+    come back as one bounded row per partition; ``df`` is ordered iff no
+    row moved and each non-empty partition's max is at most the next
+    non-empty partition's min.
+
+    If the caller has already run ``df``, this checks that same run;
+    otherwise it runs a key-only projection of ``df``.
     """
-    tagged = df.select(
-        F.spark_partition_id().alias("_pid"),
-        F.monotonically_increasing_id().alias("_mid"),
-        F.struct(*keys).alias("_key"),
-    )
-    prev = F.lag("_key").over(Window.partitionBy("_pid").orderBy("_mid"))
-    summary = (
-        tagged.withColumn("_prev", prev)
-        .groupBy("_pid")
-        .agg(
-            F.count(F.when(F.col("_prev") > F.col("_key"), 1)).alias("drops"),
-            F.min("_key").alias("lo"),
-            F.max("_key").alias("hi"),
+    tagged = (
+        _finished_run(df)
+        .select(
+            F.spark_partition_id().alias("_pid"),
+            F.monotonically_increasing_id().alias("_pos"),
+            F.struct(*keys).alias("_key"),
         )
+        .sortWithinPartitions("_key", "_pos")
+        .withColumn("_rk", F.monotonically_increasing_id())
+    )
+    summary = tagged.groupBy("_pid").agg(
+        F.count(F.when(F.col("_pos") != F.col("_rk"), 1)).alias("moved"),
+        F.min("_key").alias("lo"),
+        F.max("_key").alias("hi"),
     )
     parts = sorted(
         bounded_collect(summary, "validate_sorted partition summaries", _MAX_PARTITIONS),
         key=lambda r: r["_pid"],
     )
-    return not any(r["drops"] for r in parts) and all(
-        a["hi"] <= b["lo"] for a, b in zip(parts, parts[1:])
+    return not any(r["moved"] for r in parts) and all(
+        _ascending(a["hi"]) <= _ascending(b["lo"]) for a, b in zip(parts, parts[1:])
     )
 
 

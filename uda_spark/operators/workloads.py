@@ -10,6 +10,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from uda_spark.collect import bounded_collect
 from uda_spark.functions import portable
 from uda_spark.operators.sort import total_order_sort, validate_sorted
 
@@ -80,9 +81,11 @@ def dfsio(spark: SparkSession, path: str, n_rows: int = 1000, payload_kb: int = 
     write_s = time.time() - t0
     t1 = time.time()
     back = spark.read.parquet(path)
-    stats = back.agg(
-        F.count("*").alias("n"), F.sum(F.crc32("payload")).alias("checksum")
-    ).collect()[0]
+    (stats,) = bounded_collect(
+        back.agg(F.count("*").alias("n"), F.sum(F.crc32("payload")).alias("checksum")),
+        "dfsio read-back checksum",
+        1,
+    )
     read_s = time.time() - t1
     return {
         "rows": stats["n"],

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from uda_spark import cache
 from uda_spark.functions import portable
 from uda_spark.operators.dedup import _doc_grams
 from uda_spark.operators.similarity import mean_centroids, nearest_centroids
@@ -664,8 +665,10 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("transform(v, x -> CAST(x AS DOUBLE))").alias("centroid"),
     )
     assigned = None
-    for _ in range(KMEANS_ITERS):
+    for it in range(KMEANS_ITERS):
         assigned = nearest_centroids(iv, "vec_id", "v", cent, keep=("v",))
+        if it == KMEANS_ITERS - 1:  # read by both the stats and the last means
+            assigned = cache.tracked_persist(assigned)
         cent = mean_centroids(assigned, ("cluster",), "v")
     fp = portable.FIXED_POINT
     l2 = (
